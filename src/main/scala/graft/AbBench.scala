@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.core.Buffers
 
 /** Same-JVM interleaved A/B of the DECIMAL(30,12)-fold vs the
   * quantized-BIGINT-fold aggregation forms — the measurement behind the
@@ -28,28 +30,51 @@ import org.apache.spark.sql.functions._
 object AbBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_AB_REPS", "6").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft-ab-warehouse-${System.nanoTime()}")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local("graft-ab")
 
     // ---- kmeans-shaped input: (cluster, dist2, embedding), cached ----
-    val kin = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val kinPlan = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select((col("vec_id") % 8).cast("int").as("cluster"),
         ((col("vec_id") % 1000).cast("double") / 7.0).as("dist2"),
         col("embedding"))
-      .persist()
-    kin.count()
 
+    // ---- lm-shaped input: (doc_id, term) per token, cached ----
+    // the log term is computed BEFORE the cache so both arms fold the
+    // identical double column — the arms differ only in the aggregate
+    val linPlan = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(col("doc_id"),
+        explode(filter(split(col("text"), "\\s+"), t => t =!= ""))
+          .as("w"))
+      .select(col("doc_id"),
+        log((abs(hash(col("w"))).cast("double") % 100d + 1d) / 1000d)
+          .as("term"))
+
+    // ---- classifier-shaped input: 5 bounded gradient terms per row,
+    // one global group (the logisticFit round shape), cached ----
+    val cinPlan = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(col("doc_id"),
+        (hash(col("doc_id")).cast("double") / 2147483647d).as("r"),
+        (abs(hash(col("text"))).cast("double") % 1000d / 1000d).as("x1"),
+        (abs(hash(col("lang"))).cast("double") % 1000d / 1000d).as("x2"),
+        (abs(hash(col("source"))).cast("double") % 1000d / 1000d).as("x3"),
+        ((col("n_chars") % 100).cast("double") / 100d).as("x4"))
+
+    // each input is cached (and filled) before any arm is timed, and
+    // released when the arms are done
+    Buffers.scoped(kinPlan) { kin =>
+      Buffers.scoped(linPlan) { lin =>
+        Buffers.scoped(cinPlan) { cin =>
+          Seq(kin, lin, cin).foreach(_.count())
+          measure(reps, kin, lin, cin)
+        }
+      }
+    }
+    spark.stop()
+  }
+
+  private def measure(reps: Int, kin: DataFrame, lin: DataFrame,
+      cin: DataFrame): Unit = {
     // the round-13 (decimal) Lloyd update fold, verbatim shape
     def kmeansDec(): DataFrame = kin
       .select(col("cluster"), col("dist2"),
@@ -76,19 +101,6 @@ object AbBench {
           .cast("long").as("m"),
         sum(round(col("dist2") * 1000000d).cast("long")).as("sd"))
 
-    // ---- lm-shaped input: (doc_id, term) per token, cached ----
-    // the log term is computed BEFORE the cache so both arms fold the
-    // identical double column — the arms differ only in the aggregate
-    val lin = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"),
-        explode(filter(split(col("text"), "\\s+"), t => t =!= ""))
-          .as("w"))
-      .select(col("doc_id"),
-        log((abs(hash(col("w"))).cast("double") % 100d + 1d) / 1000d)
-          .as("term"))
-      .persist()
-    lin.count()
-
     def lmDec(): DataFrame = lin.groupBy("doc_id")
       .agg(count(lit(1)).as("n"),
         sum(col("term").cast("decimal(30,12)")).as("s"))
@@ -96,18 +108,6 @@ object AbBench {
     def lmLng(): DataFrame = lin.groupBy("doc_id")
       .agg(count(lit(1)).as("n"),
         sum(round(col("term") * 1000000000d).cast("long")).as("s"))
-
-    // ---- classifier-shaped input: 5 bounded gradient terms per row,
-    // one global group (the logisticFit round shape), cached ----
-    val cin = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"),
-        (hash(col("doc_id")).cast("double") / 2147483647d).as("r"),
-        (abs(hash(col("text"))).cast("double") % 1000d / 1000d).as("x1"),
-        (abs(hash(col("lang"))).cast("double") % 1000d / 1000d).as("x2"),
-        (abs(hash(col("source"))).cast("double") % 1000d / 1000d).as("x3"),
-        ((col("n_chars") % 100).cast("double") / 100d).as("x4"))
-      .persist()
-    cin.count()
 
     def gdDec(): DataFrame = cin.agg(
       sum(col("r").cast("decimal(20,8)")).as("g0"),
@@ -147,6 +147,5 @@ object AbBench {
     val js = best.map { case (k, v) => s""""$k":${f"$v%.3f"}""" }
       .mkString(",")
     println(s"""{"metric":"ab_decimal_vs_long","reps":$reps,$js}""")
-    spark.stop()
   }
 }

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Buffers
 import graft.operators._
 import graft.sources.Tables
 
@@ -64,17 +65,7 @@ object Stress {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val n = sys.env.getOrElse("SPARK_GRAFT_SCALE", "20").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", // fresh: index tables built below
-        s"${System.getProperty("java.io.tmpdir")}/graft-stress-warehouse-${System.nanoTime()}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local("graft-stress")
     val t = Tables(spark, sfDir)
 
     // n mutated copies of every document: copy i appends a distinct tail
@@ -232,14 +223,12 @@ object Stress {
       val e = spark.read.parquet(s"$ccDir/hub")
       // one-off wedge accounting for BASELINE.md: the numbers that
       // explain the wall-time gap between the two triangle shapes
-      val und = e.select(least(col("src"), col("dst")).as("a"),
+      val und = Buffers.once(e.select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b")).distinct()
-        .localCheckpoint(true)
-      val deg = und.select(col("a").as("node"))
+        .filter(col("a") =!= col("b")).distinct())
+      val deg = Buffers.once(und.select(col("a").as("node"))
         .union(und.select(col("b").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("deg"))
-        .localCheckpoint(true)
+        .groupBy("node").agg(count(lit(1)).as("deg")))
       val naiveW = deg
         .agg(sum((col("deg") * (col("deg") - 1) / 2).cast("long")))
         .head().getLong(0)
@@ -263,10 +252,9 @@ object Stress {
     // degree orientation is measured against; deliberately not in the
     // library
     def naiveTriangles(edges: DataFrame): DataFrame = {
-      val und = edges.select(least(col("src"), col("dst")).as("a"),
+      val und = Buffers.once(edges.select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b")).distinct()
-        .localCheckpoint(true)
+        .filter(col("a") =!= col("b")).distinct())
       val nb = und.select(col("a").as("c"), col("b").as("n"))
         .union(und.select(col("b").as("c"), col("a").as("n")))
       val wedges = nb.as("x").join(nb.as("y"),
@@ -332,7 +320,7 @@ object Stress {
       val d = Pipeline.corpusDelta(mutateCrawl(docs, removeMod = 15,
         editMod = 16, addMod = 14), docs, "stress_corpus")
       (0 until 10).map(i =>
-        d.filter(col("doc_id") % 10 === i).localCheckpoint(true))
+        Buffers.once(d.filter(col("doc_id") % 10 === i)))
     }
     // synthetic crawl deltas over the 20× corpus: drop %removeMod, edit
     // %editMod, add %addMod under shifted ids — the q108 mutation
@@ -449,10 +437,9 @@ object Stress {
       locally {
         // pre-force OUTSIDE the clock (the filtered-run guard pattern)
         val liveFps = if (want("fpIndexVacuumBig"))
-          TextAnalysis.fingerprints(
+          Buffers.once(TextAnalysis.fingerprints(
               bigDocs.filter(col("doc_id") % 100 =!= 0)
-                .filter(col("doc_id") % 2 =!= 0)).select("fp")
-            .localCheckpoint(true)
+                .filter(col("doc_id") % 2 =!= 0)).select("fp"))
         else null
         timed("fpIndexVacuumBig")(
           Dedup.compactFingerprintIndex(spark, "stress_fp_big", liveFps))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Buffers
+
 /** Deterministic byte-pair-merge (BPE) tokenizer: train a merge list on
   * the corpus's word-frequency vocabulary, persist it like the other
   * index artifacts, and apply it as a pure column-expression chain — the
@@ -112,14 +114,15 @@ object Bpe {
     *     round aggregates adjacent-pair counts over the current
     *     vocabulary, picks the (count DESC, lhs, rhs) argmax — one row
     *     of driver state — and rewrites the representations with one
-    *     `replace`. Rounds materialize through [[graft.core.Rounds]] so
+    *     `replace`. Rounds materialize through
+    *     [[graft.core.Buffers.materializer]] so
     *     the LINEAGE is truly one round deep — a bare persist caches
     *     data but leaves every previous round nested inside the logical
     *     plan, and at 32 merges over the 20× stress corpus the
     *     per-action AQE plan-string construction alone OOM'd the driver
     *     (found round 7; the fixpoint operators had the same lesson).
     *     `checkpointDir` selects the executor-loss-reliable parquet
-    *     rounds, per the Rounds contract.
+    *     rounds, per the materializer contract.
     *
     * Both paths stop early if the vocabulary is fully merged.
     */
@@ -129,7 +132,7 @@ object Bpe {
       localMaxWords: Long = 1000000L,
       localMaxChars: Long = 32000000L): Seq[Merge] = {
     require(numMerges >= 1, s"trainMerges: numMerges must be >= 1, got $numMerges")
-    val materialize = graft.core.Rounds.materializer(checkpointDir)
+    val materialize = Buffers.materializer(checkpointDir)
     val out = scala.collection.mutable.ArrayBuffer[Merge]()
     var vocab = materialize(
       wordVocab(docs, textCol).withColumn("rep", padded(col("word"))),
@@ -165,12 +168,12 @@ object Bpe {
           // materialize (eager) BEFORE dropping the parent round's blocks
           val next = materialize(
             vocab.withColumn("rep", applyOne(col("rep"), m)), s"bpe_vocab_$k")
-          vocab.unpersist()
+          Buffers.release(vocab)
           vocab = next
           k += 1
         }
       }
-    } finally vocab.unpersist()
+    } finally Buffers.release(vocab)
     out.toSeq
   }
 

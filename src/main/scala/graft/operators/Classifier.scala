@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Buffers
+
 /** In-engine trainable quality classifier: logistic regression fit by
   * full-batch gradient descent, expressed entirely as per-round Spark
   * aggregates — the fastText-style "train a filter on labeled examples"
@@ -53,11 +55,9 @@ object Classifier {
   def logisticFit(data: DataFrame, featureCols: Seq[String],
       labelCol: String, iters: Int = 8, lr: Double = 1.0): Seq[Double] = {
     require(iters >= 1, s"iters must be >= 1: $iters")
-    val fit = data
+    Buffers.scoped(data
       .select((col(labelCol).cast("double").as("__y") +:
-        featureCols.map(c => col(c).cast("double").as(c))): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+        featureCols.map(c => col(c).cast("double").as(c))): _*)) { fit =>
       var w: Seq[Double] = Seq.fill(featureCols.size + 1)(0.0)
       (1 to iters).foreach { _ =>
         val r = sigmoid(margin(w, featureCols.map(col))) - col("__y")
@@ -80,7 +80,7 @@ object Classifier {
         }
       }
       w
-    } finally fit.unpersist()
+    }
   }
 
   /** Append the fitted model's 6-dp score (P(label=1)) to `df`. */

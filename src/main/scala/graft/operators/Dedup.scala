@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Buffers
+
 /** Deduplication operators for training-data pipelines, over the
   * `documents` table (doc_id, text, lang, source, n_chars).
   *
@@ -183,36 +185,6 @@ object Dedup {
         .as(Seq("band_idx", "band_hash")))
   }
 
-  /** Materialize an intermediate exactly once so its N consumers read a
-    * buffer instead of re-executing the pipeline above it — the shared
-    * waist of [[verifyCandidates]]' candidate list, the postings verify,
-    * the winnowing posting list, and [[dropOversizedBuckets]]' guarded
-    * relation. `localCheckpoint(eager)` by default: fastest, and in
-    * Spark 4 the checkpointed LogicalRDD carries REAL size stats so
-    * downstream semi-joins can broadcast. The checkpoint pins blocks in
-    * executor storage with lineage truncated (the documented
-    * [[graft.core.Rounds]] trade: lost unrecoverably on executor loss) —
-    * so when the session runs with dynamic allocation or node
-    * decommissioning enabled (executor loss is then EXPECTED, not a
-    * fault: ADVICE r16), fall back to persist(MEMORY_AND_DISK) + count,
-    * which materializes the same buffer but keeps lineage for recompute.
-    * Either form runs Spark jobs AT CALL TIME — callers construct
-    * DataFrames eagerly, a documented property of the candidate-verify
-    * paths.
-    */
-  private[graft] def materializedOnce(df: DataFrame): DataFrame = {
-    val conf = df.sparkSession.conf
-    def on(k: String) =
-      conf.getOption(k).exists(_.equalsIgnoreCase("true"))
-    if (on("spark.dynamicAllocation.enabled") ||
-        on("spark.decommission.enabled")) {
-      val p = df.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    } else df.localCheckpoint(eager = true)
-  }
-
   /** Drop every row of a bucket whose size exceeds `maxBucket` — the
     * degenerate-bucket guard of the LSH paths, as a map-side-combined
     * aggregate + broadcast anti-join on the (tiny) oversized-bucket
@@ -227,7 +199,7 @@ object Dedup {
     * form by construction.
     *
     * `materializeInput = true` runs the guarded relation ONCE through
-    * [[materializedOnce]] before both arms read it: the count aggregate
+    * [[graft.core.Buffers.once]] before both arms read it: the count aggregate
     * and the anti-join probe otherwise each instantiate `buckets`
     * (VERDICT r16 #3), which for the full-pipeline callers
     * ([[minhashCandidates]], [[incrementalNearDup]]'s corpus side,
@@ -254,7 +226,7 @@ object Dedup {
     */
   private[graft] def dropOversizedBuckets(buckets: DataFrame, maxBucket: Int,
       keyCols: Seq[String], materializeInput: Boolean = false): DataFrame = {
-    val in = if (materializeInput) materializedOnce(buckets) else buckets
+    val in = if (materializeInput) Buffers.once(buckets) else buckets
     val key = keyCols.map(col)
     val oversized = in.groupBy(key: _*)
       .agg(count(lit(1)).as("__bucket_n"))
@@ -539,10 +511,9 @@ object Dedup {
       fpTable: String, fpp: Double = 0.01): Unit = {
     require(fpp > 0 && fpp < 1, s"fpp must be in (0,1): $fpp")
     val spark = documents.sparkSession
-    val fps = spread(documents)
+    val distinctFps = spread(documents)
       .select(TextAnalysis.fingerprint(col("text")).as("fp")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Buffers.scoped(distinctFps) { fps =>
       val cnt = fps.count() // one extra pass; build-once cost
       val n = math.max(1L, cnt)
       val bits = bloomBits(n, fpp)
@@ -568,7 +539,7 @@ object Dedup {
         graft.sources.Sinks.saveTable(
           fps.agg(bloomAgg(n, bits).as("bloom")), table)
       }
-    } finally fps.unpersist()
+    }
   }
 
   /** Fold a new batch into a persisted bloom: Bloom filters of the SAME
@@ -1150,12 +1121,12 @@ object Dedup {
     // exchange — the bucket join itself, the 27M-pair distinct hash
     // aggregate at the 100× tier — re-executes per instantiation.
     // Materializing the pair-id rows once (eager, via
-    // [[materializedOnce]]; 16 bytes/pair, candidate-sized) runs that
+    // [[graft.core.Buffers.once]]; 16 bytes/pair, candidate-sized) runs that
     // pipeline exactly once, and the materialized buffer carries REAL
     // size stats (Spark 4 LogicalRDD / InMemoryRelation), so the
     // semi-joins can broadcast the candidate id set instead of
     // exchanging the corpus side.
-    val cand = materializedOnce(candidates)
+    val cand = Buffers.once(candidates)
     // pruneA = false for incremental callers whose a-side is the CRAWL
     // BATCH: it is already candidate-scale, the semi-join prunes nothing,
     // and skipping it drops one of the three instantiations of the
@@ -1249,7 +1220,7 @@ object Dedup {
     val docsSpread = spread(documents)
     // materialized once for the same three-consumer reason as
     // verifyCandidates' checkpoint (two posting semi-joins + main join)
-    val candidates = materializedOnce(
+    val candidates = Buffers.once(
       minhashCandidates(docsSpread, ngram, k, bands, maxBucket))
     // hs is deduped AFTER hashing so an intra-doc 64-bit collision
     // yields exactly the hashed-SET semantics of the array form
@@ -1567,8 +1538,8 @@ object Dedup {
   def dupComponents(pairs: DataFrame, maxIter: Int = 10,
       checkpointDir: Option[String] = None): DataFrame = {
     // round materializer — localCheckpoint vs executor-loss-safe parquet
-    // rounds; contract documented once at [[graft.core.Rounds]]
-    val materialize = graft.core.Rounds.materializer(checkpointDir)
+    // rounds; contract documented once at [[graft.core.Buffers.materializer]]
+    val materialize = Buffers.materializer(checkpointDir)
     // materialize the edge list ONCE: it is re-joined every round, and
     // upstream it is typically the whole minhash pipeline — without this
     // each round re-runs shingling + banding (measured 4x slower)
@@ -2093,7 +2064,7 @@ object Dedup {
     // fingerprint distinct's final aggregate + the df join) would
     // otherwise re-execute per side (the verifyCandidates checkpoint
     // rationale; 16-byte rows, fingerprint-relation sized)
-    val pruned = materializedOnce(fps.join(keep, Seq("fp")))
+    val pruned = Buffers.once(fps.join(keep, Seq("fp")))
     pruned.as("a").join(pruned.as("b"), Seq("fp"))
       .filter(col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))

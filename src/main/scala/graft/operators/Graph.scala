@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.core.Buffers
+
 /** Graph operators over plain edge-list DataFrames (src, dst) — no graph
   * library, no driver-side adjacency: every step is a keyed join or
   * aggregate, so the shapes are the ones that survive a billion-edge
@@ -40,7 +42,7 @@ object Graph {
     require(iters > 0, "pageRank: iters must be positive")
     require(damping > 0 && damping < 1,
       s"pageRank: damping must be in (0,1), got $damping")
-    val materialize = graft.core.Rounds.materializer(checkpointDir)
+    val materialize = Buffers.materializer(checkpointDir)
     val e = materialize(edges.select("src", "dst"), "pr_edges")
     val deg = e.groupBy("src").agg(count(lit(1)).as("od"))
     val withDeg = materialize(e.join(deg, "src"), "pr_edges_deg")
@@ -102,7 +104,7 @@ object Graph {
   def hits(edges: DataFrame, iters: Int = 5,
       checkpointDir: Option[String] = None): DataFrame = {
     require(iters > 0, "hits: iters must be positive")
-    val materialize = graft.core.Rounds.materializer(checkpointDir)
+    val materialize = Buffers.materializer(checkpointDir)
     val e = materialize(edges.select("src", "dst"), "hits_edges")
     // Materialize the RAW aggregate, then normalize over the buffer: the
     // earliest form (crossJoin(broadcast(total)) over the un-materialized
@@ -189,7 +191,7 @@ object Graph {
   def labelPropagation(edges: DataFrame, iters: Int = 5,
       checkpointDir: Option[String] = None): DataFrame = {
     require(iters > 0, "labelPropagation: iters must be positive")
-    val materialize = graft.core.Rounds.materializer(checkpointDir)
+    val materialize = Buffers.materializer(checkpointDir)
     val und = materialize(
       edges.select(col("src").cast("long").as("node"),
           col("dst").cast("long").as("nbr"))
@@ -241,77 +243,59 @@ object Graph {
     */
   def triangleCounts(edges: DataFrame): DataFrame = {
     // canonical undirected edge set: one row per unordered pair {a, b}.
-    // PERSISTED, as is the oriented set below: each is consumed by
+    // BUFFERED, as are deg and the oriented set: each is consumed by
     // several joins (deg, the two wedge sides, the closure), and the
     // upstream edge derivation is often a whole pipeline (the q165
     // near-dup graph) that would otherwise re-execute per consumer —
-    // measured 5× the operator's own cost before materialization
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try triangleCountsOn(und)
-    finally und.unpersist()
-  }
-
-  /** [[triangleCounts]] body over the persisted canonical edge set —
-    * split out so the caller's try/finally releases `und` even when a
-    * job here fails (an explicit persist is unreachable to the
-    * ContextCleaner; without the finally a failed run would pin the
-    * edge-sized buffer for the session's lifetime). `deg`/`oriented`
-    * get the same treatment inside.
-    */
-  private def triangleCountsOn(und: DataFrame): DataFrame = {
-    val deg = und.select(col("a").as("node"))
-      .union(und.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try triangleCountsWith(und, deg)
-    finally deg.unpersist()
-  }
-
-  private def triangleCountsWith(und: DataFrame,
-      deg: DataFrame): DataFrame = {
-    // orient by (degree, id) rank — lower endpoint points at higher
-    val withDeg = und
-      .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
-    val oriented = withDeg.select(
-      when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")),
-        struct(col("a").as("u"), col("b").as("v")))
-        .otherwise(struct(col("b").as("u"), col("a").as("v")))
-        .as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    // wedges u→v, u→w with v < w (one canonical wedge per pair), then
-    // close on the oriented edge between v and w (orientation between
-    // v and w is by THEIR ranks — check both directions via the
-    // canonical min/max key of the oriented edge set)
-    val wedges = oriented.as("e1")
-      .join(oriented.as("e2"), col("e1.u") === col("e2.u"))
-      .filter(col("e1.v") < col("e2.v"))
-      .select(col("e1.u").as("x"), col("e1.v").as("y"),
-        col("e2.v").as("z"))
-    val closing = oriented.select(
-      least(col("u"), col("v")).as("y"),
-      greatest(col("u"), col("v")).as("z"))
-    val tris = wedges.join(closing, Seq("y", "z"))
-    // ONE pass over the triangle relation (an explode, not a 3-branch
-    // union that would re-run the wedge + closure joins per branch)
-    val corners = tris
-      .select(explode(array(col("x"), col("y"), col("z"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("triangles"))
-    // materialize the node-count-sized result eagerly — returned lazily
-    // it would depend on the cached intermediates the finally releases
-    deg.select("node")
-      .join(corners, Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("triangles"), lit(0L)).as("triangles"))
-      .localCheckpoint(true)
-    } finally oriented.unpersist()
+    // measured 5× the operator's own cost before materialization.
+    Buffers.scoped(edges
+        .select(least(col("src"), col("dst")).as("a"),
+          greatest(col("src"), col("dst")).as("b"))
+        .filter(col("a") =!= col("b"))
+        .distinct()) { und =>
+      Buffers.scoped(und.select(col("a").as("node"))
+          .union(und.select(col("b").as("node")))
+          .groupBy("node").agg(count(lit(1)).as("deg"))) { deg =>
+        // orient by (degree, id) rank — lower endpoint points at higher
+        val withDeg = und
+          .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
+          .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
+        Buffers.scoped(withDeg.select(
+            when(col("da") < col("db") ||
+                (col("da") === col("db") && col("a") < col("b")),
+              struct(col("a").as("u"), col("b").as("v")))
+              .otherwise(struct(col("b").as("u"), col("a").as("v")))
+              .as("e"))
+            .select(col("e.u").as("u"), col("e.v").as("v"))) { oriented =>
+          // wedges u→v, u→w with v < w (one canonical wedge per pair),
+          // then close on the oriented edge between v and w
+          // (orientation between v and w is by THEIR ranks — check both
+          // directions via the canonical min/max key of the oriented
+          // edge set)
+          val wedges = oriented.as("e1")
+            .join(oriented.as("e2"), col("e1.u") === col("e2.u"))
+            .filter(col("e1.v") < col("e2.v"))
+            .select(col("e1.u").as("x"), col("e1.v").as("y"),
+              col("e2.v").as("z"))
+          val closing = oriented.select(
+            least(col("u"), col("v")).as("y"),
+            greatest(col("u"), col("v")).as("z"))
+          val tris = wedges.join(closing, Seq("y", "z"))
+          // ONE pass over the triangle relation (an explode, not a
+          // 3-branch union that would re-run the wedge + closure joins
+          // per branch)
+          val corners = tris
+            .select(explode(array(col("x"), col("y"), col("z")))
+              .as("node"))
+            .groupBy("node").agg(count(lit(1)).as("triangles"))
+          // materialize the node-count-sized result eagerly — returned
+          // lazily it would depend on the buffers released on return
+          Buffers.once(deg.select("node")
+            .join(corners, Seq("node"), "left")
+            .select(col("node"),
+              coalesce(col("triangles"), lit(0L)).as("triangles")))
+        }
+      }
+    }
   }
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.functions._
 
+import graft.core.Buffers
+
 /** End-to-end corpus-build composition — the proof that the engine's
   * stages are a PIPELINE, not a query zoo. One call chains the
   * individually-oracle-gated operators in their production order:
@@ -49,15 +51,13 @@ import org.apache.spark.sql.functions._
   * partition totals (#partitions), shard count (total tokens /
   * packTokens / re-bin).
   *
-  * Cache lifecycle: every persist here is released in a `finally`
-  * before the call returns — explicit persists are unreachable to the
-  * ContextCleaner, so without the release a failed OR completed build
-  * would pin three corpus-sized relations in executor storage for the
-  * session's lifetime (the [[Graph.triangleCounts]] pattern). The
-  * returned DataFrame is eagerly materialized (`localCheckpoint(true)`
-  * — it is chunk-row-sized, the bounded OUTPUT of the build, not a
-  * corpus-sized intermediate) so the caller's lazy plan does not
-  * depend on the released caches.
+  * Cache lifecycle: every persist here is a [[graft.core.Buffers.scoped]]
+  * loan, released before the call returns, failed or completed — else
+  * a build would pin three corpus-sized relations in executor storage
+  * for the session's lifetime. The returned DataFrame is eagerly
+  * materialized ([[graft.core.Buffers.once]] — it is chunk-row-sized,
+  * the bounded OUTPUT of the build, not a corpus-sized intermediate) so
+  * the caller's lazy plan does not depend on the released caches.
   *
   * == Incremental maintenance ==
   *
@@ -253,12 +253,84 @@ object Pipeline {
     // 1. curate: keep-list of doc_ids, then re-attach text (curate's
     //    q52-stable output schema drops the text column)
     val curated = Curation.curate(documents)
-    val curatedDocs = documents
-      .join(curated.select("doc_id"), Seq("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out =
-      try corpusBuildOnCurated(curatedDocs, params)
-      finally curatedDocs.unpersist()
+    val keptDocs = documents.join(curated.select("doc_id"), Seq("doc_id"))
+    val out = Buffers.scoped(keptDocs) { curatedDocs =>
+      // 2. canonical near-dup resolution OVER THE CURATED CORPUS (the
+      //    exact-dup tier already ran inside curate; this is the fuzzy
+      //    tier). keep=1 rows ARE the near-dup-deduplicated corpus.
+      //    hashShingles: the build consumes pair MEMBERSHIP only (the
+      //    jaccard column dies at the keep-set projection), so the
+      //    verify joins carry 8-byte shingle hashes instead of string
+      //    arrays — the r15 100× stress measured the string payload as
+      //    the build's dominant spill (252 GB mem-spill; the hashed
+      //    path halves spill and cuts shuffle 32% on identical pairs).
+      //    PipelineSpec pins the build's output byte-identical to the
+      //    string-verify chain.
+      val canon = Dedup.resolveCanonical(curatedDocs,
+          Dedup.dupComponents(Dedup.minhashDupPairs(curatedDocs,
+            threshold = params.neardupThreshold, ngram = NdNgram,
+            k = NdK, bands = NdBands, hashShingles = true)))
+        .filter(col("keep") === 1L)
+        .select("doc_id")
+      val canonDocs = curatedDocs.join(canon, Seq("doc_id"))
+
+      // state: the standing corpus universe (canonical curated docs) +
+      // the near-dup index a delta probes against it. Both writes are
+      // actions over the still-buffered curatedDocs.
+      params.statePrefix.foreach { p =>
+        // bucketed by doc_id like the snapshot (same rationale: every
+        // standing-set join in the delta keys on doc_id)
+        graft.sources.Sinks.saveTablePartitioned(
+          canonDocs.select("doc_id"), standingTable(p),
+          bucketBy = Some((32, Seq("doc_id"))), sortBy = Seq("doc_id"))
+        Dedup.buildNearDupIndex(canonDocs, neardupTable(p),
+          ngram = NdNgram, k = NdK, bands = NdBands)
+      }
+
+      // 3. temperature mix to the token budget (α = 0.5 √-share
+      //    flattening; content-addressed membership, so the selection
+      //    replays bit-for-bit in the oracle — and, frozen, replays
+      //    bit-for-bit against a LATER crawl's docs)
+      val thresholds = Relational.temperatureThresholds(canonDocs,
+        col("lang"), size(TextAnalysis.tokens(col("text"))),
+        params.mixBudgetTokens)
+      params.statePrefix.foreach { p =>
+        graft.sources.Sinks.saveTable(thresholds, mixTable(p))
+      }
+      Buffers.scoped(Relational.mixtureApplyThresholds(canonDocs,
+          col("doc_id"), col("lang"), thresholds)) { selDocs =>
+        // 4. tokenizer trained on the SELECTED corpus (what a real
+        //    pipeline trains on — the tokenizer depends on every
+        //    upstream stage), then encode. trainMerges is eager
+        //    driver-side argmax over vocabulary aggregates (bounded),
+        //    the q133 contract.
+        val merges = Bpe.trainMerges(selDocs, params.numMerges)
+        params.statePrefix.foreach { p =>
+          Bpe.saveMerges(selDocs.sparkSession, merges, mergesTable(p),
+            params.numMerges)
+          // the token-id TABLE freezes with the merges: a delta crawl
+          // must encode into the v1 id space (re-ranking ids over delta
+          // docs would silently renumber every token — see
+          // encodeDocsFrozen)
+          graft.sources.Sinks.saveTable(
+            Bpe.tokenIds(selDocs, merges), vocabTable(p))
+        }
+        val enc = Bpe.encodeDocs(selDocs, merges)
+
+        // 5. chunk to the context window. Buffered because THREE jobs
+        //    consume it (packSized's two-pass prefix sum collects
+        //    partition totals eagerly, shuffleShard's zipWithIndex runs
+        //    its own offsets job, and the final join materializes the
+        //    rows) — each would otherwise replay the whole BPE encode
+        //    join chain (packSized's scaladoc: persist the sized
+        //    projection when the upstream is expensive).
+        val chunked = withChunkKey(Bpe.chunkEncoded(enc, params.chunkTokens))
+        Buffers.scoped(chunked) { chunks =>
+          packShardEmit(chunks, params.packTokens, params.nShards,
+            binBase = 0L)
+        }
+      }
+    }
 
     // spec LAST — the state family's commit marker (max_bin is read
     // off the materialized output, which is chunk-row-sized)
@@ -271,99 +343,6 @@ object Pipeline {
         params.neardupThreshold, maxBin, generation = 1)
     }
     out
-  }
-
-  /** Stages 2–7 over the persisted curated corpus — split out so the
-    * caller's finally releases `curatedDocs` even when a downstream
-    * job fails (the [[Graph.triangleCounts]] convention); `selDocs`
-    * and `chunks` get the same treatment here.
-    */
-  private def corpusBuildOnCurated(
-      curatedDocs: DataFrame,
-      params: BuildParams): DataFrame = {
-
-    // 2. canonical near-dup resolution OVER THE CURATED CORPUS (the
-    //    exact-dup tier already ran inside curate; this is the fuzzy
-    //    tier). keep=1 rows ARE the near-dup-deduplicated corpus.
-    //    hashShingles: the build consumes pair MEMBERSHIP only (the
-    //    jaccard column dies at the keep-set projection), so the verify
-    //    joins carry 8-byte shingle hashes instead of string arrays —
-    //    the r15 100× stress measured the string payload as the build's
-    //    dominant spill (252 GB mem-spill; the hashed path halves spill
-    //    and cuts shuffle 32% on identical pairs). PipelineSpec pins the
-    //    build's output byte-identical to the string-verify chain.
-    val canon = Dedup.resolveCanonical(curatedDocs,
-        Dedup.dupComponents(Dedup.minhashDupPairs(curatedDocs,
-          threshold = params.neardupThreshold, ngram = NdNgram,
-          k = NdK, bands = NdBands, hashShingles = true)))
-      .filter(col("keep") === 1L)
-      .select("doc_id")
-    val canonDocs = curatedDocs.join(canon, Seq("doc_id"))
-
-    // state: the standing corpus universe (canonical curated docs) +
-    // the near-dup index a delta probes against it. Both writes are
-    // actions over the still-persisted curatedDocs.
-    params.statePrefix.foreach { p =>
-      // bucketed by doc_id like the snapshot (same rationale: every
-      // standing-set join in the delta keys on doc_id)
-      graft.sources.Sinks.saveTablePartitioned(
-        canonDocs.select("doc_id"), standingTable(p),
-        bucketBy = Some((32, Seq("doc_id"))), sortBy = Seq("doc_id"))
-      Dedup.buildNearDupIndex(canonDocs, neardupTable(p),
-        ngram = NdNgram, k = NdK, bands = NdBands)
-    }
-
-    // 3. temperature mix to the token budget (α = 0.5 √-share
-    //    flattening; content-addressed membership, so the selection
-    //    replays bit-for-bit in the oracle — and, frozen, replays
-    //    bit-for-bit against a LATER crawl's docs)
-    val thresholds = Relational.temperatureThresholds(canonDocs,
-      col("lang"), size(TextAnalysis.tokens(col("text"))),
-      params.mixBudgetTokens)
-    params.statePrefix.foreach { p =>
-      graft.sources.Sinks.saveTable(thresholds, mixTable(p))
-    }
-    val selDocs = Relational.mixtureApplyThresholds(canonDocs,
-        col("doc_id"), col("lang"), thresholds)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try corpusBuildOnSelection(selDocs, params)
-    finally selDocs.unpersist()
-  }
-
-  /** Stages 4–7 over the persisted mixed selection (see
-    * [[corpusBuildOnCurated]] for why the body is split). */
-  private def corpusBuildOnSelection(
-      selDocs: DataFrame,
-      params: BuildParams): DataFrame = {
-
-    // 4. tokenizer trained on the SELECTED corpus (what a real pipeline
-    //    trains on — the tokenizer depends on every upstream stage),
-    //    then encode. trainMerges is eager driver-side argmax over
-    //    vocabulary aggregates (bounded), the q133 contract.
-    val merges = Bpe.trainMerges(selDocs, params.numMerges)
-    params.statePrefix.foreach { p =>
-      Bpe.saveMerges(selDocs.sparkSession, merges, mergesTable(p),
-        params.numMerges)
-      // the token-id TABLE freezes with the merges: a delta crawl must
-      // encode into the v1 id space (re-ranking ids over delta docs
-      // would silently renumber every token — see encodeDocsFrozen)
-      graft.sources.Sinks.saveTable(
-        Bpe.tokenIds(selDocs, merges), vocabTable(p))
-    }
-    val enc = Bpe.encodeDocs(selDocs, merges)
-
-    // 5. chunk to the context window. Persisted because THREE jobs
-    //    consume it (packSized's two-pass prefix sum collects partition
-    //    totals eagerly, shuffleShard's zipWithIndex runs its own
-    //    offsets job, and the final join materializes the rows) — each
-    //    would otherwise replay the whole BPE encode join chain
-    //    (packSized's scaladoc: persist the sized projection when the
-    //    upstream is expensive).
-    val chunks = withChunkKey(Bpe.chunkEncoded(enc, params.chunkTokens))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try packShardEmit(chunks, params.packTokens, params.nShards,
-      binBase = 0L)
-    finally chunks.unpersist()
   }
 
   /** The (doc_id, chunk_idx) → ckey synthetic packing key shared by the
@@ -420,7 +399,7 @@ object Pipeline {
   private def packShardEmit(chunks: DataFrame, packTokens: Long,
       nShards: Int, binBase: Long,
       mat: (DataFrame, String) => DataFrame =
-        graft.core.Rounds.materializer(None)): DataFrame = {
+        Buffers.materializer(None)): DataFrame = {
     mat(packShardAssign(chunks, packTokens, nShards, binBase)
       .select(
         col("doc_id"),
@@ -497,7 +476,8 @@ object Pipeline {
     * transaction, run it like one).
     *
     * `checkpointDir` selects the materializer for the delta's stage
-    * waists ([[graft.core.Rounds]]'s contract): `None` (default) uses
+    * waists ([[graft.core.Buffers.materializer]]'s contract): `None`
+    * (default) uses
     * `localCheckpoint` — fastest, but the buffers live in executor
     * block-manager memory and die with an executor, failing the
     * transaction; `Some(dir)` writes each waist as parquet under `dir`
@@ -534,37 +514,31 @@ object Pipeline {
     // fp rows (doc_id + 16-byte digest, tiny next to the text) makes
     // the crawl scan run ONCE: the diff's materialization fills the
     // cache as a side effect and the commit reads it back. Uncommitted
-    // deltas read the projection once and skip the cache. Released in
-    // the same finally as the diff.
-    val newFps =
-      if (commit)
-        newFpsPlan.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else newFpsPlan
-    // the diff joins fingerprint relations (16-byte rows), never text;
-    // only the changed slice flows on
-    val diff = snap.select(col("doc_id"), col("fp").as("old_fp"))
-      .join(newFps, Seq("doc_id"), "full_outer")
-      .select(col("doc_id"),
-        when(col("old_fp").isNull, "added")
-          .when(col("new_fp").isNull, "removed")
-          .when(col("old_fp") =!= col("new_fp"), "changed")
-          .otherwise("unchanged").as("status"))
-      .filter(col("status") =!= "unchanged")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // deltas read the projection once and skip the cache.
+    def withFps(use: DataFrame => DataFrame): DataFrame =
+      if (commit) Buffers.scoped(newFpsPlan)(use) else use(newFpsPlan)
     // per-invocation nonce in the waist names: a LATER delta against
     // the same checkpointDir must not overwrite parquet a still-held
-    // earlier changeset reads (Rounds' distinct-names contract)
+    // earlier changeset reads (the materializer's distinct-names rule)
     val nonce = java.lang.Long.toHexString(System.nanoTime())
-    val matBase = graft.core.Rounds.materializer(checkpointDir)
+    val matBase = Buffers.materializer(checkpointDir)
     val mat = (df: DataFrame, name: String) =>
       matBase(df, s"${name}_$nonce")
-    try corpusDeltaOnDiff(newCrawl, newFps, corpusDocs, statePrefix,
-      commit, diff, chunkTokens, packTokens, nShards, threshold, binBase,
-      generation, mat)
-    finally {
-      diff.unpersist()
-      if (commit) newFps.unpersist()
+    withFps { newFps =>
+      // the diff joins fingerprint relations (16-byte rows), never
+      // text; only the changed slice flows on
+      Buffers.scoped(snap.select(col("doc_id"), col("fp").as("old_fp"))
+          .join(newFps, Seq("doc_id"), "full_outer")
+          .select(col("doc_id"),
+            when(col("old_fp").isNull, "added")
+              .when(col("new_fp").isNull, "removed")
+              .when(col("old_fp") =!= col("new_fp"), "changed")
+              .otherwise("unchanged").as("status"))
+          .filter(col("status") =!= "unchanged")) { diff =>
+        corpusDeltaOnDiff(newCrawl, newFps, corpusDocs, statePrefix,
+          commit, diff, chunkTokens, packTokens, nShards, threshold,
+          binBase, generation, mat)
+      }
     }
   }
 
@@ -687,7 +661,7 @@ object Pipeline {
     // the delta consumes pair MEMBERSHIP only (hit doc_ids / keep sets;
     // every jaccard column dies at a .select("doc_id")), so the verify
     // joins ship 8-byte shingle hashes — the same spill cut the build's
-    // resolution takes (see corpusBuildOnCurated), applied to the path
+    // resolution takes (see corpusBuildImpl), applied to the path
     // every crawl pays. DedupSpec pins probe hashed ≡ exact.
     val ndHits = Dedup.probeNearDupIndex(afterExact, corpusDocs,
         neardupTable(statePrefix), threshold, NdNgram, NdK, NdBands,
@@ -732,10 +706,8 @@ object Pipeline {
     val chunks = withChunkKey(
         Bpe.chunkEncoded(Bpe.encodeDocsFrozen(sel, merges,
           spark.table(vocabTable(statePrefix, generation))), chunkTokens))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val adds =
-      try packShardEmit(chunks, packTokens, nShards, binBase, mat)
-      finally chunks.unpersist()
+    val adds = Buffers.scoped(chunks)(
+      packShardEmit(_, packTokens, nShards, binBase, mat))
     (survivors, adds)
   }
 
@@ -822,7 +794,7 @@ object Pipeline {
     val binBase = spec.getAs[Long]("max_bin") + 1L
     val generation = specGeneration(spec)
     val nonce = java.lang.Long.toHexString(System.nanoTime())
-    val matBase = graft.core.Rounds.materializer(checkpointDir)
+    val matBase = Buffers.materializer(checkpointDir)
     val mat = (df: DataFrame, name: String) =>
       matBase(df, s"${name}_$nonce")
 
@@ -916,57 +888,53 @@ object Pipeline {
     val spec = graft.sources.IndexSpec.readRequired(spark, statePrefix)
     val gen = specGeneration(spec)
     val budget = spec.getAs[Long]("mix_budget_tokens")
-    val standingDocs = corpusDocs
+    val standing = corpusDocs
       .join(spark.table(standingTable(statePrefix)), Seq("doc_id"),
         "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // persisted: both tokStats and wordStats consume this, and the
-    // word explosion + (lang, word) shuffle over the standing text is
-    // the audit's most expensive stage — it must run once, not twice.
-    // Vocabulary-sized, released in the finally with standingDocs.
-    val langWords = standingDocs
-      .select(col("lang"),
-        explode(regexp_extract_all(lower(col("text")),
-          lit("[a-z]+"), lit(0))).as("word"))
-      .groupBy("lang", "word").agg(count(lit(1)).as("freq"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val merges = Bpe.loadMerges(spark, mergesTable(statePrefix, gen))
-      val ids = spark.table(vocabTable(statePrefix, gen))
-      val tokStats = langWords
-        .select(col("lang"), col("freq"),
-          explode(Bpe.tokens(col("word"), merges)).as("token"))
-        .join(ids.select("token", "id"), Seq("token"), "left")
-        .groupBy("lang")
-        .agg(sum("freq").as("n_tokens"),
-          sum(when(col("id").isNull, col("freq")).otherwise(0L))
-            .as("oov_tokens"))
-      val wordStats = langWords.groupBy("lang")
-        .agg(sum("freq").as("n_words"))
-      val docStats = standingDocs.groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"))
-      val fresh = Relational.temperatureThresholds(standingDocs,
-          col("lang"), size(TextAnalysis.tokens(col("text"))), budget)
-        .select(col("grp").as("lang"), col("thresh").as("fresh_thresh"))
-      val frozen = spark.table(mixTable(statePrefix, gen))
-        .select(col("grp").as("lang"), col("thresh").as("frozen_thresh"))
-      // eager: the result is group-cardinality-sized and must not
-      // depend on the standingDocs persist the finally releases
-      docStats
-        .join(wordStats, Seq("lang"), "left")
-        .join(tokStats, Seq("lang"), "left")
-        .join(frozen, Seq("lang"), "left")
-        .join(fresh, Seq("lang"), "left")
-        .select(col("lang"), col("n_docs"),
-          coalesce(col("n_words"), lit(0L)).as("n_words"),
-          coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-          coalesce(col("oov_tokens"), lit(0L)).as("oov_tokens"),
-          coalesce(col("frozen_thresh"), lit(-1L)).as("frozen_thresh"),
-          col("fresh_thresh"))
-        .localCheckpoint(true)
-    } finally {
-      langWords.unpersist()
-      standingDocs.unpersist()
+    Buffers.scoped(standing) { standingDocs =>
+      // buffered: both tokStats and wordStats consume this, and the
+      // word explosion + (lang, word) shuffle over the standing text is
+      // the audit's most expensive stage — it must run once, not twice.
+      // Vocabulary-sized, released with standingDocs.
+      val words = standingDocs
+        .select(col("lang"),
+          explode(regexp_extract_all(lower(col("text")),
+            lit("[a-z]+"), lit(0))).as("word"))
+        .groupBy("lang", "word").agg(count(lit(1)).as("freq"))
+      Buffers.scoped(words) { langWords =>
+        val merges = Bpe.loadMerges(spark, mergesTable(statePrefix, gen))
+        val ids = spark.table(vocabTable(statePrefix, gen))
+        val tokStats = langWords
+          .select(col("lang"), col("freq"),
+            explode(Bpe.tokens(col("word"), merges)).as("token"))
+          .join(ids.select("token", "id"), Seq("token"), "left")
+          .groupBy("lang")
+          .agg(sum("freq").as("n_tokens"),
+            sum(when(col("id").isNull, col("freq")).otherwise(0L))
+              .as("oov_tokens"))
+        val wordStats = langWords.groupBy("lang")
+          .agg(sum("freq").as("n_words"))
+        val docStats = standingDocs.groupBy("lang")
+          .agg(count(lit(1)).as("n_docs"))
+        val fresh = Relational.temperatureThresholds(standingDocs,
+            col("lang"), size(TextAnalysis.tokens(col("text"))), budget)
+          .select(col("grp").as("lang"), col("thresh").as("fresh_thresh"))
+        val frozen = spark.table(mixTable(statePrefix, gen))
+          .select(col("grp").as("lang"), col("thresh").as("frozen_thresh"))
+        // eager: the result is group-cardinality-sized and must not
+        // depend on the buffers released on return
+        Buffers.once(docStats
+          .join(wordStats, Seq("lang"), "left")
+          .join(tokStats, Seq("lang"), "left")
+          .join(frozen, Seq("lang"), "left")
+          .join(fresh, Seq("lang"), "left")
+          .select(col("lang"), col("n_docs"),
+            coalesce(col("n_words"), lit(0L)).as("n_words"),
+            coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
+            coalesce(col("oov_tokens"), lit(0L)).as("oov_tokens"),
+            coalesce(col("frozen_thresh"), lit(-1L)).as("frozen_thresh"),
+            col("fresh_thresh")))
+      }
     }
   }
 
@@ -1017,10 +985,8 @@ object Pipeline {
     val gen2 = specGeneration(spec) + 1
 
     val standing = spark.table(standingTable(statePrefix))
-    val standingDocs = corpusDocs
-      .join(standing, Seq("doc_id"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Buffers.scoped(corpusDocs
+      .join(standing, Seq("doc_id"), "left_semi")) { standingDocs =>
       val nCovered = standingDocs.count() // also fills the persist
       val nStanding = standing.count()
       require(nCovered == nStanding,
@@ -1035,22 +1001,18 @@ object Pipeline {
         col("lang"), size(TextAnalysis.tokens(col("text"))), budget)
       graft.sources.Sinks.saveTable(thresholds,
         mixTable(statePrefix, gen2))
-      val selDocs = Relational.mixtureApplyThresholds(standingDocs,
-          col("doc_id"), col("lang"), thresholds)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val out =
-        try {
-          val merges = Bpe.trainMerges(selDocs, numMerges)
-          Bpe.saveMerges(spark, merges, mergesTable(statePrefix, gen2),
-            numMerges)
-          graft.sources.Sinks.saveTable(Bpe.tokenIds(selDocs, merges),
-            vocabTable(statePrefix, gen2))
-          val chunks = withChunkKey(Bpe.chunkEncoded(
-              Bpe.encodeDocs(selDocs, merges), chunkTokens))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try packShardEmit(chunks, packTokens, nShards, binBase = 0L)
-          finally chunks.unpersist()
-        } finally selDocs.unpersist()
+      val selPlan = Relational.mixtureApplyThresholds(standingDocs,
+        col("doc_id"), col("lang"), thresholds)
+      val out = Buffers.scoped(selPlan) { selDocs =>
+        val merges = Bpe.trainMerges(selDocs, numMerges)
+        Bpe.saveMerges(spark, merges, mergesTable(statePrefix, gen2),
+          numMerges)
+        graft.sources.Sinks.saveTable(Bpe.tokenIds(selDocs, merges),
+          vocabTable(statePrefix, gen2))
+        Buffers.scoped(withChunkKey(Bpe.chunkEncoded(
+            Bpe.encodeDocs(selDocs, merges), chunkTokens)))(
+          packShardEmit(_, packTokens, nShards, binBase = 0L))
+      }
 
       // spec LAST — the generation flip (with the reset bin space) IS
       // the retrain's commit marker
@@ -1060,7 +1022,7 @@ object Pipeline {
         numMerges, nShards, threshold, maxBin, gen2,
         specMinGeneration(spec))
       out
-    } finally standingDocs.unpersist()
+    }
   }
 
   /** Does catalog spec entry `st` still reference merges table `mt`?
@@ -1465,11 +1427,9 @@ object Pipeline {
     // map, and the final join all re-read the folded relation, whose
     // own plan may be N anti-joins deep — exactly the cost compaction
     // exists to stop paying
-    val keyed = withChunkKey(chunks.select(
+    Buffers.scoped(withChunkKey(chunks.select(
         col("doc_id"), col("chunk_idx"), col("n_tokens"),
-        col("ids_digest")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+        col("ids_digest")))) { keyed =>
       val assigned = packShardAssign(keyed, packTokens, nShards,
           binBase = 0L)
         .select(col("doc_id"),
@@ -1479,7 +1439,7 @@ object Pipeline {
       graft.sources.Sinks.saveTablePartitioned(assigned, saveAs,
         bucketBy = Some((32, Seq("doc_id"))), sortBy = Seq("doc_id"))
       spark.table(saveAs)
-    } finally keyed.unpersist()
+    }
   }
 
   // ------------------------------------------------------------------

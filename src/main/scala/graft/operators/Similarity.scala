@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Buffers
 import graft.sources.Sinks
 
 /** Similarity search over the `embeddings` table
@@ -1103,10 +1104,9 @@ object Similarity {
     // Spark answer is to cache the projected training set for the
     // fit's duration. MEMORY_AND_DISK: a corpus bigger than cluster
     // memory spills to local disk instead of recomputing the upstream
-    // scan per pass; unpersisted before returning.
-    val fitInput = embeddings.select(col("vec_id"), col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // scan per pass; released before returning.
+    val projected = embeddings.select(col("vec_id"), col("embedding"))
+    Buffers.scoped(projected) { fitInput =>
       val seed = seeding match {
         case "lowest"   => lowestIdSeeds(fitInput, k)
         case "farthest" => farthestPointSeeds(fitInput, k)
@@ -1154,7 +1154,7 @@ object Similarity {
         cents = next
       }
       (cents, objectives.result())
-    } finally fitInput.unpersist(blocking = false)
+    }
   }
 
   /** [[kMeansFit]] + final assignment: (vec_id, cluster, dist2). The

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Buffers
+
 /** Approximate-query sketches (SURVEY §2.4 A11–A13) with their exact twins
   * (A10/A14), matching the reference's parameters
   * (`304-streaming/spark/README.md:168-243`): HLL++ rsd ∈ {0.05, 0.1,
@@ -344,10 +346,8 @@ object Sketches {
     // feed both an est() and the union, and without the checkpoint
     // Spark recomputes the full corpus scan for every consumer —
     // breaking the documented "one pass per corpus" triage shape
-    val regsA = hllRegistersPortable(a, valueCol, groupCol, m)
-      .localCheckpoint(true)
-    val regsB = hllRegistersPortable(b, valueCol, groupCol, m)
-      .localCheckpoint(true)
+    val regsA = Buffers.once(hllRegistersPortable(a, valueCol, groupCol, m))
+    val regsB = Buffers.once(hllRegistersPortable(b, valueCol, groupCol, m))
     val regsU = regsA.unionByName(regsB)
       .groupBy("key", "j").agg(max(col("r")).as("r"))
     def est(regs: DataFrame, name: String) =
@@ -524,13 +524,12 @@ object Sketches {
     val spec = graft.sources.IndexSpec.readRequired(spark, table)
     val (sigBits, valueCol, keyCol) =
       (spec.getInt(0), spec.getString(1), spec.getString(2))
-    val merged = spark.table(table)
+    // materialize BEFORE the overwrite: the plan reads the very table
+    // it replaces (≤ ~1k rows per key group — tiny)
+    val merged = Buffers.once(spark.table(table)
       .unionByName(histogramBuckets(batch, valueCol, keyCol, sigBits))
       .groupBy("key", "bl", "sh", "idx")
-      .agg(sum(col("cnt")).as("cnt"))
-      // materialize BEFORE the overwrite: the plan reads the very table
-      // it replaces (≤ ~1k rows per key group — tiny)
-      .localCheckpoint(true)
+      .agg(sum(col("cnt")).as("cnt")))
     graft.sources.Sinks.saveTable(merged, table)
   }
 
@@ -650,10 +649,9 @@ object Sketches {
       .agg(hll_sketch_agg(col(valueCol), lit(lgK)).as("hll"))
     // materialize the merge BEFORE the overwrite: the plan reads the
     // very table it replaces (key-group-sized state — tiny)
-    val merged = stored.unionByName(batchSk)
+    val merged = Buffers.once(stored.unionByName(batchSk)
       .groupBy(keys.map(col): _*)
-      .agg(hll_union_agg(col("hll"), lit(true)).as("hll"))
-      .localCheckpoint(true)
+      .agg(hll_union_agg(col("hll"), lit(true)).as("hll")))
     graft.sources.Sinks.saveTable(merged, table)
   }
 

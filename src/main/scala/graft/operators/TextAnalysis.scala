@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Buffers
+
 /** Text-analysis operators for large-scale training-data pipelines:
   * quality scoring, token counting, language stats, language-ID heuristic,
   * and document fingerprinting.
@@ -340,17 +342,15 @@ object TextAnalysis {
     // spec FIRST (the IndexSpec ordering contract), then pref, then
     // the main table (probes read the main table's spec)
     graft.sources.IndexSpec.write(Seq(v).toDF("v"), table)
-    val cnt = bigramsOf(refDocs).groupBy("w1", "w2")
-      .agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Buffers.scoped(bigramsOf(refDocs).groupBy("w1", "w2")
+      .agg(count(lit(1)).as("c"))) { cnt =>
       graft.sources.Sinks.saveTablePartitioned(
         cnt.groupBy("w1").agg(sum("c").as("p")), s"${table}__pref",
         bucketBy = Some((buckets, Seq("w1"))), sortBy = Seq("w1"))
       graft.sources.Sinks.saveTablePartitioned(cnt, table,
         bucketBy = Some((buckets, Seq("w1", "w2"))),
         sortBy = Seq("w1", "w2"))
-    } finally cnt.unpersist()
+    }
   }
 
   /** Score candidates against a persisted reference LM — result-

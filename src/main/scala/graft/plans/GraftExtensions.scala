@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -70,11 +70,4 @@ object GraftExtensions {
         es => SignLshSignatures(es(0), litInt(es(1), "sign_lsh_signatures"),
           litInt(es(2), "sign_lsh_signatures")))))
 
-  /** Register into an ALREADY-RUNNING session's registry (tests, shells —
-    * extensions only apply at session build time).
-    */
-  def registerAll(spark: SparkSession): Unit =
-    functions.foreach { case (name, _, builder) =>
-      org.apache.spark.sql.graft.bridge.registerFunction(spark, name, builder)
-    }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
+import graft.core.Buffers
 import graft.operators.TextAnalysis
 
 /** Structured Streaming surface (SURVEY §2.8 T1–T10, S12–S13, K6).
@@ -435,6 +436,19 @@ object Streams {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
+  /** `table` as the catalog holds it NOW, for the ingest screens. A
+    * foreachBatch body runs in the stream's own session, whose relation
+    * cache keeps the table's file listing from the batch that first
+    * read it; an index fold (or bloom rewrite) between batches would
+    * then stay invisible to every later batch, and the fingerprints the
+    * fold moved from the store into the index would stop screening
+    * (duplicates land). One re-listing per batch per probed table.
+    */
+  private def currentTable(spark: SparkSession, table: String): DataFrame = {
+    spark.catalog.refreshTable(table)
+    spark.table(table)
+  }
+
   def dedupIngestBatch(batch: DataFrame, batchId: Long, outDir: String,
       fpDir: String, indexTable: Option[String] = None,
       bloomTable: Option[String] = None): Unit = {
@@ -468,7 +482,7 @@ object Streams {
         require(spark.catalog.tableExists(t),
           s"dedupIngestBatch: index table $t does not exist — bootstrap " +
             "it with Dedup.ensureFingerprintIndex at pipeline setup")
-        val idx = spark.table(t).select(col("fp").as(fpCol))
+        val idx = currentTable(spark, t).select(col("fp").as(fpCol))
         bloomTable match {
           case None => self.join(idx, Seq(fpCol), "left_anti")
           case Some(bt) =>
@@ -488,7 +502,8 @@ object Streams {
               s"dedupIngestBatch: index $t is not paired to bloom $bt " +
                 "(missing or superseded pairing marker) — the fold " +
                 "would not maintain this bloom, breaking bloom ⊇ index")
-            val bytes = spark.table(bt).head().getAs[Array[Byte]]("bloom")
+            val bytes =
+              currentTable(spark, bt).head().getAs[Array[Byte]]("bloom")
             if (bytes == null) // legacy NULL cell: nothing recorded —
               self.join(idx, Seq(fpCol), "left_anti") // full exact screen
             else {
@@ -572,8 +587,8 @@ object Streams {
       require(spark.catalog.tableExists(t),
         s"nearDupIngestBatch: index table $t does not exist — bootstrap " +
           "it with Dedup.ensureSimhashIndex at pipeline setup")
-      store.union(spark.table(t).select(col("chunk_idx"), col("chunk"),
-        col("simhash").as("__sig_store")))
+      store.union(currentTable(spark, t).select(col("chunk_idx"),
+        col("chunk"), col("simhash").as("__sig_store")))
     }.getOrElse(store)
     val hit = chunks.join(screen, Seq("chunk_idx", "chunk"))
       .filter(bit_count(col("simhash").bitwiseXOR(col("__sig_store")))
@@ -656,7 +671,7 @@ object Streams {
         s"minhashIngestBatch: index table $t does not exist — bootstrap " +
           "it with Dedup.ensureNearDupIndex at pipeline setup")
       storeBands.union(
-        spark.table(t).select("doc_id", "band_idx", "band_hash"))
+        currentTable(spark, t).select("doc_id", "band_idx", "band_hash"))
     }.getOrElse(storeBands)
     // probeNearDupIndex's candidate shape: probe only the batch's bucket
     // set, bound the PRIOR-side bucket size (the probed slice holds every
@@ -960,7 +975,7 @@ object Streams {
         s"semanticIngestBatch: index table $t does not exist — bootstrap " +
           "it with Similarity.ensureIvfIndex at pipeline setup")
       store.unionByName(
-        spark.table(t).select("vec_id", "embedding", "cell"))
+        currentTable(spark, t).select("vec_id", "embedding", "cell"))
     }.getOrElse(store)
     val hits = graft.operators.Similarity.semanticHits(
       self, prior, cents, threshold, nprobe)
@@ -1048,7 +1063,7 @@ object Streams {
       // different (k, w) holds hashes this batch's fingerprints can
       // never join — the screen would silently vanish
       graft.operators.Dedup.requireWinnowSpec(spark, t, k, w)
-      storeFps.unionByName(spark.table(t)
+      storeFps.unionByName(currentTable(spark, t)
         .select(col("corpus_id").as("doc_id"), col("fp")))
     }.getOrElse(storeFps)
     // probeWinnowIndex's screen verbatim: dedupe (replayed appends may
@@ -1529,9 +1544,8 @@ object Streams {
     }
     // materialize BEFORE the partition write: the plan reads the very
     // directory the fold adds a partition to (tiny — ≤ ~1k rows/key)
-    val folded = spark.read.parquet(storeDir).filter(live)
-      .groupBy("key", "bl", "sh", "idx").agg(sum("cnt").as("cnt"))
-      .localCheckpoint(true)
+    val folded = Buffers.once(spark.read.parquet(storeDir).filter(live)
+      .groupBy("key", "bl", "sh", "idx").agg(sum("cnt").as("cnt")))
     writeBatchIdempotent(folded, -e1, storeDir)
     commitFoldEpoch(fs, dir, e1)
     foldable

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.core.Buffers
 import graft.operators.Classifier
 
 class ClassifierSpec extends SparkSpec {
@@ -73,8 +74,7 @@ class ClassifierSpec extends SparkSpec {
     // a weights table that lost rows must throw, never score skewed
     // (parquet tables don't DELETE — overwrite with a truncated copy)
     graft.sources.Sinks.saveTable(
-      spark.table("clf_w").filter(col("idx") =!= 2)
-        .localCheckpoint(true),
+      Buffers.once(spark.table("clf_w").filter(col("idx") =!= 2)),
       "clf_w")
     an[IllegalArgumentException] should be thrownBy
       Classifier.scoreWithTable(tables.documents, "clf_w")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.core.CrashHook
+import graft.core.{Buffers, CrashHook}
 import graft.operators.{Dedup, Pipeline, Similarity}
 
 /** Exhaustive crash-point sweep over the corpus maintenance loop
@@ -39,19 +39,18 @@ class CrashSweepSpec extends SparkSpec {
   private final class SimulatedCrash(site: String)
     extends RuntimeException(s"simulated crash after $site")
 
-  private lazy val v1 = tables.documents.filter(col("doc_id") < 150)
-    .localCheckpoint(true)
+  private lazy val v1 =
+    Buffers.once(tables.documents.filter(col("doc_id") < 150))
   // shrink + edit + add, no dup structure (fresh docs get unique tails)
-  private lazy val v2 = v1.filter(col("doc_id") % 7 =!= 0)
+  private lazy val v2 = Buffers.once(v1.filter(col("doc_id") % 7 =!= 0)
     .withColumn("text", when(col("doc_id") % 5 === 0,
       concat(col("text"), lit(" sweepedit"))).otherwise(col("text")))
     .unionByName(v1.filter(col("doc_id") % 11 === 0).select(
       (col("doc_id") + 500000L).as("doc_id"),
       concat(col("text"), lit(" sweepfresh"), col("doc_id")).as("text"),
-      col("lang"), col("source"), col("n_chars")))
-    .localCheckpoint(true)
-  private lazy val embs = tables.embeddings.filter(col("vec_id") < 150)
-    .select("vec_id", "embedding", "label").localCheckpoint(true)
+      col("lang"), col("source"), col("n_chars"))))
+  private lazy val embs = Buffers.once(tables.embeddings
+    .filter(col("vec_id") < 150).select("vec_id", "embedding", "label"))
 
   /** Run `body` with the hook collecting site labels (no crash). */
   private def enumerateSites(body: => Unit): Seq[String] = {
@@ -187,7 +186,7 @@ class CrashSweepSpec extends SparkSpec {
 
   test("crash sweep: compaction heals by re-run at every write and rename") {
     val p = s"sweep_k_${System.nanoTime()}"
-    val c1 = Pipeline.corpusBuildWithState(v1, p).localCheckpoint(true)
+    val c1 = Buffers.once(Pipeline.corpusBuildWithState(v1, p))
     val refSites = enumerateSites(
       Pipeline.compactCorpus(c1, p, s"${p}_cmp").count())
     refSites should not be empty
@@ -220,7 +219,7 @@ class CrashSweepSpec extends SparkSpec {
     Dedup.buildWinnowIndex(v1, s"${p}_wn")
     Similarity.buildIvfIndex(embs, s"${p}_ivf", s"${p}_ivf_cents")
     // committed shrink so every index holds departed-doc garbage
-    val v2s = v1.filter(col("doc_id") % 3 =!= 0).localCheckpoint(true)
+    val v2s = Buffers.once(v1.filter(col("doc_id") % 3 =!= 0))
     Pipeline.corpusDelta(v2s, v1, p, commit = true).count()
     def policy(): Unit = Pipeline.vacuumIndexes(spark, p,
       fingerprintIndex = Some(s"${p}_fp"),

@@ -562,6 +562,10 @@ class DedupSpec extends SparkSpec {
     // swapped index's scan in it to be bucketed — a regression that
     // re-shuffles the index on probe now fails here, where the r16
     // proxy groupBy would have passed.
+    // the captured plan shows the index scan only on the
+    // localCheckpoint path; the persist path would surface a cached
+    // relation instead
+    graft.core.Buffers.keepsLineage(SparkSpec.spark) shouldBe false
     val capturedPlans =
       new java.util.concurrent.CopyOnWriteArrayList[String]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -579,8 +583,9 @@ class DedupSpec extends SparkSpec {
         val p = Dedup.probeNearDupIndex(
           kept.limit(1).select(lit(9301L).as("doc_id"), col("text")),
           kept, "neardup_idx_vac")
-        // listener delivery is async — poll for the candidate job's plan
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        // listener delivery is async (sub-second) — poll for the
+        // candidate job's plan
+        val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
         def hit(): Boolean = {
           import scala.jdk.CollectionConverters._
           capturedPlans.asScala.exists(s =>

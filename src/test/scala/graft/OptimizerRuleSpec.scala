@@ -14,12 +14,6 @@ import graft.plans.PartialAggPushdown
 class OptimizerRuleSpec extends SparkSpec {
   import SparkSpec.spark.implicits._
 
-  // the shared test session has no extensions; inject the rule once
-  if (!spark.experimental.extraOptimizations.contains(PartialAggPushdown)) {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ PartialAggPushdown
-  }
-
   private def forced[T](f: => T): T = {
     spark.conf.set("spark.graft.aggPushdown.force", "true")
     try f finally spark.conf.unset("spark.graft.aggPushdown.force")
@@ -51,6 +45,11 @@ class OptimizerRuleSpec extends SparkSpec {
       max("v").as("mx"))
 
   test("pushes sum/count/min/max below the join; answers unchanged") {
+    // the rule under test is the one GraftExtensions injects into every
+    // session, not a suite-local experimental append
+    spark.experimental.extraOptimizations shouldBe empty
+    spark.sessionState.optimizer.batches.flatMap(_.rules) should
+      contain(PartialAggPushdown)
     val (plan, pushed) = forced {
       (hasAggBelowJoin(query()), query().collect().toSet)
     }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.core.Buffers
 import graft.operators.{Curation, Dedup, Pipeline}
 
 /** Composition invariants of the end-to-end corpus build (q164's
@@ -244,9 +245,8 @@ class PipelineSpec extends SparkSpec {
     // hit-set-sized rows
     v1.count() should be > 0L
     val snap = spark.table(s"${statePrefix}_snapshot")
-    val deltaDocs = tables.documents.limit(40).localCheckpoint(true)
-    val tomb = tables.documents.select("doc_id").limit(5)
-      .localCheckpoint(true)
+    val deltaDocs = Buffers.once(tables.documents.limit(40))
+    val tomb = Buffers.once(tables.documents.select("doc_id").limit(5))
     val p = plan(Pipeline.exactScreen(deltaDocs, snap, tomb))
     val shuffles = "Exchange".r.findAllMatchIn(p).size -
       "BroadcastExchange".r.findAllMatchIn(p).size
@@ -387,7 +387,7 @@ class PipelineSpec extends SparkSpec {
       .getAs[Long]("max_bin") shouldBe bins.last
     // the compacted table reads back as one bucketed scan: a doc_id
     // join against it needs no table-side Exchange (the q48 layout)
-    val probe = docs.select("doc_id").limit(10).localCheckpoint(true)
+    val probe = Buffers.once(docs.select("doc_id").limit(10))
     val pj = plan(spark.table(table).join(probe, Seq("doc_id")))
     ("Exchange".r.findAllMatchIn(pj).size -
       "BroadcastExchange".r.findAllMatchIn(pj).size) should be <= 1
@@ -437,22 +437,20 @@ class PipelineSpec extends SparkSpec {
     val dupFpIds = fps
       .join(fps.groupBy("fp").count().filter(col("count") > 1), Seq("fp"))
       .select("doc_id")
-    val docs = base0.join(touched, Seq("doc_id"), "left_anti")
-      .join(dupFpIds, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
+    val docs = Buffers.once(base0.join(touched, Seq("doc_id"), "left_anti")
+      .join(dupFpIds, Seq("doc_id"), "left_anti"))
 
     val twins = docs.filter(col("doc_id") % 29 === 0)
       .select((col("doc_id") + 500000L).as("doc_id"), col("text"),
         col("lang"), col("source"), col("n_chars"))
-    val v1crawl = docs.unionByName(twins).localCheckpoint(true)
+    val v1crawl = Buffers.once(docs.unionByName(twins))
     val big = 100000000L
     val v1chunks = Pipeline.corpusBuildWithState(v1crawl, p1,
       mixBudgetTokens = big)
 
     // v2 removes exactly the originals the twins duplicate
-    val v2crawl = v1crawl
-      .filter(!(col("doc_id") % 29 === 0 && col("doc_id") < 500000L))
-      .localCheckpoint(true)
+    val v2crawl = Buffers.once(v1crawl
+      .filter(!(col("doc_id") % 29 === 0 && col("doc_id") < 500000L)))
     val d2 = Pipeline.corpusDelta(v2crawl, v1crawl, p1, commit = true)
     // the edge in action: the delta only tombstones — the twins diff
     // as "unchanged" and are not re-admitted
@@ -515,10 +513,9 @@ class PipelineSpec extends SparkSpec {
     // deltas CHAIN against the retrained generation with no caller
     // change: a third crawl deltas identically against the
     // maintained+retrained state and against the fresh v2 build
-    val v3crawl = v2crawl.filter(col("doc_id") % 31 =!= 0)
+    val v3crawl = Buffers.once(v2crawl.filter(col("doc_id") % 31 =!= 0)
       .withColumn("text", when(col("doc_id") % 37 === 0,
-        concat(col("text"), lit(" edited v3"))).otherwise(col("text")))
-      .localCheckpoint(true)
+        concat(col("text"), lit(" edited v3"))).otherwise(col("text"))))
     rowSet(Pipeline.corpusDelta(v3crawl, v2crawl, p1)) shouldBe
       rowSet(Pipeline.corpusDelta(v3crawl, v2crawl, p2))
   }
@@ -617,13 +614,11 @@ class PipelineSpec extends SparkSpec {
     val mods = Seq((17, 13, 19), (23, 11, 29), (31, 37, 41),
       (43, 47, 53), (59, 61, 67))
     for (((r, e, a), i) <- mods.zipWithIndex) {
-      val next = mutateCrawl(crawl, r, e, a, s"r$i")
-        .localCheckpoint(true)
+      val next = Buffers.once(mutateCrawl(crawl, r, e, a, s"r$i"))
       val d = Pipeline.corpusDelta(next, crawl, p, commit = true)
       Pipeline.corpusTableFold(d, p, compactEvery = 2)
       deltas += d
-      expected = Pipeline.applyCorpusDelta(expected, d)
-        .localCheckpoint(true)
+      expected = Buffers.once(Pipeline.applyCorpusDelta(expected, d))
       crawl = next
       // the auto-compaction POLICY holds: never compactEvery changesets
       // outstanding after a fold returns
@@ -666,8 +661,7 @@ class PipelineSpec extends SparkSpec {
   test("dropGeneration: oldest-first reclaim, export-guarded, idempotent, live window exact") {
     val spark = SparkSpec.spark
     val p = s"pipe_gen_${System.nanoTime()}"
-    val docs = tables.documents.filter(col("doc_id") < 300)
-      .localCheckpoint(true)
+    val docs = Buffers.once(tables.documents.filter(col("doc_id") < 300))
     Pipeline.corpusBuildWithState(docs, p, mixBudgetTokens = 100000000L)
     // two retrains: generations 1, 2, 3 all retained
     Pipeline.retrainState(docs, p).count()
@@ -752,8 +746,7 @@ class PipelineSpec extends SparkSpec {
     val spark = SparkSpec.spark
     import graft.operators.{Dedup, Similarity}
     val p = s"pipe_vac_${System.nanoTime()}"
-    val v1 = tables.documents.filter(col("doc_id") < 400)
-      .localCheckpoint(true)
+    val v1 = Buffers.once(tables.documents.filter(col("doc_id") < 400))
     Pipeline.corpusBuildWithState(v1, p, mixBudgetTokens = 100000000L)
     // the companion indexes a deployment maintains beside the state
     Dedup.buildFingerprintIndex(v1, s"${p}_fpidx")
@@ -764,10 +757,9 @@ class PipelineSpec extends SparkSpec {
     Similarity.buildIvfIndex(embs, s"${p}_ivf", s"${p}_ivf_cents")
     // a committed delta tombstones a third of the corpus — the indexes
     // keep the departed docs' entries (append-only) until the policy runs
-    val v2 = v1.filter(col("doc_id") % 3 =!= 0).localCheckpoint(true)
+    val v2 = Buffers.once(v1.filter(col("doc_id") % 3 =!= 0))
     Pipeline.corpusDelta(v2, v1, p, commit = true).count()
-    val standing = spark.table(s"${p}_standing").select("doc_id")
-      .localCheckpoint(true)
+    val standing = Buffers.once(spark.table(s"${p}_standing").select("doc_id"))
 
     Pipeline.vacuumIndexes(spark, p,
       fingerprintIndex = Some(s"${p}_fpidx"),
@@ -776,8 +768,7 @@ class PipelineSpec extends SparkSpec {
       semanticIndex = Some(s"${p}_ivf"))
 
     // every family equals a fresh build over the LIVE corpus
-    val liveDocs = v2.join(standing, Seq("doc_id"), "left_semi")
-      .localCheckpoint(true)
+    val liveDocs = Buffers.once(v2.join(standing, Seq("doc_id"), "left_semi"))
     Dedup.buildFingerprintIndex(liveDocs, s"${p}_fpidx_ref")
     rowSet(spark.table(s"${p}_fpidx")) shouldBe
       rowSet(spark.table(s"${p}_fpidx_ref"))
@@ -812,8 +803,7 @@ class PipelineSpec extends SparkSpec {
     val spark = SparkSpec.spark
     import graft.operators.{Dedup, Similarity}
     val p = s"pipe_fvac_${System.nanoTime()}"
-    val v1 = tables.documents.filter(col("doc_id") < 400)
-      .localCheckpoint(true)
+    val v1 = Buffers.once(tables.documents.filter(col("doc_id") < 400))
     val v1c = Pipeline.corpusBuildWithState(v1, p,
       mixBudgetTokens = 100000000L)
     Pipeline.corpusTableInit(v1c, p)
@@ -835,20 +825,18 @@ class PipelineSpec extends SparkSpec {
     // two SHRINK-ONLY committed crawls at compactEvery = 2 (companion
     // indexes are append-at-ingest artifacts — a shrinking corpus is
     // exactly the departed-doc garbage the vacuum policy reclaims)
-    val v2 = v1.filter(col("doc_id") % 3 =!= 0).localCheckpoint(true)
+    val v2 = Buffers.once(v1.filter(col("doc_id") % 3 =!= 0))
     val d1 = Pipeline.corpusDelta(v2, v1, p, commit = true)
     fold(d1)
     // first fold does not compact — the policy must NOT have fired yet
     spark.table(s"${p}_fpidx").count() shouldBe fp0
-    val v3 = v2.filter(col("doc_id") % 5 =!= 0).localCheckpoint(true)
+    val v3 = Buffers.once(v2.filter(col("doc_id") % 5 =!= 0))
     val d2 = Pipeline.corpusDelta(v3, v2, p, commit = true)
     fold(d2) // second fold: compaction + the full vacuum policy
 
     // every configured family now equals a fresh build over the LIVE set
-    val standing = spark.table(s"${p}_standing").select("doc_id")
-      .localCheckpoint(true)
-    val liveDocs = v3.join(standing, Seq("doc_id"), "left_semi")
-      .localCheckpoint(true)
+    val standing = Buffers.once(spark.table(s"${p}_standing").select("doc_id"))
+    val liveDocs = Buffers.once(v3.join(standing, Seq("doc_id"), "left_semi"))
     Dedup.buildFingerprintIndex(liveDocs, s"${p}_fpidx_ref")
     rowSet(spark.table(s"${p}_fpidx")) shouldBe
       rowSet(spark.table(s"${p}_fpidx_ref"))

@@ -21,11 +21,6 @@ import org.apache.spark.sql.catalyst.plans.logical._
   */
 class PlanGateSpec extends SparkSpec {
 
-  // the SQL-surface queries (q75 etc.) resolve graft's native functions;
-  // production sessions get them via spark.sql.extensions, the shared
-  // test session registers them directly (the SimilaritySpec pattern)
-  graft.plans.GraftExtensions.registerAll(spark)
-
   /** The explicit allowlist. Keep ≤ 2 entries, each with its reason. */
   private val allowed: Map[String, String] = Map(
     // the documented exact-recall BASELINE for ANN: a bounded query set

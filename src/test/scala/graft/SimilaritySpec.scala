@@ -43,10 +43,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("every native expression is callable from the SQL surface") {
-    // production sessions register via GraftExtensions
-    // (spark.sql.extensions); the shared test session is already built,
-    // so register into its live registry
-    graft.plans.GraftExtensions.registerAll(spark)
     tables.embeddings.createOrReplaceTempView("emb_sql")
     val viaSql = spark.sql(
       """SELECT vec_id, round(cosine_similarity(embedding, embedding), 6) c

@@ -4,24 +4,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
+import graft.core.Sessions
 import graft.sources.Tables
 
-/** Shared local session + sf0.001 tables for the whole suite. */
+/** Shared local session + sf0.001 tables for the whole suite. The
+  * session is the production one ([[Sessions.local]]) at 4 cores, so
+  * the suite checks the engine the harness mains run.
+  */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-warehouse-${System.nanoTime()}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    Sessions.local("graft-test", cores = 4, shufflePartitions = 4)
   val sfDir = "/root/testdata/sf0.001"
   lazy val tables: Tables = Tables(spark, sfDir)
 }

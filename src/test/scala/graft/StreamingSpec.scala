@@ -6,6 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import graft.core.Buffers
 import graft.streaming.Streams
 
 class StreamingSpec extends SparkSpec {
@@ -636,6 +637,38 @@ class StreamingSpec extends SparkSpec {
     Streams.nearDupIngestBatch(batch1, 1L, out, sig)
     landed() shouldBe Seq(1L, 4L)
     spark.read.parquet(sig).count() shouldBe 8L
+  }
+
+  test("deduped ingest: folds between batches of a RUNNING stream land no duplicate") {
+    // the stream's batches run in its own session; the fold appends to
+    // the index from this one. Each batch re-sends every earlier text
+    // plus five new ones, and the store folds after every second batch:
+    // a batch that read a stale index listing would let the folded
+    // fingerprints through
+    val (out, fp, ckpt) = (tmp("live-fold-out"), tmp("live-fold-fp"),
+      tmp("live-fold-ckpt"))
+    Seq(out, fp).foreach(d => new java.io.File(d).delete())
+    val idx = "live_fold_fp_idx"
+    spark.sql(s"DROP TABLE IF EXISTS $idx")
+    graft.operators.Dedup.ensureFingerprintIndex(spark, idx)
+    val in = MemoryStream[(Long, String)]
+    val q = Streams.startDedupedIngest(in.toDF().toDF("doc_id", "text"),
+      out, fp, ckpt, indexTable = Some(idx))
+    var folded = 0
+    try {
+      (0 until 8).foreach { b =>
+        in.addData((0 until 5 * (b + 1)).map(i =>
+          (b * 1000L + i, s"live fold text number $i")))
+        q.processAllAvailable()
+        if (b % 2 == 1) folded += Streams.foldFingerprintStore(spark, fp,
+          idx).size
+      }
+    } finally q.stop()
+    folded should be > 0
+    val landed = spark.read.parquet(out).select("text").as[String]
+      .collect().toSeq
+    landed.size shouldBe 40
+    landed.distinct.size shouldBe 40
   }
 
   test("store→index fold: screen unchanged across folds, newest batch kept") {
@@ -1547,13 +1580,13 @@ class StreamingSpec extends SparkSpec {
     var acc3 = docs.limit(0)
     for (b <- batches) {
       val s1 = Dedup.incrementalExactDedup(selfExact(b), acc1)
-      acc1 = acc1.unionByName(s1).localCheckpoint(true)
+      acc1 = Buffers.once(acc1.unionByName(s1))
       val mHits = Dedup.incrementalNearDup(s1, acc2)
         .select(col("new_id").as("doc_id")).distinct()
       val s2 = s1.join(mHits, Seq("doc_id"), "left_anti")
-      acc2 = acc2.unionByName(s2).localCheckpoint(true)
+      acc2 = Buffers.once(acc2.unionByName(s2))
       val s3 = winnowScreen(s2, acc3)
-      acc3 = acc3.unionByName(s3).localCheckpoint(true)
+      acc3 = Buffers.once(acc3.unionByName(s3))
     }
 
     // the two screened corpora are identical...
