@@ -1726,7 +1726,7 @@ object SparkEntry {
     }),
 
     // ---- index VACUUM through the crash-ordered swap
-    // ([[Dedup.compactFingerprintIndex]]): build over the full corpus,
+    // ([[Dedup.fingerprintIndex]] compact): build over the full corpus,
     // vacuum to the live (2/3) fingerprint set, return the swapped-in
     // table itself. End-to-end oracle over the post-swap relation —
     // this gate fails loudly on the whole stale-metadata bug class
@@ -1737,7 +1737,7 @@ object SparkEntry {
       val docs = Tables(s, d).documents
       val idx = s"graft_fp_vac_${dirTag(d)}"
       Dedup.buildFingerprintIndex(docs, idx)
-      Dedup.compactFingerprintIndex(s, idx,
+      Dedup.fingerprintIndex().compact(s, idx,
         TextAnalysis.fingerprints(docs.filter(col("doc_id") % 3 =!= 0))
           .select("fp"))
       s.table(idx).orderBy("fp")

@@ -442,7 +442,7 @@ object Stress {
                 .filter(col("doc_id") % 2 =!= 0)).select("fp"))
         else null
         timed("fpIndexVacuumBig")(
-          Dedup.compactFingerprintIndex(spark, "stress_fp_big", liveFps))
+          Dedup.fingerprintIndex().compact(spark, "stress_fp_big", liveFps))
       },
       // semantic dedup at n x 500 embeddings: every vector sits in a
       // ~n-clone clique (the mutated copies), the per-cell join's

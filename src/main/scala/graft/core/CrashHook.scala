@@ -7,7 +7,7 @@ package graft.core
   * [[graft.sources.Sinks.saveTable]] / `Sinks.writeTable` (all
   * managed-table overwrites and appends, including every `IndexSpec`
   * commit marker), the two RENAMEs + DROP inside
-  * `Dedup.swapIndexTable` (the crash-ordered vacuum swap),
+  * `PersistedIndex.swapIndexTable` (the crash-ordered vacuum swap),
   * `Pipeline.dropGeneration`'s table drops, and the managed fold's
   * epoch-GC drop. Each fires this hook AFTER the mutation lands, so a
   * test can simulate a process death at every point where some writes
@@ -16,8 +16,9 @@ package graft.core
   *
   * Scope (ADVICE r15): the sweep's exhaustiveness claim covers the
   * clean-path funnels above. RECOVERY-path mutations —
-  * `Dedup.healIndexSwap`'s renames/drops — only execute after a prior
-  * simulated crash, so a clean reference run cannot enumerate them;
+  * `PersistedIndex.healIndexSwap`'s renames/drops — only execute after
+  * a prior simulated crash, so a clean reference run cannot enumerate
+  * them;
   * crashes INSIDE the heal are covered by the hand-written
   * heal-window tests (DedupSpec's rename-to-repair cases), not the
   * ordinal sweep.

@@ -3,8 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.Buffers
+import graft.sources.PersistedIndex
 
 /** Deduplication operators for training-data pipelines, over the
   * `documents` table (doc_id, text, lang, source, n_chars).
@@ -294,9 +296,19 @@ object Dedup {
 
   // ---------------------------------- persisted exact-dedup (fingerprint) index
 
-  /** Build the persisted EXACT-dedup index: the corpus's distinct
-    * normalized fingerprints as a managed table bucketed and sorted by
-    * fp — the stored form [[incrementalExactDedup]]'s doc promises ("in
+  /** The persisted EXACT-dedup index family: the corpus's distinct
+    * normalized fingerprints, bucketed and sorted by fp. No spec table —
+    * a fingerprint is parameter-free, and the bucket layout is read off
+    * the table's own metadata. Appends anti-join on fp, so the table
+    * stays a distinct set and a grown index is row-identical to one
+    * rebuilt from the union.
+    */
+  def fingerprintIndex(buckets: Int = 32): PersistedIndex = PersistedIndex(
+    StructType.fromDDL("fp STRING"), "fp", Some((buckets, Seq("fp"))),
+    prepare = _.select("fp").distinct())
+
+  /** Build the persisted EXACT-dedup index ([[fingerprintIndex]]) — the
+    * stored form [[incrementalExactDedup]]'s doc promises ("in
     * production you persist that set once"). A 16-byte key per unique
     * document, ~nothing next to the corpus; each crawl batch then
     * anti-joins against it without re-reading or re-hashing a byte of
@@ -304,58 +316,26 @@ object Dedup {
     */
   def buildFingerprintIndex(documents: DataFrame, table: String,
       buckets: Int = 32): Unit =
-    graft.sources.Sinks.saveTablePartitioned(
-      spread(documents)
-        .select(TextAnalysis.fingerprint(col("text")).as("fp")).distinct(),
-      table, bucketBy = Some((buckets, Seq("fp"))), sortBy = Seq("fp"))
+    fingerprintIndex(buckets).build(spread(documents)
+      .select(TextAnalysis.fingerprint(col("text")).as("fp")).distinct(),
+      table)
 
   /** Create an EMPTY fingerprint index table if absent — the bootstrap
     * for pipelines that probe the index from day one (the streaming
-    * deduped ingest's probe-both window requires the table to exist so
-    * a mistyped name fails loudly instead of silently skipping the
-    * screen). No-op when the table already exists.
+    * deduped ingest requires the table to exist so a mistyped name
+    * fails loudly instead of silently skipping the screen).
     */
   def ensureFingerprintIndex(spark: org.apache.spark.sql.SparkSession,
       table: String, buckets: Int = 32): Unit =
-    if (!spark.catalog.tableExists(table)) {
-      import spark.implicits._
-      graft.sources.Sinks.saveTablePartitioned(
-        Seq.empty[String].toDF("fp"), table,
-        bucketBy = Some((buckets, Seq("fp"))), sortBy = Seq("fp"))
-    }
+    fingerprintIndex(buckets).ensure(spark, table)
 
   /** Grow a fingerprint index with a new batch: only fingerprints NOT
-    * already present are appended (anti-join before the write), so the
-    * table stays a distinct set and a grown index is row-identical to
-    * one rebuilt from the union. The bucket layout is read off the
-    * table's own metadata — no second spec to keep in sync.
+    * already present are appended.
     */
   def appendFingerprintIndex(newDocs: DataFrame, table: String): Unit =
-    appendFingerprints(
-      spread(newDocs)
-        .select(TextAnalysis.fingerprint(col("text")).as("fp")).distinct(),
+    fingerprintIndex().appendRows(spread(newDocs)
+      .select(TextAnalysis.fingerprint(col("text")).as("fp")).distinct(),
       table)
-
-  /** [[appendFingerprintIndex]] for rows that are ALREADY fingerprints
-    * (a single `fp` column) — the store→index fold path, where the
-    * streaming ingest's fp store holds the hashes and re-reading the
-    * document text would defeat the store's purpose. Same anti-join-
-    * before-append contract: appending rows already present is a no-op,
-    * which is what makes a crashed-and-rerun fold idempotent.
-    */
-  def appendFingerprints(fps: DataFrame, table: String): Unit = {
-    val spark = fps.sparkSession
-    val spec = spark.sessionState.catalog
-      .getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)).bucketSpec
-      .getOrElse(throw new IllegalStateException(
-        s"$table is not bucketed — was it built by buildFingerprintIndex?"))
-    val fresh = fps.select("fp").distinct()
-      .join(spark.table(table), Seq("fp"), "left_anti")
-    graft.sources.Sinks.appendTablePartitioned(fresh, table,
-      bucketBy = Some((spec.numBuckets, spec.bucketColumnNames)),
-      sortBy = spec.sortColumnNames)
-  }
 
   /** Screen a batch against a persisted fingerprint index: rows of
     * `newDocs` whose normalized fingerprint is unseen — result-identical
@@ -684,306 +664,63 @@ object Dedup {
 
   // ------------------------------------- persisted near-dup (band-bucket) index
 
-  /** Build the PERSISTED near-dup index: the corpus's (doc_id, band_idx,
-    * band_hash) relation saved as a managed parquet table bucketed and
-    * sorted by band_hash — the build-once/probe-many form of
-    * [[incrementalNearDup]]'s corpus side. Per-crawl near-dedup is THE
-    * recurring production job, and without this every batch re-shingles,
-    * re-signs and re-buckets the full corpus (at 100 TB that is the whole
-    * cost); with it, a batch pays only for ITS OWN signatures plus a
-    * bucketed join against the probed slice of this table. The signature
-    * spec (ngram/k/bands) AND the storage bucket count persist beside
-    * the index (the [[Similarity.buildLshIndex]] pattern): a probe or
-    * append with different signature parameters would produce band
-    * hashes that silently never match, so it must fail loudly instead —
-    * and appends must reuse the build's bucket count or the table's
-    * bucketed layout degrades silently.
+  /** The persisted near-dup (band-bucket) index family: the corpus's
+    * (doc_id, band_idx, band_hash) relation, bucketed and sorted by
+    * EXACTLY the probe's join/window keys — the scan then reports
+    * hash(band_idx, band_hash) partitioning and the probe's bucket-set
+    * join, bucket_n window, and candidate join all reuse it with ZERO
+    * index-side exchange. The signature spec (ngram/k/bands) persists
+    * beside the index: a probe or append with different parameters
+    * would produce band hashes that silently never match, so it fails
+    * loudly instead.
+    *
+    * Compaction also collapses duplicate rows: a corpus commit crashed
+    * between its band append and its standing advance, then re-run,
+    * appends the same survivors' bands twice ([[appendNearDupIndex]] is
+    * append-only — an anti-join on every commit would scan the whole
+    * index, the wrong trade at corpus scale). The duplicates only
+    * inflate probe cost, and the compaction rewrite is already a full
+    * shuffle, so dedup there is free and restores the grown-index ≡
+    * rebuilt-from-union invariant.
     *
     * `buckets` is SCAN PARALLELISM, not recall: a bucketed-table scan
     * plans one task per storage bucket, so size it to the cluster
     * (default 32 matches the local harness; a 1000-executor corpus
     * index wants thousands).
     */
-  def buildNearDupIndex(documents: DataFrame, table: String, ngram: Int = 3,
-      k: Int = 64, bands: Int = 16, buckets: Int = 32): Unit = {
-    val spark = documents.sparkSession
-    // spec FIRST (the IndexSpec ordering contract): a crash between the
-    // two writes must leave spec-without-index, never index-without-spec
-    import spark.implicits._
-    graft.sources.IndexSpec.write(
-      Seq((ngram, k, bands, buckets)).toDF("ngram", "k", "bands", "buckets"),
-      table)
-    // bucketed by EXACTLY the probe's join/window keys: the scan then
-    // reports hash(band_idx, band_hash) partitioning and the probe's
-    // bucket-set join, bucket_n window, and candidate join all reuse it
-    // with ZERO index-side exchange — only the batch side shuffles
-    graft.sources.Sinks.saveTablePartitioned(
-      bandBuckets(spread(documents), ngram, k, bands), table,
-      bucketBy = Some((buckets, Seq("band_idx", "band_hash"))),
-      sortBy = Seq("band_idx", "band_hash"))
-  }
+  def nearDupIndex(ngram: Int = 3, k: Int = 64, bands: Int = 16,
+      buckets: Int = 32): PersistedIndex = PersistedIndex(
+    StructType.fromDDL("doc_id BIGINT, band_idx INT, band_hash BIGINT"),
+    "doc_id", Some((buckets, Seq("band_idx", "band_hash"))),
+    spec = Seq("ngram" -> ngram, "k" -> k, "bands" -> bands),
+    mismatch = "band hashes would never match",
+    prepare = _.select("doc_id", "band_idx", "band_hash"),
+    distinctOnCompact = true)
 
-  /** Fail loudly when ngram/k/bands differ from what the index was built
-    * with — mismatched band hashes join nothing and lose recall silently
-    * — or when the spec table is missing entirely (a half-built index).
-    * Returns the index's storage bucket count for append to reuse.
+  /** Build the PERSISTED near-dup index ([[nearDupIndex]]) — the
+    * build-once/probe-many form of [[incrementalNearDup]]'s corpus side.
+    * Per-crawl near-dedup is THE recurring production job, and without
+    * this every batch re-shingles, re-signs and re-buckets the full
+    * corpus (at 100 TB that is the whole cost); with it, a batch pays
+    * only for ITS OWN signatures plus a bucketed join against the
+    * probed slice of this table.
     */
-  private def requireNearDupSpec(spark: org.apache.spark.sql.SparkSession,
-      indexTable: String, ngram: Int, k: Int, bands: Int): Int = {
-    val r = graft.sources.IndexSpec.readRequired(spark, indexTable)
-    val (g, kk, b) = (r.getInt(0), r.getInt(1), r.getInt(2))
-    require(g == ngram && kk == k && b == bands,
-      s"$indexTable was built with ngram=$g k=$kk bands=$b; " +
-        s"got ngram=$ngram k=$k bands=$bands — band hashes would never match")
-    r.getInt(3)
-  }
+  def buildNearDupIndex(documents: DataFrame, table: String, ngram: Int = 3,
+      k: Int = 64, bands: Int = 16, buckets: Int = 32): Unit =
+    nearDupIndex(ngram, k, bands, buckets)
+      .build(bandBuckets(spread(documents), ngram, k, bands), table)
 
   /** Incrementally extend a persisted near-dup index with a new document
     * batch — the per-crawl growth path. Band membership is a pure
     * function of the document text, so buckets for the NEW docs alone are
     * computed and appended; existing rows are untouched. An index grown
     * by appends is row-identical to one rebuilt from the union (asserted
-    * in tests).
+    * in tests). Deliberately no anti-join (see [[nearDupIndex]]).
     */
   def appendNearDupIndex(newDocs: DataFrame, table: String, ngram: Int = 3,
-      k: Int = 64, bands: Int = 16): Unit = {
-    val buckets =
-      requireNearDupSpec(newDocs.sparkSession, table, ngram, k, bands)
-    graft.sources.Sinks.appendTablePartitioned(
-      bandBuckets(spread(newDocs), ngram, k, bands), table,
-      bucketBy = Some((buckets, Seq("band_idx", "band_hash"))),
-      sortBy = Seq("band_idx", "band_hash"))
-  }
-
-  /** Vacuum a near-dup band index: rewrite it keeping only rows whose
-    * doc_id is in `keep` (one column, `doc_id`). The index only ever
-    * grows — [[appendNearDupIndex]] adds survivors, nothing removes the
-    * entries of docs that later left the corpus — so probe cost drifts
-    * upward with garbage even though correctness holds (probe hits are
-    * filtered against the standing set). This reclaims it: after the
-    * vacuum, bucket sizes and probe cost are proportional to the LIVE
-    * corpus again. Spec and bucketed layout are preserved.
-    *
-    * Implementation writes the filtered rows to a `__vacuum` side table
-    * and swaps it in with a CRASH-ORDERED rename pair — no plan ever
-    * reads the table it is replacing, nothing corpus-sized is pinned in
-    * executor memory, and at every instant between the catalog ops the
-    * index is recoverable WITHOUT a rebuild: the live table is renamed
-    * aside to `<table>__old` before the vacuumed table takes its name,
-    * and the old generation is dropped only once the swap is complete
-    * (the write-then-marker discipline of the state-family specs,
-    * applied to a catalog swap). [[healIndexSwap]] runs first and
-    * adopts whatever a previously-crashed vacuum left behind — a
-    * dangling `__vacuum` with the index gone is renamed into place, a
-    * dangling `__old` is restored or dropped — so a crashed vacuum
-    * self-heals on the next one instead of demanding manual recovery.
-    */
-  def compactNearDupIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, keep: DataFrame): Unit = {
-    val spec = graft.sources.IndexSpec.readRequired(spark, table)
-    val buckets = spec.getAs[Int]("buckets")
-    swapIndexTable(spark, table) { tmp =>
-      // distinct: a commit crashed between its band append and its
-      // standing advance, then re-run, appends the same survivors'
-      // bands twice ([[appendNearDupIndex]] is append-only — an
-      // anti-join on every commit would scan the whole index, the
-      // wrong trade at corpus scale). The duplicates only inflate
-      // probe cost, never correctness, and this rewrite is already a
-      // full shuffle — dedup here is free, and restores the
-      // grown-index ≡ rebuilt-from-union invariant at each compaction.
-      graft.sources.Sinks.saveTablePartitioned(
-        spark.table(table)
-          .join(keep.select("doc_id"), Seq("doc_id"), "left_semi")
-          .distinct(),
-        tmp,
-        bucketBy = Some((buckets, Seq("band_idx", "band_hash"))),
-        sortBy = Seq("band_idx", "band_hash"))
-    }
-  }
-
-  /** The crash-ordered vacuum swap shared by every persisted-index
-    * compaction ([[compactNearDupIndex]], [[compactFingerprintIndex]],
-    * [[compactSimhashIndex]], [[compactWinnowIndex]],
-    * [[Similarity.compactIvfIndex]]): heal any previously-crashed
-    * swap, have `write` materialize the vacuumed rows under the
-    * `__vacuum` side name, then swap with rename-before-drop — the
-    * index's name is table-less only between the two RENAMEs, BOTH
-    * generations survive a crash there, and [[healIndexSwap]] prefers
-    * the vacuumed one on recovery.
-    */
-  private[operators] def swapIndexTable(
-      spark: org.apache.spark.sql.SparkSession, table: String)(
-      write: String => Unit): Unit = {
-    healIndexSwap(spark, table)
-    val tmp = s"${table}__vacuum"
-    val old = s"${table}__old"
-    write(tmp)
-    spark.sql(s"ALTER TABLE $table RENAME TO $old")
-    repairIfPartitioned(spark, old)
-    graft.core.CrashHook.fire(s"swapRename1:$table")
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    repairIfPartitioned(spark, table)
-    graft.core.CrashHook.fire(s"swapRename2:$table")
-    // the session's relation cache can still hold the pre-swap file
-    // index (observed: a renamed partitioned table serving the tmp
-    // location's now-empty paths); refresh makes the swap visible
-    spark.catalog.refreshTable(table)
-    spark.sql(s"DROP TABLE $old")
-    graft.core.CrashHook.fire(s"swapDrop:$table")
-  }
-
-  /** RENAME moves a managed table's directory but leaves hive-style
-    * PARTITION catalog entries pointing at the OLD paths — a renamed
-    * partitioned table (the IVF index's cell layout) reads empty, and
-    * far worse, DROPPING it deletes the per-partition dirs at those
-    * stale locations, which after a swap are the NEW table's data
-    * (observed: the vacuumed index emptied by the superseded
-    * generation's drop). MSCK SYNC both drops the stale entries and
-    * re-registers the moved directories, so it must run on EVERY
-    * renamed partitioned name — the one being kept AND the one about
-    * to be dropped. Bucketed tables carry no per-partition entries and
-    * need nothing.
-    */
-  private def repairIfPartitioned(
-      spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    if (meta.partitionColumnNames.nonEmpty)
-      spark.sql(s"MSCK REPAIR TABLE $table SYNC PARTITIONS")
-  }
-
-  /** Vacuum a fingerprint index ([[buildFingerprintIndex]]): rewrite
-    * keeping only fingerprints present in `keepFps` (one `fp` column —
-    * the LIVE corpus's fingerprint set). The fp index stores distinct
-    * hashes with no doc ids, so liveness must arrive as fingerprints;
-    * the corpus-state snapshot table (doc_id, fp) provides exactly
-    * that without a text rescan, and a caller holding only documents
-    * derives it with [[TextAnalysis.fingerprints]]. Same crash-ordered
-    * swap + self-heal as every family; bucket layout is read off the
-    * table's own metadata (the [[appendFingerprints]] discipline).
-    * The bloom tier over this index has no row-level vacuum by
-    * construction (a Bloom filter only ORs) — its documented horizon
-    * is a rebuild ([[buildBloomIndex]]/[[appendBloomIndex]] scaladoc),
-    * run AFTER this vacuum so the rebuilt filter sizes to the live set.
-    */
-  def compactFingerprintIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, keepFps: DataFrame): Unit =
-    swapIndexTable(spark, table) { tmp =>
-      // metadata read INSIDE the swap closure — swapIndexTable heals a
-      // previously-crashed swap first, and before that heal the index
-      // name can be vacant (rows parked under __vacuum); reading the
-      // bucketSpec earlier would throw and break the documented
-      // crashed-vacuum-self-heals-on-rerun recovery
-      val bucketSpec = spark.sessionState.catalog
-        .getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(table)).bucketSpec
-      graft.sources.Sinks.saveTablePartitioned(
-        spark.table(table)
-          // no .distinct() on the keep set: semi-join already has set
-          // semantics, and the dedup would add a corpus-scale shuffle
-          .join(keepFps.select("fp"), Seq("fp"), "left_semi"),
-        tmp,
-        bucketBy = bucketSpec.map(b =>
-          (b.numBuckets, b.bucketColumnNames.toSeq)),
-        sortBy = bucketSpec.map(_.sortColumnNames.toSeq)
-          .getOrElse(Seq.empty))
-    }
-
-  /** Vacuum a simhash index ([[buildSimhashIndex]]): drop the chunk
-    * rows of docs not in `keep` (one `doc_id` column — the standing
-    * set). Spec (portable flag, buckets) and bucketed layout preserved,
-    * same crash-ordered swap + self-heal as every family.
-    */
-  def compactSimhashIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, keep: DataFrame): Unit = {
-    val spec = graft.sources.IndexSpec.readRequired(spark, table)
-    val buckets = spec.getAs[Int]("buckets")
-    swapIndexTable(spark, table) { tmp =>
-      graft.sources.Sinks.saveTablePartitioned(
-        spark.table(table)
-          .join(keep.select("doc_id"), Seq("doc_id"), "left_semi"),
-        tmp, bucketBy = Some((buckets, Seq("chunk_idx", "chunk"))),
-        sortBy = Seq("chunk_idx", "chunk"))
-    }
-  }
-
-  /** Vacuum a winnowing index ([[buildWinnowIndex]]): drop the posting
-    * rows of corpus docs not in `keep` (one `doc_id` column). Note the
-    * probe-side df cut needs no adjustment — [[probeWinnowIndex]]
-    * derives document frequency from the join at probe time, so a
-    * vacuumed index's df reflects the live corpus immediately. Spec
-    * (k, w, buckets) and fp-bucketed layout preserved.
-    */
-  def compactWinnowIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, keep: DataFrame): Unit = {
-    val spec = graft.sources.IndexSpec.readRequired(spark, table)
-    val buckets = spec.getAs[Int]("buckets")
-    swapIndexTable(spark, table) { tmp =>
-      graft.sources.Sinks.saveTablePartitioned(
-        spark.table(table)
-          .join(keep.select(col("doc_id").as("corpus_id")),
-            Seq("corpus_id"), "left_semi"),
-        tmp, bucketBy = Some((buckets, Seq("fp"))), sortBy = Seq("fp"))
-    }
-  }
-
-  /** Recover an index-vacuum swap ([[swapIndexTable]] — any family) a
-    * crash left half-done — called on every vacuum entry, and public
-    * so an operator who hit the (tiny) availability window can heal
-    * the index directly. The possible crash states and their
-    * resolution:
-    *
-    *   - index present, `__vacuum` dangling (crashed before the first
-    *     RENAME): the tmp is stale — drop it; the next vacuum rewrites.
-    *   - index ABSENT, `__vacuum` present (crashed between the RENAMEs):
-    *     the vacuumed rows are complete — rename them into place; a
-    *     dangling `__old` is then the superseded generation, dropped.
-    *   - index ABSENT, only `__old` present (cannot happen in the
-    *     current ordering, kept for safety): restore the old
-    *     generation — a stale-but-correct index beats none.
-    *   - index present, `__old` dangling (crashed before the final
-    *     DROP): the swap completed — drop the superseded generation.
-    */
-  def healIndexSwap(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit = {
-    val tmp = s"${table}__vacuum"
-    val old = s"${table}__old"
-    val cat = spark.catalog
-    if (!cat.tableExists(table)) {
-      if (cat.tableExists(tmp)) {
-        spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-        repairIfPartitioned(spark, table)
-        cat.refreshTable(table)
-      } else if (cat.tableExists(old)) {
-        spark.sql(s"ALTER TABLE $old RENAME TO $table")
-        repairIfPartitioned(spark, table)
-        cat.refreshTable(table)
-      }
-    } else if (cat.tableExists(old) || cat.tableExists(tmp)) {
-      // a dangling generation beside a LIVE table means a swap crashed
-      // mid-flight — possibly between the tmp->table rename and its
-      // repair, leaving the live table's partition entries pointing at
-      // the moved __vacuum paths (it would read empty, and the NEXT
-      // vacuum would semi-join that empty read into a permanently
-      // empty index). MSCK SYNC is idempotent and cheap next to a
-      // vacuum, so re-sync the live table unconditionally before any
-      // cleanup.
-      repairIfPartitioned(spark, table)
-      cat.refreshTable(table)
-    }
-    // repair-before-drop: a crash BETWEEN a rename and its repair can
-    // leave this dangling generation's partition entries pointing into
-    // the live table's directory — dropping it then would delete live
-    // data at those stale locations. Re-syncing first confines the
-    // drop to the generation's own directory. (`tmp` needs none: it is
-    // only ever a fresh saveAsTable with self-consistent entries.)
-    if (cat.tableExists(old) && cat.tableExists(table)) {
-      repairIfPartitioned(spark, old)
-      spark.sql(s"DROP TABLE $old")
-    }
-    if (cat.tableExists(tmp) && cat.tableExists(table))
-      spark.sql(s"DROP TABLE $tmp")
-  }
+      k: Int = 64, bands: Int = 16): Unit =
+    nearDupIndex(ngram, k, bands)
+      .append(bandBuckets(spread(newDocs), ngram, k, bands), table)
 
   /** The (doc_id, band_idx, band_hash) band-bucket relation of a
     * document frame, public for callers that manage their own band
@@ -994,48 +731,6 @@ object Dedup {
   def bandBucketTable(documents: DataFrame, ngram: Int = 3, k: Int = 64,
       bands: Int = 16): DataFrame =
     bandBuckets(spread(documents), ngram, k, bands)
-
-  /** Create an EMPTY near-dup band index table (spec first, per the
-    * IndexSpec ordering contract) if absent — the bootstrap twin of
-    * [[ensureFingerprintIndex]]/[[ensureSimhashIndex]] for pipelines
-    * that probe the index from day one. No-op when the table exists.
-    */
-  def ensureNearDupIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, ngram: Int = 3, k: Int = 64, bands: Int = 16,
-      buckets: Int = 32): Unit =
-    if (!spark.catalog.tableExists(table)) {
-      import spark.implicits._
-      graft.sources.IndexSpec.write(
-        Seq((ngram, k, bands, buckets))
-          .toDF("ngram", "k", "bands", "buckets"), table)
-      graft.sources.Sinks.saveTablePartitioned(
-        Seq.empty[(Long, Int, Long)]
-          .toDF("doc_id", "band_idx", "band_hash"),
-        table, bucketBy = Some((buckets, Seq("band_idx", "band_hash"))),
-        sortBy = Seq("band_idx", "band_hash"))
-    }
-
-  /** [[appendNearDupIndex]] for rows that are ALREADY band rows
-    * (doc_id, band_idx, band_hash) — the store→index fold path, where
-    * the streaming ingest's band store holds the hashes and re-shingling
-    * the text would defeat the store's purpose. Anti-joins on doc_id
-    * against the index first, so a crashed-and-rerun fold appends
-    * nothing the second time — fold idempotence. The spec parameters
-    * assert the ROWS were signed with the index's settings (band hashes
-    * are opaque; the caller owns that invariant, which is why the fold
-    * reads them off the same spec-guarded family).
-    */
-  def appendBandRows(rows: DataFrame, table: String, ngram: Int = 3,
-      k: Int = 64, bands: Int = 16): Unit = {
-    val spark = rows.sparkSession
-    val buckets = requireNearDupSpec(spark, table, ngram, k, bands)
-    val fresh = rows.select("doc_id", "band_idx", "band_hash")
-      .join(spark.table(table).select("doc_id").distinct(),
-        Seq("doc_id"), "left_anti")
-    graft.sources.Sinks.appendTablePartitioned(fresh, table,
-      bucketBy = Some((buckets, Seq("band_idx", "band_hash"))),
-      sortBy = Seq("band_idx", "band_hash"))
-  }
 
   /** Probe a persisted near-dup index built by [[buildNearDupIndex]] over
     * `corpus`: (new_id, corpus_id, jaccard) pairs where a new-batch doc is
@@ -1062,7 +757,7 @@ object Dedup {
       k: Int = 64, bands: Int = 16, maxBucket: Int = 1000,
       hashShingles: Boolean = false): DataFrame = {
     val spark = newDocs.sparkSession
-    requireNearDupSpec(spark, indexTable, ngram, k, bands)
+    nearDupIndex(ngram, k, bands).requireSpec(spark, indexTable)
     val newSpread = spread(newDocs)
     // NOT materialized: the batch bucket table is consumed twice (bucket
     // set, candidate join), but re-deriving it costs only the batch's own
@@ -1853,93 +1548,43 @@ object Dedup {
       portable: Boolean = false): DataFrame =
     simhashChunks(simhashSig(documents, portable), if (portable) 15 else 16)
 
-  /** Completes the persisted-index family (exact: [[buildFingerprintIndex]],
-    * MinHash: [[buildNearDupIndex]]): the corpus's simhash chunk table
-    * (doc_id, simhash, chunk_idx, chunk) as a managed table bucketed by
-    * the probe's exact join keys. Because the 8-byte SIGNATURE rides in
-    * the index, a probe never touches corpus text at all — candidate
+  /** The persisted simhash (chunk-bucket) index family: the corpus's
+    * chunk table (doc_id, simhash, chunk_idx, chunk), bucketed by the
+    * probe's exact join keys. Because the 8-byte SIGNATURE rides in the
+    * index, a probe never touches corpus text at all — candidate
     * verification is pure xor/bit_count arithmetic on rows already in
-    * hand (no re-shingle step, unlike the MinHash path). The sketch
-    * family (`portable`) persists in the spec: native-XXH64 and portable-
-    * md5 signatures never match each other, so a mismatched probe must
-    * fail loudly instead of silently finding nothing.
+    * hand. The sketch family (`portable`) persists in the spec:
+    * native-XXH64 and portable-md5 signatures never match each other,
+    * so a mismatched probe or append fails loudly instead of silently
+    * finding nothing.
+    */
+  def simhashIndex(portable: Boolean = false,
+      buckets: Int = 32): PersistedIndex = PersistedIndex(
+    StructType.fromDDL(
+      "doc_id BIGINT, simhash BIGINT, chunk_idx INT, chunk BIGINT"),
+    "doc_id", Some((buckets, Seq("chunk_idx", "chunk"))),
+    spec = Seq("portable" -> portable),
+    mismatch = "signatures would never match",
+    prepare = _.select("doc_id", "simhash", "chunk_idx", "chunk"))
+
+  /** Build the persisted simhash index ([[simhashIndex]]) — the third
+    * persisted-index family beside exact ([[buildFingerprintIndex]]) and
+    * MinHash ([[buildNearDupIndex]]).
     */
   def buildSimhashIndex(documents: DataFrame, table: String,
-      portable: Boolean = false, buckets: Int = 32): Unit = {
-    val spark = documents.sparkSession
-    // spec first — the IndexSpec ordering contract
-    import spark.implicits._
-    graft.sources.IndexSpec.write(
-      Seq((portable, buckets)).toDF("portable", "buckets"), table)
-    graft.sources.Sinks.saveTablePartitioned(
-      simhashChunks(simhashSig(documents, portable),
-        if (portable) 15 else 16),
-      table, bucketBy = Some((buckets, Seq("chunk_idx", "chunk"))),
-      sortBy = Seq("chunk_idx", "chunk"))
-  }
-
-  /** Fail loudly on a sketch-family mismatch or a missing spec table;
-    * returns the index's bucket count for append to reuse.
-    */
-  private def requireSimhashSpec(spark: org.apache.spark.sql.SparkSession,
-      indexTable: String, portable: Boolean): Int = {
-    val r = graft.sources.IndexSpec.readRequired(spark, indexTable)
-    require(r.getBoolean(0) == portable,
-      s"$indexTable was built with portable=${r.getBoolean(0)}; " +
-        s"got portable=$portable — signatures would never match")
-    r.getInt(1)
-  }
-
-  /** Create an EMPTY simhash index table (spec first, per the IndexSpec
-    * ordering contract) if absent — the bootstrap twin of
-    * [[ensureFingerprintIndex]] for pipelines probing from day one.
-    * The empty table fixes `doc_id` to LONG (the engine's document-id
-    * convention); a corpus with string ids should build from data via
-    * [[buildSimhashIndex]] instead. No-op when the table exists.
-    */
-  def ensureSimhashIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, portable: Boolean = false, buckets: Int = 32): Unit =
-    if (!spark.catalog.tableExists(table)) {
-      import spark.implicits._
-      graft.sources.IndexSpec.write(
-        Seq((portable, buckets)).toDF("portable", "buckets"), table)
-      graft.sources.Sinks.saveTablePartitioned(
-        Seq.empty[(Long, Long, Int, Long)]
-          .toDF("doc_id", "simhash", "chunk_idx", "chunk"),
-        table, bucketBy = Some((buckets, Seq("chunk_idx", "chunk"))),
-        sortBy = Seq("chunk_idx", "chunk"))
-    }
+      portable: Boolean = false, buckets: Int = 32): Unit =
+    simhashIndex(portable, buckets)
+      .build(simhashChunkTable(documents, portable), table)
 
   /** Grow a simhash index with a new batch — signatures are a pure
     * function of the text, so only the new docs' chunks are computed and
-    * appended; grown ≡ rebuilt (asserted in tests).
+    * appended (docs already indexed are skipped); grown ≡ rebuilt
+    * (asserted in tests).
     */
   def appendSimhashIndex(newDocs: DataFrame, table: String,
       portable: Boolean = false): Unit =
-    appendSimhashChunks(
-      simhashChunks(simhashSig(newDocs, portable),
-        if (portable) 15 else 16),
-      table, portable)
-
-  /** [[appendSimhashIndex]] for rows that are ALREADY chunk rows
-    * (doc_id, simhash, chunk_idx, chunk) — the store→index fold path:
-    * the streaming ingest's signature store holds exactly this shape,
-    * and re-signing the text would defeat the store's purpose. Unlike
-    * the docs form, this anti-joins on doc_id against the index first,
-    * so a crashed-and-rerun fold (append committed, store cleanup not)
-    * appends nothing the second time — fold idempotence.
-    */
-  def appendSimhashChunks(chunks: DataFrame, table: String,
-      portable: Boolean = false): Unit = {
-    val spark = chunks.sparkSession
-    val buckets = requireSimhashSpec(spark, table, portable)
-    val fresh = chunks.select("doc_id", "simhash", "chunk_idx", "chunk")
-      .join(spark.table(table).select("doc_id").distinct(),
-        Seq("doc_id"), "left_anti")
-    graft.sources.Sinks.appendTablePartitioned(fresh, table,
-      bucketBy = Some((buckets, Seq("chunk_idx", "chunk"))),
-      sortBy = Seq("chunk_idx", "chunk"))
-  }
+    simhashIndex(portable)
+      .appendRows(simhashChunkTable(newDocs, portable), table)
 
   /** Probe a persisted simhash index: (new_id, corpus_id, hamming) pairs
     * where a new-batch doc is within `maxHamming` of an existing corpus
@@ -1954,7 +1599,7 @@ object Dedup {
       maxHamming: Int = 3, maxBucket: Int = 1000,
       portable: Boolean = false): DataFrame = {
     val spark = newDocs.sparkSession
-    requireSimhashSpec(spark, table, portable)
+    simhashIndex(portable).requireSpec(spark, table)
     val nb = simhashChunks(simhashSig(newDocs, portable),
       if (portable) 15 else 16)
       .select(col("chunk_idx"), col("chunk"),
@@ -2072,89 +1717,99 @@ object Dedup {
       .filter(col("n_shared") >= minShared)
   }
 
-  /** Persisted winnowing fingerprint INDEX: the passage-level member of
-    * the per-crawl probe family (exact doc / minhash / simhash /
-    * semantic / winnowing). The (corpus_id, fp) relation is bucketed by
-    * `fp` — exactly the probe's join key, so probing a crawl batch
+  /** Persisted winnowing fingerprint INDEX family: the passage-level
+    * member of the per-crawl probe family (exact doc / minhash / simhash
+    * / semantic / winnowing). The (corpus_id, fp) relation is bucketed
+    * by `fp` — exactly the probe's join key, so probing a crawl batch
     * shuffles only the batch's own fingerprints, never the index. Spec
-    * (k, w, buckets) persists FIRST (the IndexSpec ordering contract);
-    * a probe or append at different shingle geometry fails loudly —
-    * mismatched k-gram hashes join nothing and lose recall silently.
+    * (k, w) persists FIRST; a probe or append at different shingle
+    * geometry fails loudly. No df cut is stored — the probe derives
+    * each hash's document frequency from the join itself, so the
+    * boilerplate cut can never go stale under appends.
+    *
+    * A fold first checks the store's own geometry stamp
+    * ([[assertWinnowGeometry]]; the fold NEVER stamps — it wrote none of
+    * the rows) and maps the store's `doc_id` to `corpus_id`.
     */
+  def winnowIndex(k: Int = 4, w: Int = 5,
+      buckets: Int = 32): PersistedIndex = PersistedIndex(
+    StructType.fromDDL("corpus_id BIGINT, fp BIGINT"), "corpus_id",
+    Some((buckets, Seq("fp"))),
+    spec = Seq("k" -> k, "w" -> w),
+    mismatch = "mismatched shingle geometry joins nothing and loses " +
+      "recall silently",
+    prepare = _.select(col("corpus_id").cast("long").as("corpus_id"),
+      col("fp").cast("long").as("fp")).distinct(),
+    fromStore = (dir, rows) => {
+      assertWinnowGeometry(rows.sparkSession, dir, k, w, "winnow fold",
+        stamp = false)
+      rows.withColumnRenamed("doc_id", "corpus_id")
+    })
+
+  /** Build the persisted winnowing index ([[winnowIndex]]). */
   def buildWinnowIndex(corpus: DataFrame, table: String, k: Int = 4,
-      w: Int = 5, buckets: Int = 32): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    graft.sources.IndexSpec.write(
-      Seq((k, w, buckets)).toDF("k", "w", "buckets"), table)
-    graft.sources.Sinks.saveTablePartitioned(
+      w: Int = 5, buckets: Int = 32): Unit =
+    winnowIndex(k, w, buckets).build(
       winnowingFingerprints(spread(corpus), k, w)
         .select(col("doc_id").as("corpus_id"), col("fp")).distinct(),
-      table, bucketBy = Some((buckets, Seq("fp"))), sortBy = Seq("fp"))
-  }
-
-  private[graft] def requireWinnowSpec(
-      spark: org.apache.spark.sql.SparkSession,
-      table: String, k: Int, w: Int): Int = {
-    val spec = graft.sources.IndexSpec.readRequired(spark, table)
-    require(spec.getInt(0) == k && spec.getInt(1) == w,
-      s"winnow index $table was built with k=${spec.getInt(0)} " +
-        s"w=${spec.getInt(1)}; probe/append asked k=$k w=$w — mismatched " +
-        "shingle geometry joins nothing and loses recall silently")
-    spec.getInt(2)
-  }
+      table)
 
   /** Fold a new crawl's fingerprints into the index (same bucketing, so
-    * probes keep their zero-index-shuffle plan). No df cut is stored —
-    * the probe derives each hash's document frequency from the join
-    * itself, so the boilerplate cut can never go stale under appends.
+    * probes keep their zero-index-shuffle plan).
     */
   def appendWinnowIndex(newDocs: DataFrame, table: String, k: Int = 4,
-      w: Int = 5): Unit = {
-    val buckets = requireWinnowSpec(newDocs.sparkSession, table, k, w)
-    graft.sources.Sinks.appendTablePartitioned(
+      w: Int = 5): Unit =
+    winnowIndex(k, w).append(
       winnowingFingerprints(spread(newDocs), k, w)
         .select(col("doc_id").as("corpus_id"), col("fp")).distinct(),
-      table, bucketBy = Some((buckets, Seq("fp"))), sortBy = Seq("fp"))
-  }
+      table)
 
-  /** Create an EMPTY winnowing index (spec first) if absent — the
-    * bootstrap twin of [[ensureNearDupIndex]] for streaming pipelines
-    * that screen against the index from the first micro-batch. No-op
-    * when the table exists (the spec guard still applies on use).
+  /** A winnow fingerprint store's geometry stamp: a `_winnow_k<k>_w<w>`
+    * marker created on first use and asserted ever after, by both the
+    * ingest and the fold — fingerprints winnowed at one (k, w) are
+    * permanently unmatchable under another, so a geometry change must
+    * be a loud restart with a fresh store, never a silent screen loss.
     */
-  def ensureWinnowIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, k: Int = 4, w: Int = 5, buckets: Int = 32): Unit =
-    if (!spark.catalog.tableExists(table)) {
-      import spark.implicits._
-      graft.sources.IndexSpec.write(
-        Seq((k, w, buckets)).toDF("k", "w", "buckets"), table)
-      graft.sources.Sinks.saveTablePartitioned(
-        Seq.empty[(Long, Long)].toDF("corpus_id", "fp"),
-        table, bucketBy = Some((buckets, Seq("fp"))), sortBy = Seq("fp"))
-    }
-
-  /** [[appendWinnowIndex]] for rows that are ALREADY (corpus_id, fp)
-    * fingerprints — the store→index fold path, where the streaming
-    * ingest's fingerprint store holds the selected hashes and
-    * re-winnowing the text would defeat the store's purpose. Anti-joins
-    * on corpus_id against the index first, so a crashed-and-rerun fold
-    * appends nothing the second time — fold idempotence, the
-    * [[appendBandRows]] recipe. The geometry params are asserted
-    * against the spec: rows winnowed at different (k, w) would plant
-    * unmatchable hashes.
-    */
-  def appendWinnowRows(fpRows: DataFrame, table: String, k: Int = 4,
-      w: Int = 5): Unit = {
-    val spark = fpRows.sparkSession
-    val buckets = requireWinnowSpec(spark, table, k, w)
-    graft.sources.Sinks.appendTablePartitioned(
-      fpRows.select(col("corpus_id").cast("long").as("corpus_id"),
-          col("fp").cast("long").as("fp"))
-        .distinct()
-        .join(spark.table(table).select("corpus_id").distinct(),
-          Seq("corpus_id"), "left_anti"),
-      table, bucketBy = Some((buckets, Seq("fp"))), sortBy = Seq("fp"))
+  private[graft] def assertWinnowGeometry(
+      spark: org.apache.spark.sql.SparkSession, fpDir: String,
+      k: Int, w: Int, caller: String, stamp: Boolean,
+      ownBatch: Option[Long] = None): Unit = {
+    val dir = new org.apache.hadoop.fs.Path(fpDir)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val mine = s"_winnow_k${k}_w$w"
+    // a store that doesn't exist yet has no geometry to protect — and
+    // must NOT be created here, or the first batch's empty-store read
+    // would see an existing-but-empty directory instead of the missing
+    // path its bootstrap handles
+    if (!fs.exists(dir)) return
+    val markers = fs.listStatus(dir).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("_winnow_k"))
+    if (markers.isEmpty) {
+      // marker-less rows have UNPROVEN geometry. The only partition a
+      // caller may vouch for is the one it itself (re)writes at this
+      // (k, w) — the ingest's own batch, which dynamic partition
+      // overwrite replaces wholesale on replay, so a crash between its
+      // write and its stamp stays recoverable. Anything else (a
+      // pre-marker-era store, or a crash at a DIFFERENT geometry
+      // followed by other batches) must refuse rather than let the
+      // caller stamp its own (k, w) over foreign hashes, which would
+      // fold/join permanently unmatchable fingerprints — the exact
+      // silent screen loss the marker exists to prevent.
+      val foreign = PersistedIndex.storePartitions(fs, dir)
+        .filterNot(id => ownBatch.contains(id))
+      require(foreign.isEmpty,
+        s"$caller: fingerprint store $fpDir has batch partitions " +
+          s"${foreign.toSeq.sorted.mkString(",")} but no geometry " +
+          s"marker — refusing to assume they were winnowed at $mine; " +
+          "re-ingest into a fresh store, or restore the marker by " +
+          "hand if the rows' (k, w) is known")
+      if (stamp)
+        fs.create(new org.apache.hadoop.fs.Path(dir, mine), true).close()
+    } else require(markers == Seq(mine),
+      s"$caller: fingerprint store $fpDir was written at geometry " +
+        s"${markers.mkString(",")} but this call uses $mine — " +
+        "mismatched winnowing geometry joins nothing and loses the " +
+        "screen silently; use the original (k, w) or a fresh store")
   }
 
   /** Shared-passage containment screen for a crawl batch: (new_id,
@@ -2170,7 +1825,7 @@ object Dedup {
       minShared: Int = 2, maxDf: Int = 64, k: Int = 4,
       w: Int = 5): DataFrame = {
     val spark = batch.sparkSession
-    requireWinnowSpec(spark, table, k, w)
+    winnowIndex(k, w).requireSpec(spark, table)
     val bfps = winnowingFingerprints(spread(batch), k, w)
       .select(col("doc_id").as("new_id"), col("fp")).distinct()
     val hits = bfps.join(spark.table(table), Seq("fp"))

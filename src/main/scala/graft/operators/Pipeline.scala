@@ -105,6 +105,8 @@ object Pipeline {
   private val NdNgram = 3
   private val NdK = 64
   private val NdBands = 32
+  /** The state family's band index ([[Dedup.nearDupIndex]]). */
+  private def bandIndex = Dedup.nearDupIndex(NdNgram, NdK, NdBands)
 
   private def snapshotTable(p: String) = s"${p}_snapshot"
   private def standingTable(p: String) = s"${p}_standing"
@@ -1173,8 +1175,8 @@ object Pipeline {
   /** Vacuum every persisted index a corpus deployment maintains beside
     * its state family, deriving each keep-set from the STANDING corpus
     * — the policy wiring for the per-family vacuums
-    * ([[Dedup.compactFingerprintIndex]]/[[Dedup.compactSimhashIndex]]/
-    * [[Dedup.compactWinnowIndex]]/[[Similarity.compactIvfIndex]]),
+    * (`compact` of [[Dedup.fingerprintIndex]]/[[Dedup.simhashIndex]]/
+    * [[Dedup.winnowIndex]]/[[Similarity.ivfIndex]]),
     * which are otherwise caller-invoked one-offs that each need their
     * keep-set hand-built. Run beside [[compactCorpus]] on the same
     * maintenance cadence: deltas only ever APPEND to the indexes, so
@@ -1189,11 +1191,12 @@ object Pipeline {
     *   - fingerprint index: standing ⋉ snapshot fps — the snapshot
     *     holds the last RAW crawl's (doc_id, fp) including docs that
     *     were never admitted, so it is cut to standing first (the
-    *     derivation the [[Dedup.compactFingerprintIndex]] scaladoc
-    *     documents). Both sides are doc_id-bucketed: the semi-join is
+    *     derivation [[Dedup.fingerprintIndex]]'s keep-by-fp vacuum
+    *     needs). Both sides are doc_id-bucketed: the semi-join is
     *     exchange-free.
     *   - simhash / winnow indexes: the standing doc_id set directly
-    *     (both are keyed by the corpus doc_id).
+    *     (both are keyed by the corpus doc_id; the winnow index names
+    *     it corpus_id).
     *   - semantic (IVF) index: standing doc_ids AS vec_ids — valid
     *     under the pipeline convention that the embedding store keys a
     *     document's vector by its doc_id (the [[Similarity
@@ -1201,9 +1204,10 @@ object Pipeline {
     *     an independent vector id space must vacuum with its own
     *     mapping instead.
     *
-    * Each vacuum is the crash-ordered swap + self-heal of its family
-    * ([[Dedup.swapIndexTable]]); this sequences them, so a crash
-    * mid-policy leaves some indexes vacuumed and the rest intact —
+    * Each vacuum is the crash-ordered swap + self-heal shared by every
+    * family ([[graft.sources.PersistedIndex.compact]]); this sequences
+    * them, so a crash mid-policy leaves some indexes vacuumed and the
+    * rest intact —
     * re-run to finish (every leg is idempotent). Bloom tiers are
     * rebuild-only by construction and deliberately NOT here (see
     * [[Dedup.buildBloomIndex]] — rebuild after the fp vacuum so the
@@ -1216,19 +1220,20 @@ object Pipeline {
       semanticIndex: Option[String] = None): Unit = {
     val keepDocs = spark.table(standingTable(statePrefix))
       .select("doc_id")
-    Dedup.compactNearDupIndex(spark, neardupTable(statePrefix), keepDocs)
+    bandIndex.compact(spark, neardupTable(statePrefix), keepDocs)
     fingerprintIndex.foreach { t =>
       val keepFps = spark.table(snapshotTable(statePrefix))
         .join(keepDocs, Seq("doc_id"), "left_semi")
         .select("fp")
-      Dedup.compactFingerprintIndex(spark, t, keepFps)
+      Dedup.fingerprintIndex().compact(spark, t, keepFps)
     }
     simhashIndex.foreach(t =>
-      Dedup.compactSimhashIndex(spark, t, keepDocs))
+      Dedup.simhashIndex().compact(spark, t, keepDocs))
     winnowIndex.foreach(t =>
-      Dedup.compactWinnowIndex(spark, t, keepDocs))
+      Dedup.winnowIndex().compact(spark, t,
+        keepDocs.select(col("doc_id").as("corpus_id"))))
     semanticIndex.foreach(t =>
-      Similarity.compactIvfIndex(spark, t,
+      Similarity.ivfIndex().compact(spark, t,
         keepDocs.select(col("doc_id").as("vec_id"))))
   }
 
@@ -1259,8 +1264,8 @@ object Pipeline {
     // re-enter the fp tier, so no re-run would ever append their bands
     // (a permanent silent near-dup recall gap). The reverse crash only
     // orphans index entries: probes standing-filter hits, and the next
-    // [[Dedup.compactNearDupIndex]] vacuum reclaims the rows. If that
-    // crashed commit is RE-RUN (rather than the documented full-build
+    // band-index compaction ([[Dedup.nearDupIndex]]) reclaims the rows.
+    // If that crashed commit is RE-RUN (rather than the documented full-build
     // recovery), the identical diff appends the same survivors' bands
     // a second time — duplicates, not orphans, once the docs go
     // standing; correctness holds (band probes are set-semantics) and
@@ -1311,7 +1316,7 @@ object Pipeline {
     * scan in the q48 layout.
     *
     * Compaction also VACUUMS the band index
-    * ([[graft.operators.Dedup.compactNearDupIndex]] against the
+    * (the [[graft.operators.Dedup.nearDupIndex]] compaction against the
     * standing set): append-only growth leaves entries for docs that
     * have since left the corpus, and while probes stay correct (hits
     * are standing-filtered), their cost drifts upward with the
@@ -1343,7 +1348,7 @@ object Pipeline {
     // probe cost drifts upward with garbage (correct — hits are
     // standing-filtered — but paid on every delta). Compaction is the
     // natural reclaim point: keep exactly the standing docs' rows.
-    Dedup.compactNearDupIndex(spark, neardupTable(statePrefix),
+    bandIndex.compact(spark, neardupTable(statePrefix),
       spark.table(standingTable(statePrefix)))
 
     // spec advance LAST (max_bin only ever shrinks here) — the

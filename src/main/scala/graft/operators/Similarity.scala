@@ -3,9 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.Buffers
-import graft.sources.Sinks
+import graft.sources.{PersistedIndex, Sinks}
 
 /** Similarity search over the `embeddings` table
   * (vec_id: long, embedding: array<float>, label: int).
@@ -432,20 +433,40 @@ object Similarity {
             1, nprobe),
           s => s.getField("cell"))))
 
-  /** Build the PERSISTED IVF index: the trained centroids as one tiny
-    * table, and the cell-assigned corpus as a managed parquet table
-    * PARTITIONED by cell. [[ivfTopK]] re-trains the quantizer (a full
-    * corpus aggregation) and re-assigns every row on each call; built
-    * once, [[queryIvfIndex]] reads only the probed cells' partitions.
-    * Rebuild when the corpus changes — the tables are a snapshot.
+  /** The persisted IVF index family: the cell-assigned corpus (vec_id,
+    * embedding, cell) as a managed parquet table PARTITIONED by cell, so
+    * a probe reads only its probed cells' partitions. No spec table —
+    * the trained centroid table IS the index's contract (re-training
+    * would move cell boundaries and is a rebuild, not an append). An
+    * append anti-joins on vec_id and THEN assigns the fresh vectors to
+    * the frozen `centroidTable`'s cells; ensure and compaction need no
+    * quantizer. Run [[ivfRebuildPressure]] AFTER a compaction when
+    * deciding on a rebuild: a vacuum fixes occupancy garbage, but not
+    * centroid drift — only a rebuild re-trains the quantizer.
+    */
+  def ivfIndex(centroidTable: Option[String] = None): PersistedIndex =
+    PersistedIndex(
+      StructType.fromDDL("vec_id BIGINT, embedding ARRAY<FLOAT>, cell INT"),
+      "vec_id", partitionBy = Seq("cell"),
+      prepare = _.select("vec_id", "embedding"),
+      place = fresh => cellAssigned(fresh, collectCentroids(
+        fresh.sparkSession.table(centroidTable.getOrElse(
+          throw new IllegalArgumentException("appending to an IVF index " +
+            "needs its frozen centroid table"))))))
+
+  /** Build the PERSISTED IVF index ([[ivfIndex]]): the trained centroids
+    * as one tiny table, and the cell-assigned corpus beside it.
+    * [[ivfTopK]] re-trains the quantizer (a full corpus aggregation) and
+    * re-assigns every row on each call; built once, [[queryIvfIndex]]
+    * reads only the probed cells' partitions. Rebuild when the corpus
+    * changes — the tables are a snapshot.
     */
   def buildIvfIndex(embeddings: DataFrame, indexTable: String,
       centroidTable: String): Unit = {
     Sinks.saveTable(labelCentroids(embeddings), centroidTable)
     val cents = collectCentroids(
       embeddings.sparkSession.table(centroidTable))
-    Sinks.saveTablePartitioned(cellAssigned(embeddings, cents), indexTable,
-      partitionBy = Seq("cell"))
+    ivfIndex().build(cellAssigned(embeddings, cents), indexTable)
   }
 
   /** Incrementally extend a persisted IVF index: new vectors are
@@ -459,62 +480,8 @@ object Similarity {
   def appendIvfIndex(spark: SparkSession, embeddings: DataFrame,
       indexTable: String, centroidTable: String): Unit = {
     val cents = collectCentroids(spark.table(centroidTable))
-    Sinks.appendTablePartitioned(cellAssigned(embeddings, cents),
-      indexTable, partitionBy = Seq("cell"))
+    ivfIndex().append(cellAssigned(embeddings, cents), indexTable)
   }
-
-  /** [[appendIvfIndex]] with an anti-join on vec_id before the append —
-    * the store→index fold path, where a crashed-and-rerun fold must not
-    * double-append (the [[Dedup.appendFingerprints]] discipline). An
-    * index grown this way is row-identical to one rebuilt from the
-    * union under the same frozen quantizer.
-    */
-  def appendIvfVectors(spark: SparkSession, vectors: DataFrame,
-      indexTable: String, centroidTable: String): Unit = {
-    val cents = collectCentroids(spark.table(centroidTable))
-    val fresh = vectors.select("vec_id", "embedding")
-      .join(spark.table(indexTable).select("vec_id"),
-        Seq("vec_id"), "left_anti")
-    Sinks.appendTablePartitioned(cellAssigned(fresh, cents), indexTable,
-      partitionBy = Seq("cell"))
-  }
-
-  /** Vacuum a persisted IVF index: drop the rows of vectors not in
-    * `keep` (one `vec_id` column — the live vector set), preserving
-    * the cell-partitioned layout and the frozen centroid table. The
-    * index only ever grows ([[appendIvfIndex]]/[[appendIvfVectors]]
-    * add, nothing removes), so probe cost and the
-    * [[ivfRebuildPressure]] occupancy signal drift upward with
-    * departed vectors even though correctness holds (callers filter
-    * hits against their live set). Same crash-ordered `__vacuum`
-    * rename swap + self-heal as the [[Dedup.compactNearDupIndex]]
-    * family ([[Dedup.healIndexSwap]] recovers a crashed swap). Run
-    * [[ivfRebuildPressure]] AFTER a vacuum when deciding on a rebuild:
-    * a vacuum fixes occupancy garbage, but not centroid drift — only a
-    * rebuild re-trains the quantizer.
-    */
-  def compactIvfIndex(spark: SparkSession, indexTable: String,
-      keep: DataFrame): Unit =
-    Dedup.swapIndexTable(spark, indexTable) { tmp =>
-      Sinks.saveTablePartitioned(
-        spark.table(indexTable)
-          .join(keep.select("vec_id"), Seq("vec_id"), "left_semi"),
-        tmp, partitionBy = Seq("cell"))
-    }
-
-  /** Create an EMPTY cell-partitioned IVF vector table if absent — the
-    * bootstrap for streaming pipelines that fold into the index from
-    * day one. The quantizer (centroid table) must already exist; it is
-    * the index's frozen contract.
-    */
-  def ensureIvfIndex(spark: SparkSession, table: String): Unit =
-    if (!spark.catalog.tableExists(table)) {
-      import spark.implicits._
-      Sinks.saveTablePartitioned(
-        Seq.empty[(Long, Seq[Float], Int)]
-          .toDF("vec_id", "embedding", "cell"),
-        table, partitionBy = Seq("cell"))
-    }
 
   /** The frozen quantizer of `centroidTable` as plan literals. */
   private[graft] def cellsOf(spark: SparkSession,
@@ -713,8 +680,7 @@ object Similarity {
     Sinks.saveTable(quantizedLabelCentroids(embeddings), centroidTable)
     val cents = collectCentroids(
       embeddings.sparkSession.table(centroidTable))
-    Sinks.saveTablePartitioned(cellAssigned(embeddings, cents), indexTable,
-      partitionBy = Seq("cell"))
+    ivfIndex().build(cellAssigned(embeddings, cents), indexTable)
   }
 
   /** Incremental SEMANTIC dedup of a new embedding batch against a

@@ -2,10 +2,13 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.core.Buffers
 import graft.operators.TextAnalysis
+import graft.sources.PersistedIndex
+import graft.sources.PersistedIndex.{readStore, writeBatchIdempotent}
 
 /** Structured Streaming surface (SURVEY §2.8 T1–T10, S12–S13, K6).
   *
@@ -342,75 +345,36 @@ object Streams {
       }
       .start()
 
-  /** The idempotent write inside [[startIdempotentParquetSink]], exposed
-    * so tests (and manual backfills) can invoke exactly what a replayed
-    * micro-batch would run.
+  /** The one foreachBatch launcher of every ingest tier and
+    * batch-partitioned store: run `body` on each micro-batch of `df`
+    * (append mode, checkpointed) — e.g.
+    * `startIngest(docs, ckpt)(nearDupIngestBatch(_, _, out, sig))`.
+    * Delivery is at least once: after a failure between a batch's
+    * writes and its checkpoint commit the engine replays it with the
+    * SAME batch id, and every body here is idempotent for a fixed id
+    * (per-batch dynamic partition overwrite), which makes the pair
+    * effectively exactly-once.
     */
-  def writeBatchIdempotent(batch: DataFrame, batchId: Long,
-      path: String): Unit =
-    batch.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(path)
-
-  /** Exactly-once parquet sink for non-transactional targets: each
-    * micro-batch overwrites ITS OWN batch_id partition (dynamic
-    * partition overwrite — other partitions untouched). foreachBatch's
-    * delivery guarantee is at-least-once: after a failure between the
-    * write and the checkpoint commit, the engine replays the batch with
-    * the SAME batch id — which here rewrites the same partition with the
-    * same rows instead of appending duplicates. Idempotent replay +
-    * at-least-once delivery = effectively exactly-once, the standard
-    * recipe when the sink has no transactions to offer.
-    */
-  def startIdempotentParquetSink(df: DataFrame, path: String,
-      checkpoint: String): StreamingQuery =
+  def startIngest(df: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
     df.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        writeBatchIdempotent(batch, id, path)
+      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
+        body(b, id)
       }
       .start()
 
-  /** One micro-batch of [[startDedupedIngest]], exposed so tests and
-    * manual backfills invoke exactly what a replayed batch runs. Four
-    * steps, each idempotent for a fixed `batchId`:
-    *
-    *   1. in-batch self-dedup (lowest doc_id per normalized fingerprint
-    *      — the [[graft.operators.Dedup.exactDedup]] convention, inlined
-    *      schema-agnostically so any doc_id+text frame streams in);
-    *   2. screen against the fingerprint STORE, ignoring rows this batch
-    *      itself wrote — a replayed batch must see the store as it was
-    *      before its first attempt, or a crash between the fp write and
-    *      the checkpoint commit would make the replay drop its own docs
-    *      and overwrite the output partition with nothing (data loss);
-    *   3. survivors → dynamic-partition-overwrite of
-    *      `outDir/batch_id=N` (the [[writeBatchIdempotent]] recipe);
-    *   4. survivors' fingerprints → dynamic-partition-overwrite of
-    *      `fpDir/batch_id=N`.
-    *
-    * Any crash point replays to the identical end state: the store
-    * filter makes step 2 deterministic across attempts, and steps 3–4
-    * rewrite rather than append. At-least-once delivery + idempotent
-    * replay = effectively exactly-once, end to end INCLUDING the dedup
-    * state — the piece [[startIdempotentParquetSink]] alone doesn't give.
-    *
-    * Scale note: the batch_id-partitioned fp store trades probe cost for
-    * replay safety — each batch anti-joins the whole store (16 bytes per
-    * unique doc; broadcast while small, shuffle join beyond). A long-run
-    * pipeline periodically [[foldFingerprintStore]]s it into the bucketed
-    * [[graft.operators.Dedup.buildFingerprintIndex]] form and restarts
-    * the store (near-)empty, probing BOTH until the next fold: pass the
-    * index table as `indexTable` and the screen becomes store ∪ index —
-    * correct before the first fold (empty index), during a fold (a fp
-    * may transiently be in both; the anti-join doesn't care), and after
-    * (store holds only unfolded batches). The table must EXIST when
-    * `indexTable` is set (bootstrap via
-    * [[graft.operators.Dedup.ensureFingerprintIndex]]) so a mistyped
-    * name fails loudly instead of silently skipping the index screen.
+  /** Exactly-once parquet sink for non-transactional targets: each
+    * micro-batch overwrites ITS OWN batch_id partition
+    * ([[graft.sources.PersistedIndex.writeBatchIdempotent]]) — a replay
+    * rewrites the same partition with the same rows instead of
+    * appending duplicates.
     */
+  def startIdempotentParquetSink(df: DataFrame, path: String,
+      checkpoint: String): StreamingQuery =
+    startIngest(df, checkpoint)(writeBatchIdempotent(_, _, path))
+
   /** The in-batch self-dedup shared by every ingest tier: lowest doc_id
     * per normalized fingerprint (the [[graft.operators.Dedup.exactDedup]]
     * convention), inlined schema-agnostically so any doc_id+text frame
@@ -436,19 +400,41 @@ object Streams {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** `table` as the catalog holds it NOW, for the ingest screens. A
-    * foreachBatch body runs in the stream's own session, whose relation
-    * cache keeps the table's file listing from the batch that first
-    * read it; an index fold (or bloom rewrite) between batches would
-    * then stay invisible to every later batch, and the fingerprints the
-    * fold moved from the store into the index would stop screening
-    * (duplicates land). One re-listing per batch per probed table.
+  /** One micro-batch of [[startDedupedIngest]], exposed so tests and
+    * manual backfills invoke exactly what a replayed batch runs. Four
+    * steps, each idempotent for a fixed `batchId`:
+    *
+    *   1. in-batch self-dedup ([[selfDedupBatch]]);
+    *   2. screen against the fingerprint STORE, ignoring rows this batch
+    *      itself wrote ([[graft.sources.PersistedIndex.readStore]]) — a
+    *      replayed batch must see the store as it was before its first
+    *      attempt, or a crash between the fp write and the checkpoint
+    *      commit would make the replay drop its own docs and overwrite
+    *      the output partition with nothing (data loss);
+    *   3. survivors → dynamic-partition-overwrite of `outDir/batch_id=N`;
+    *   4. survivors' fingerprints → dynamic-partition-overwrite of
+    *      `fpDir/batch_id=N`.
+    *
+    * Any crash point replays to the identical end state: the store
+    * filter makes step 2 deterministic across attempts, and steps 3–4
+    * rewrite rather than append. At-least-once delivery + idempotent
+    * replay = effectively exactly-once, end to end INCLUDING the dedup
+    * state — the piece [[startIdempotentParquetSink]] alone doesn't give.
+    *
+    * Scale note: the batch_id-partitioned fp store trades probe cost for
+    * replay safety — each batch anti-joins the whole store (16 bytes per
+    * unique doc; broadcast while small, shuffle join beyond). A long-run
+    * pipeline periodically [[foldFingerprintStore]]s it into the bucketed
+    * [[graft.operators.Dedup.fingerprintIndex]] table and restarts the
+    * store (near-)empty, probing BOTH until the next fold: pass the
+    * index table as `indexTable` and the screen becomes store ∪ index —
+    * correct before the first fold (empty index), during a fold (a fp
+    * may transiently be in both; the anti-join doesn't care), and after
+    * (store holds only unfolded batches). The table must EXIST when
+    * `indexTable` is set (bootstrap via
+    * [[graft.operators.Dedup.ensureFingerprintIndex]]) so a mistyped
+    * name fails loudly instead of silently skipping the index screen.
     */
-  private def currentTable(spark: SparkSession, table: String): DataFrame = {
-    spark.catalog.refreshTable(table)
-    spark.table(table)
-  }
-
   def dedupIngestBatch(batch: DataFrame, batchId: Long, outDir: String,
       fpDir: String, indexTable: Option[String] = None,
       bloomTable: Option[String] = None): Unit = {
@@ -456,19 +442,11 @@ object Streams {
       "dedupIngestBatch: bloomTable is a tier over the index screen — " +
         "it requires indexTable")
     val spark = batch.sparkSession
-    import spark.implicits._
     val fpCol = "__fp_ingest"
+    val fps = graft.operators.Dedup.fingerprintIndex()
     val self = selfDedupBatch(batch, fpCol, "dedupIngestBatch")
-    val store =
-      try spark.read.parquet(fpDir)
-        .filter(col("batch_id") =!= batchId)
-        .select(col("fp").as(fpCol))
-      catch {
-        // first batch: no store yet
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" =>
-          Seq.empty[String].toDF(fpCol)
-      }
+    val store = readStore(spark, fpDir, batchId, fps.schema)
+      .select(col("fp").as(fpCol))
     // probe-both window: folded history lives in the index table, the
     // store holds only batches since the last fold. With a bloom tier,
     // rows the INDEX's bloom rules out skip the index anti-join (the
@@ -479,10 +457,8 @@ object Streams {
     val afterIndex = indexTable match {
       case None => self
       case Some(t) =>
-        require(spark.catalog.tableExists(t),
-          s"dedupIngestBatch: index table $t does not exist — bootstrap " +
-            "it with Dedup.ensureFingerprintIndex at pipeline setup")
-        val idx = currentTable(spark, t).select(col("fp").as(fpCol))
+        val idx = fps.current(spark, t, "dedupIngestBatch")
+          .select(col("fp").as(fpCol))
         bloomTable match {
           case None => self.join(idx, Seq(fpCol), "left_anti")
           case Some(bt) =>
@@ -502,8 +478,10 @@ object Streams {
               s"dedupIngestBatch: index $t is not paired to bloom $bt " +
                 "(missing or superseded pairing marker) — the fold " +
                 "would not maintain this bloom, breaking bloom ⊇ index")
-            val bytes =
-              currentTable(spark, bt).head().getAs[Array[Byte]]("bloom")
+            // re-listed like the index (see PersistedIndex.current): a
+            // fold rewrites the bloom between batches
+            spark.catalog.refreshTable(bt)
+            val bytes = spark.table(bt).head().getAs[Array[Byte]]("bloom")
             if (bytes == null) // legacy NULL cell: nothing recorded —
               self.join(idx, Seq(fpCol), "left_anti") // full exact screen
             else {
@@ -515,12 +493,8 @@ object Streams {
     }
     val survivors = afterIndex.join(store, Seq(fpCol), "left_anti")
     writeBatchIdempotent(survivors.drop(fpCol), batchId, outDir)
-    survivors.select(col(fpCol).as("fp"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(fpDir)
+    writeBatchIdempotent(survivors.select(col(fpCol).as("fp")), batchId,
+      fpDir)
   }
 
   /** The production ingest loop: per micro-batch self-dedup, screen
@@ -528,18 +502,14 @@ object Streams {
     * in `outDir`, grow the fingerprint store — the streaming composition
     * of the exact-dedup operators over a document stream with `doc_id`
     * and `text` columns. See [[dedupIngestBatch]] for the replay-safety
-    * argument.
+    * argument; every other tier launches through [[startIngest]] the
+    * same way.
     */
   def startDedupedIngest(docs: DataFrame, outDir: String, fpDir: String,
       checkpoint: String, indexTable: Option[String] = None,
       bloomTable: Option[String] = None): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        dedupIngestBatch(b, id, outDir, fpDir, indexTable, bloomTable)
-      }
-      .start()
+    startIngest(docs, checkpoint)(
+      dedupIngestBatch(_, _, outDir, fpDir, indexTable, bloomTable))
 
   /** [[dedupIngestBatch]]'s NEAR-dup sibling: the screen is a simhash
     * chunk join (Hamming ≤ `maxHamming`) against the batch_id-
@@ -556,67 +526,34 @@ object Streams {
     * window); two DISTINCT near-dup docs arriving in the SAME batch
     * both survive — in-batch near-dedup is [[graft.operators.Dedup
     * .simhashDupPairs]]'s job upstream, while this operator's contract
-    * is the cross-batch screen. The store holds 4 chunk rows per landed
-    * doc (~50 bytes each); [[foldSimhashStore]] folds it into the
-    * bucketed [[graft.operators.Dedup.buildSimhashIndex]] form
-    * periodically, exactly like the fingerprint store — pass that table
-    * as `indexTable` for the probe-both screen (must exist; bootstrap
-    * via [[graft.operators.Dedup.ensureSimhashIndex]]).
+    * is the cross-batch screen. The store holds 4 NATIVE-signature chunk
+    * rows per landed doc (~50 bytes each); the
+    * [[graft.operators.Dedup.simhashIndex]] fold moves it into the
+    * bucketed index periodically, exactly like the fingerprint store —
+    * pass that table as `indexTable` for the probe-both screen (it must
+    * exist and be a native, non-portable index; the spec guard refuses
+    * a portable one, whose signatures would never match).
     */
   def nearDupIngestBatch(batch: DataFrame, batchId: Long, outDir: String,
       sigDir: String, maxHamming: Int = 3,
       indexTable: Option[String] = None): Unit = {
     val spark = batch.sparkSession
+    val sigs = graft.operators.Dedup.simhashIndex()
     val fpCol = "__fp_ingest"
     val self = selfDedupBatch(batch, fpCol, "nearDupIngestBatch").drop(fpCol)
     val chunks = graft.operators.Dedup.simhashChunkTable(self)
-    val store =
-      try spark.read.parquet(sigDir)
-        .filter(col("batch_id") =!= batchId)
-        .select(col("chunk_idx"), col("chunk"),
-          col("simhash").as("__sig_store"))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" =>
-          import spark.implicits._
-          Seq.empty[(Int, Long, Long)]
-            .toDF("chunk_idx", "chunk", "__sig_store")
-      }
-    // probe-both window: folded signatures live in the index table
-    val screen = indexTable.map { t =>
-      require(spark.catalog.tableExists(t),
-        s"nearDupIngestBatch: index table $t does not exist — bootstrap " +
-          "it with Dedup.ensureSimhashIndex at pipeline setup")
-      store.union(currentTable(spark, t).select(col("chunk_idx"),
-        col("chunk"), col("simhash").as("__sig_store")))
-    }.getOrElse(store)
+    val screen = sigs.priorRows(readStore(spark, sigDir, batchId,
+        sigs.schema), indexTable, "nearDupIngestBatch")
+      .select(col("chunk_idx"), col("chunk"), col("simhash").as("__sig_store"))
     val hit = chunks.join(screen, Seq("chunk_idx", "chunk"))
       .filter(bit_count(col("simhash").bitwiseXOR(col("__sig_store")))
         .cast("int") <= maxHamming)
       .select("doc_id").distinct()
     val survivors = self.join(hit, Seq("doc_id"), "left_anti")
     writeBatchIdempotent(survivors, batchId, outDir)
-    chunks.join(survivors.select("doc_id"), Seq("doc_id"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(sigDir)
+    writeBatchIdempotent(chunks.join(survivors.select("doc_id"),
+      Seq("doc_id")), batchId, sigDir)
   }
-
-  /** Streaming near-dup ingest — [[startDedupedIngest]] with the simhash
-    * screen of [[nearDupIngestBatch]].
-    */
-  def startNearDupIngest(docs: DataFrame, outDir: String, sigDir: String,
-      checkpoint: String, maxHamming: Int = 3,
-      indexTable: Option[String] = None): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        nearDupIngestBatch(b, id, outDir, sigDir, maxHamming, indexTable)
-      }
-      .start()
 
   /** The MINHASH-tier sibling of [[nearDupIngestBatch]]: the screen is
     * the banded MinHash candidate join of
@@ -644,35 +581,22 @@ object Streams {
     * `outDir`'s earlier partitions (survivors' text lands there by
     * construction); index hits read it from the `indexCorpus._2` frame —
     * the documents backing the `indexCorpus._1` table (the
-    * [[graft.operators.Dedup.probeNearDupIndex]] contract). The fold
-    * discipline is [[foldBandStore]], probing BOTH until the next fold.
+    * [[graft.operators.Dedup.probeNearDupIndex]] contract), whose spec
+    * must match this call's (ngram, k, bands). The fold discipline is
+    * the [[graft.operators.Dedup.nearDupIndex]] fold, probing BOTH until
+    * the next fold.
     */
   def minhashIngestBatch(batch: DataFrame, batchId: Long, outDir: String,
       bandDir: String, indexCorpus: Option[(String, DataFrame)] = None,
       threshold: Double = 0.7, ngram: Int = 3, k: Int = 64,
       bands: Int = 16, maxBucket: Int = 1000): Unit = {
     val spark = batch.sparkSession
-    import spark.implicits._
+    val bandIdx = graft.operators.Dedup.nearDupIndex(ngram, k, bands)
     val fpCol = "__fp_ingest"
     val self = selfDedupBatch(batch, fpCol, "minhashIngestBatch").drop(fpCol)
     val myBands = graft.operators.Dedup.bandBucketTable(self, ngram, k, bands)
-    def emptyBands = Seq.empty[(Long, Int, Long)]
-      .toDF("doc_id", "band_idx", "band_hash")
-    val storeBands =
-      try spark.read.parquet(bandDir)
-        .filter(col("batch_id") =!= batchId)
-        .select("doc_id", "band_idx", "band_hash")
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" => emptyBands
-      }
-    val priorBands = indexCorpus.map { case (t, _) =>
-      require(spark.catalog.tableExists(t),
-        s"minhashIngestBatch: index table $t does not exist — bootstrap " +
-          "it with Dedup.ensureNearDupIndex at pipeline setup")
-      storeBands.union(
-        currentTable(spark, t).select("doc_id", "band_idx", "band_hash"))
-    }.getOrElse(storeBands)
+    val priorBands = bandIdx.priorRows(readStore(spark, bandDir, batchId,
+      bandIdx.schema), indexCorpus.map(_._1), "minhashIngestBatch")
     // probeNearDupIndex's candidate shape: probe only the batch's bucket
     // set, bound the PRIOR-side bucket size (the probed slice holds every
     // prior row of a probed bucket, so the count is the true bucket size)
@@ -690,15 +614,9 @@ object Streams {
     // exact-Jaccard verify over the text of matched PRIOR docs only:
     // store hits live in outDir's earlier partitions, index hits in the
     // caller-supplied corpus frame
-    def emptyDocs = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    val landedPrior =
-      try spark.read.parquet(outDir)
-        .filter(col("batch_id") =!= batchId)
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" => emptyDocs
-      }
+    val landedPrior = readStore(spark, outDir, batchId,
+        StructType.fromDDL("doc_id BIGINT, text STRING"))
+      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val priorDocs = indexCorpus.map { case (_, corpus) =>
       landedPrior.unionByName(
         corpus.select(col("doc_id").cast("long").as("doc_id"), col("text")))
@@ -717,214 +635,83 @@ object Streams {
       .select("new_id").distinct().withColumnRenamed("new_id", "doc_id")
     val survivors = self.join(hit, Seq("doc_id"), "left_anti")
     writeBatchIdempotent(survivors, batchId, outDir)
-    myBands.join(survivors.select("doc_id"), Seq("doc_id"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(bandDir)
+    writeBatchIdempotent(myBands.join(survivors.select("doc_id"),
+      Seq("doc_id")), batchId, bandDir)
   }
 
-  /** Streaming minhash-tier ingest — [[startDedupedIngest]] with the
-    * banded-Jaccard screen of [[minhashIngestBatch]].
-    */
-  def startMinhashIngest(docs: DataFrame, outDir: String, bandDir: String,
-      checkpoint: String, indexCorpus: Option[(String, DataFrame)] = None,
-      threshold: Double = 0.7): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        minhashIngestBatch(b, id, outDir, bandDir, indexCorpus, threshold)
-      }
-      .start()
-
-  /** The batch_id partitions currently in a store directory, ascending. */
-  private def storeBatchIds(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Seq[Long] =
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toSeq.filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.startsWith("batch_id="))
-      .map(_.stripPrefix("batch_id=").toLong).sorted
-
-  /** GC a fold's superseded store partitions, one [[graft.core
-    * .CrashHook]] site per delete — the fold legs' durable mutations
-    * (the index appends already fire through the Sinks funnels; these
-    * raw directory deletes were the one fold write OUTSIDE the swept
-    * funnels, VERDICT r15 #3). A crash between deletes leaves some
-    * folded partitions on disk — rows the index already holds; the
-    * probe-both discipline stays correct (duplicate candidates dedup
-    * in the probes' distinct/anti-join) and the next fold's re-run
-    * deletes the leftovers.
-    */
-  private def deleteFoldedPartitions(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, foldable: Seq[Long]): Unit =
-    foldable.foreach { id =>
-      fs.delete(new org.apache.hadoop.fs.Path(dir, s"batch_id=$id"), true)
-      graft.core.CrashHook.fire(s"foldDelete:$dir/batch_id=$id")
-    }
-
   /** Fold the deduped ingest's batch_id-partitioned fingerprint store
-    * into the bucketed [[graft.operators.Dedup.buildFingerprintIndex]]
-    * table form — the maintenance pass that keeps a long-running ingest
-    * from accumulating one tiny store partition per micro-batch (probe
-    * cost otherwise creeps linearly with stream lifetime). Returns the
-    * batch ids folded; the store is left holding ONLY the newest batch
-    * partition, and the ingest keeps probing store ∪ index
-    * ([[dedupIngestBatch]]'s `indexTable`) so the screen set is
-    * unchanged by a fold, at any point of a fold.
+    * into the bucketed [[graft.operators.Dedup.fingerprintIndex]] table
+    * — the maintenance pass that keeps a long-running ingest from
+    * accumulating one tiny store partition per micro-batch (probe cost
+    * otherwise creeps linearly with stream lifetime). Returns the batch
+    * ids folded; replay-window and crash-mid-fold arguments are
+    * [[graft.sources.PersistedIndex.foldStore]]'s.
     *
-    * Replay-window safety — why the NEWEST store partition never folds:
-    * Structured Streaming runs batches serially, so at most the latest
-    * batch can be uncommitted (and hence re-delivered after a crash).
-    * [[dedupIngestBatch]] makes a replay ignore the store rows its own
-    * first attempt wrote (`batch_id =!= batchId`) — but it cannot know
-    * which INDEX rows came from itself, so folding a replayable batch's
-    * fingerprints would make its replay screen out its own documents
-    * and overwrite the output partition with nothing (data loss). Every
-    * batch below the store's max is committed, therefore foldable; the
-    * max itself is kept. (The probe-both screen makes keeping it free.)
-    *
-    * Crash-mid-fold idempotence: the append happens before the store
-    * cleanup, and [[graft.operators.Dedup.appendFingerprints]]
-    * anti-joins the index before appending — so a fold that crashed
-    * between the two steps re-runs to the identical end state (the
-    * re-append is a no-op, the cleanup deletes what remains), and the
-    * probe-both screen is correct in the interim (fingerprints
-    * transiently in both store and index screen identically).
-    *
-    * Run it from the ingest's own operational loop (between batches, or
-    * while the stream is paused): the fold deletes store partitions,
-    * and a concurrently-planned ingest screen that already listed those
-    * files would fail that attempt loudly (and recover by replay) — the
-    * single-writer discipline every compaction job shares.
+    * Bloom pairing: an index marked as bloom-tiered must ALWAYS fold
+    * through its bloom, and the bloom grows BEFORE the index.
     */
   def foldFingerprintStore(spark: SparkSession, fpDir: String,
       table: String, buckets: Int = 32,
-      bloomTable: Option[String] = None): Seq[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(fpDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = storeBatchIds(fs, dir)
-    if (parts.size <= 1) return Nil // nothing safely foldable
-    val keep = parts.max
-    val foldable = parts.filter(_ != keep)
-    // pairing guard: an index marked as bloom-tiered must ALWAYS fold
-    // through its bloom — one fold without it grows the index past the
-    // bloom, after which already-indexed docs pass the !might_contain
-    // fast path at ingest and land as silent duplicates. Bootstrapping
-    // an EMPTY bloom is only ever sound while the index itself is
-    // empty: resurrecting a missing bloom over a non-empty index (or
-    // silently repointing the marker at a typo'd name) would fabricate
-    // exactly the bloom ⊂ index state the guard exists to prevent, so
-    // every such case throws instead.
-    graft.operators.Dedup.ensureFingerprintIndex(spark, table, buckets)
-    val paired = graft.operators.Dedup.pairedBloom(spark, table)
-    bloomTable match {
-      case None =>
-        require(paired.isEmpty,
-          s"foldFingerprintStore: index $table is paired to bloom " +
-            s"${paired.getOrElse("")} — folding past it breaks " +
-            "bloom ⊇ index (silent duplicate landings); pass the " +
-            "paired bloomTable")
-      case Some(bt) if paired.contains(bt) =>
-        require(spark.catalog.tableExists(bt),
-          s"foldFingerprintStore: paired bloom $bt is missing — an " +
-            "empty bootstrap over a non-empty index would break " +
-            "bloom ⊇ index; rebuild it with buildBloomIndex over the " +
-            "indexed corpus")
-        require(graft.operators.Dedup.bloomSpecFpTable(
-            graft.sources.IndexSpec.readRequired(spark, bt), bt) == table,
-          s"foldFingerprintStore: bloom $bt's spec names a different " +
-            s"index than $table — crossed pairing state; rebuild")
-      case Some(bt) if paired.isEmpty =>
-        // fresh pairing: sound only while the index holds nothing yet
-        require(spark.table(table).isEmpty,
-          s"foldFingerprintStore: cannot pair bloom $bt to the " +
-            s"non-empty index $table mid-flight — the bootstrap bloom " +
-            "would not cover the already-indexed fingerprints; " +
-            "rebuild with buildBloomIndex over the indexed corpus " +
-            "(which records the pairing)")
-        graft.operators.Dedup.ensureBloomIndex(spark, bt, table)
-        require(graft.operators.Dedup.pairedBloom(spark, table)
-            .contains(bt),
-          s"foldFingerprintStore: bloom $bt exists but is not paired " +
-            s"to $table (stale or missing marker) — rebuild the bloom " +
-            "with buildBloomIndex")
-      case Some(bt) =>
-        throw new IllegalArgumentException(
-          s"foldFingerprintStore: index $table is paired to bloom " +
-            s"${paired.get}, not $bt — folding through the wrong bloom " +
-            "leaves the paired one behind; pass the paired bloomTable")
-    }
-    // batch_id < keep partition-prunes the read to exactly the snapshot
-    // taken above: batch ids only grow, so a concurrent stream write
-    // can never land below `keep`
-    val folded = spark.read.parquet(fpDir).filter(col("batch_id") < keep)
-      .select("fp")
-    // bloom BEFORE index: the ingest's bloom tier treats a bloom miss
-    // as proof of index absence, so the bloom must never lag the index.
-    // A crash between the two appends leaves bloom ⊇ index (harmless —
-    // the extra fps just route through the residue anti-join); the
-    // re-run re-ORs and re-anti-joins to the identical end state.
-    bloomTable.foreach(bt =>
-      graft.operators.Dedup.appendBloomFingerprints(folded, bt))
-    graft.operators.Dedup.appendFingerprints(folded, table)
-    deleteFoldedPartitions(fs, dir, foldable)
-    foldable
-  }
-
-  /** [[foldFingerprintStore]]'s near-dup twin: fold the signature
-    * store's batch partitions into the bucketed
-    * [[graft.operators.Dedup.buildSimhashIndex]] chunk-table form.
-    * Identical newest-partition-kept replay argument and identical
-    * crash-mid-fold idempotence ([[graft.operators.Dedup
-    * .appendSimhashChunks]] anti-joins on doc_id before appending).
-    */
-  def foldSimhashStore(spark: SparkSession, sigDir: String, table: String,
-      portable: Boolean = false, buckets: Int = 32): Seq[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(sigDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = storeBatchIds(fs, dir)
-    if (parts.size <= 1) return Nil
-    val keep = parts.max
-    val foldable = parts.filter(_ != keep)
-    graft.operators.Dedup.ensureSimhashIndex(spark, table, portable, buckets)
-    graft.operators.Dedup.appendSimhashChunks(
-      spark.read.parquet(sigDir).filter(col("batch_id") < keep)
-        .select("doc_id", "simhash", "chunk_idx", "chunk"),
-      table, portable)
-    deleteFoldedPartitions(fs, dir, foldable)
-    foldable
-  }
-
-  /** [[foldFingerprintStore]]'s minhash-tier twin: fold the band store's
-    * batch partitions into the bucketed
-    * [[graft.operators.Dedup.buildNearDupIndex]] band-table form.
-    * Identical newest-partition-kept replay argument and identical
-    * crash-mid-fold idempotence ([[graft.operators.Dedup.appendBandRows]]
-    * anti-joins on doc_id before appending). The signature parameters
-    * must be the ingest's — they are asserted against the index spec so
-    * a mismatched fold fails loudly instead of planting unmatchable
-    * band hashes.
-    */
-  def foldBandStore(spark: SparkSession, bandDir: String, table: String,
-      ngram: Int = 3, k: Int = 64, bands: Int = 16,
-      buckets: Int = 32): Seq[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(bandDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = storeBatchIds(fs, dir)
-    if (parts.size <= 1) return Nil
-    val keep = parts.max
-    val foldable = parts.filter(_ != keep)
-    graft.operators.Dedup.ensureNearDupIndex(spark, table, ngram, k,
-      bands, buckets)
-    graft.operators.Dedup.appendBandRows(
-      spark.read.parquet(bandDir).filter(col("batch_id") < keep)
-        .select("doc_id", "band_idx", "band_hash"),
-      table, ngram, k, bands)
-    deleteFoldedPartitions(fs, dir, foldable)
-    foldable
-  }
+      bloomTable: Option[String] = None): Seq[Long] =
+    graft.operators.Dedup.fingerprintIndex(buckets).copy(
+      fromStore = (_, folded) => {
+        // pairing guard: one fold without the bloom grows the index past
+        // it, after which already-indexed docs pass the !might_contain
+        // fast path at ingest and land as silent duplicates.
+        // Bootstrapping an EMPTY bloom is only ever sound while the
+        // index itself is empty: resurrecting a missing bloom over a
+        // non-empty index (or silently repointing the marker at a
+        // typo'd name) would fabricate exactly the bloom ⊂ index state
+        // the guard exists to prevent, so every such case throws.
+        val paired = graft.operators.Dedup.pairedBloom(spark, table)
+        bloomTable match {
+          case None =>
+            require(paired.isEmpty,
+              s"foldFingerprintStore: index $table is paired to bloom " +
+                s"${paired.getOrElse("")} — folding past it breaks " +
+                "bloom ⊇ index (silent duplicate landings); pass the " +
+                "paired bloomTable")
+          case Some(bt) if paired.contains(bt) =>
+            require(spark.catalog.tableExists(bt),
+              s"foldFingerprintStore: paired bloom $bt is missing — an " +
+                "empty bootstrap over a non-empty index would break " +
+                "bloom ⊇ index; rebuild it with buildBloomIndex over the " +
+                "indexed corpus")
+            require(graft.operators.Dedup.bloomSpecFpTable(
+                graft.sources.IndexSpec.readRequired(spark, bt), bt) == table,
+              s"foldFingerprintStore: bloom $bt's spec names a different " +
+                s"index than $table — crossed pairing state; rebuild")
+          case Some(bt) if paired.isEmpty =>
+            // fresh pairing: sound only while the index holds nothing yet
+            require(spark.table(table).isEmpty,
+              s"foldFingerprintStore: cannot pair bloom $bt to the " +
+                s"non-empty index $table mid-flight — the bootstrap bloom " +
+                "would not cover the already-indexed fingerprints; " +
+                "rebuild with buildBloomIndex over the indexed corpus " +
+                "(which records the pairing)")
+            graft.operators.Dedup.ensureBloomIndex(spark, bt, table)
+            require(graft.operators.Dedup.pairedBloom(spark, table)
+                .contains(bt),
+              s"foldFingerprintStore: bloom $bt exists but is not paired " +
+                s"to $table (stale or missing marker) — rebuild the bloom " +
+                "with buildBloomIndex")
+          case Some(bt) =>
+            throw new IllegalArgumentException(
+              s"foldFingerprintStore: index $table is paired to bloom " +
+                s"${paired.get}, not $bt — folding through the wrong " +
+                "bloom leaves the paired one behind; pass the paired " +
+                "bloomTable")
+        }
+        // bloom BEFORE index: the ingest's bloom tier treats a bloom
+        // miss as proof of index absence, so the bloom must never lag
+        // the index. A crash between the two appends leaves bloom ⊇
+        // index (harmless — the extra fps just route through the residue
+        // anti-join); the re-run re-ORs and re-anti-joins to the
+        // identical end state.
+        bloomTable.foreach(bt =>
+          graft.operators.Dedup.appendBloomFingerprints(folded, bt))
+        folded
+      }).foldStore(spark, fpDir, table)
 
   /** The SEMANTIC tier of the deduped ingest family — the fourth
     * modality beside exact ([[dedupIngestBatch]]), simhash
@@ -947,64 +734,29 @@ object Streams {
     * replay argument is [[dedupIngestBatch]]'s verbatim: the store read
     * excludes the batch's own prior attempt, survivor choice is
     * deterministic, both writes are per-batch dynamic overwrites.
-    * Fold discipline: [[foldVectorStore]], probing BOTH until the next
-    * fold.
+    * Fold discipline: the [[graft.operators.Similarity.ivfIndex]] fold
+    * (with the same centroid table), probing BOTH until the next fold.
     */
   def semanticIngestBatch(batch: DataFrame, batchId: Long, outDir: String,
       vecDir: String, centroidTable: String, threshold: Double = 0.95,
       nprobe: Int = 1, indexTable: Option[String] = None): Unit = {
     val spark = batch.sparkSession
-    import spark.implicits._
+    val vecs = graft.operators.Similarity.ivfIndex()
     val cents = graft.operators.Similarity.cellsOf(spark, centroidTable)
     val byEmb = org.apache.spark.sql.expressions.Window
       .partitionBy(col("embedding")).orderBy(col("vec_id"))
     val self = batch.withColumn("__rn", row_number().over(byEmb))
       .filter(col("__rn") === 1).drop("__rn")
-    val store =
-      try spark.read.parquet(vecDir)
-        .filter(col("batch_id") =!= batchId)
-        .select("vec_id", "embedding", "cell")
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" =>
-          Seq.empty[(Long, Seq[Float], Int)]
-            .toDF("vec_id", "embedding", "cell")
-      }
-    val prior = indexTable.map { t =>
-      require(spark.catalog.tableExists(t),
-        s"semanticIngestBatch: index table $t does not exist — bootstrap " +
-          "it with Similarity.ensureIvfIndex at pipeline setup")
-      store.unionByName(
-        currentTable(spark, t).select("vec_id", "embedding", "cell"))
-    }.getOrElse(store)
+    val prior = vecs.priorRows(readStore(spark, vecDir, batchId,
+      vecs.schema), indexTable, "semanticIngestBatch")
     val hits = graft.operators.Similarity.semanticHits(
       self, prior, cents, threshold, nprobe)
     val survivors = self.join(hits, Seq("vec_id"), "left_anti")
     writeBatchIdempotent(survivors, batchId, outDir)
-    graft.operators.Similarity.assignCellsFrame(
-        survivors.select(col("vec_id"), col("embedding")), cents)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(vecDir)
+    writeBatchIdempotent(graft.operators.Similarity.assignCellsFrame(
+      survivors.select(col("vec_id"), col("embedding")), cents),
+      batchId, vecDir)
   }
-
-  /** Streaming semantic ingest — [[startDedupedIngest]] with the
-    * cell-pruned cosine screen of [[semanticIngestBatch]].
-    */
-  def startSemanticIngest(vectors: DataFrame, outDir: String,
-      vecDir: String, centroidTable: String, checkpoint: String,
-      threshold: Double = 0.95, nprobe: Int = 1,
-      indexTable: Option[String] = None): StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        semanticIngestBatch(b, id, outDir, vecDir, centroidTable,
-          threshold, nprobe, indexTable)
-      }
-      .start()
 
   /** The WINNOWING tier of the deduped ingest family — the passage-
     * level sixth modality beside exact / bloom / simhash / minhash /
@@ -1027,45 +779,34 @@ object Streams {
     * [[graft.operators.Dedup.winnowingMatches]]'s job upstream); store
     * and output reads exclude the batch's own prior attempt; survivors
     * and their fingerprints land via dynamic partition overwrite. Fold
-    * discipline: [[foldWinnowStore]], probing BOTH until the next fold.
+    * discipline: the [[graft.operators.Dedup.winnowIndex]] fold, probing
+    * BOTH until the next fold. `k`/`w` must match the index the stream
+    * probes (asserted per batch against its spec).
     */
   def winnowIngestBatch(batch: DataFrame, batchId: Long, outDir: String,
       fpDir: String, indexTable: Option[String] = None,
       minShared: Int = 2, maxDf: Int = 64, k: Int = 4,
       w: Int = 5): Unit = {
     val spark = batch.sparkSession
-    import spark.implicits._
     // the store's fingerprints are only meaningful at ONE winnowing
     // geometry: assert before reading (a restart at different (k, w)
     // would join nothing against the stored hashes and lose the whole
     // screen silently); the stamp itself lands after the write below
-    assertWinnowGeometry(spark, fpDir, k, w, "winnowIngestBatch",
-      stamp = false, ownBatch = Some(batchId))
+    graft.operators.Dedup.assertWinnowGeometry(spark, fpDir, k, w,
+      "winnowIngestBatch", stamp = false, ownBatch = Some(batchId))
     val fpCol = "__fp_ingest"
     val self = selfDedupBatch(batch, fpCol, "winnowIngestBatch").drop(fpCol)
     val myFps = graft.operators.Dedup
       .winnowingFingerprints(self, k, w)
       .select("doc_id", "fp").distinct()
-    def emptyFps = Seq.empty[(Long, Long)].toDF("doc_id", "fp")
-    val storeFps =
-      try spark.read.parquet(fpDir)
-        .filter(col("batch_id") =!= batchId)
-        .select("doc_id", "fp")
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" => emptyFps
-      }
-    val priorFps = indexTable.map { t =>
-      require(spark.catalog.tableExists(t),
-        s"winnowIngestBatch: index table $t does not exist — bootstrap " +
-          "it with Dedup.ensureWinnowIndex at pipeline setup")
-      // same guard probeWinnowIndex applies: an index built at a
-      // different (k, w) holds hashes this batch's fingerprints can
-      // never join — the screen would silently vanish
-      graft.operators.Dedup.requireWinnowSpec(spark, t, k, w)
-      storeFps.unionByName(currentTable(spark, t)
-        .select(col("corpus_id").as("doc_id"), col("fp")))
-    }.getOrElse(storeFps)
+    // the index's spec guard is probeWinnowIndex's: an index built at a
+    // different (k, w) holds hashes this batch's fingerprints can never
+    // join — the screen would silently vanish
+    val priorFps = graft.operators.Dedup.winnowIndex(k, w).priorRows(
+      readStore(spark, fpDir, batchId,
+        StructType.fromDDL("doc_id BIGINT, fp BIGINT")),
+      indexTable, "winnowIngestBatch",
+      _.withColumnRenamed("corpus_id", "doc_id"))
     // probeWinnowIndex's screen verbatim: dedupe (replayed appends may
     // duplicate posting rows), boilerplate df cut from the matched rows
     // themselves, pair hit at >= minShared distinct shared hashes
@@ -1084,138 +825,10 @@ object Streams {
       .select(col("new_id").as("doc_id")).distinct()
     val survivors = self.join(dropped, Seq("doc_id"), "left_anti")
     writeBatchIdempotent(survivors, batchId, outDir)
-    myFps.join(survivors.select("doc_id"), Seq("doc_id"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(fpDir)
-    assertWinnowGeometry(spark, fpDir, k, w, "winnowIngestBatch",
-      stamp = true, ownBatch = Some(batchId))
-  }
-
-  /** Streaming winnowing-tier ingest — [[startDedupedIngest]] with the
-    * shared-passage screen of [[winnowIngestBatch]]. `k`/`w` must match
-    * the index the stream probes (asserted per batch against its spec).
-    */
-  def startWinnowIngest(docs: DataFrame, outDir: String, fpDir: String,
-      checkpoint: String, indexTable: Option[String] = None,
-      minShared: Int = 2, maxDf: Int = 64, k: Int = 4,
-      w: Int = 5): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        winnowIngestBatch(b, id, outDir, fpDir, indexTable,
-          minShared, maxDf, k, w)
-      }
-      .start()
-
-  /** The fingerprint store's geometry stamp: a `_winnow_k<k>_w<w>`
-    * marker created on first use and asserted ever after, by both the
-    * ingest and the fold — fingerprints winnowed at one (k, w) are
-    * permanently unmatchable under another, so a geometry change must
-    * be a loud restart with a fresh store, never a silent screen loss.
-    */
-  private def assertWinnowGeometry(spark: SparkSession, fpDir: String,
-      k: Int, w: Int, caller: String, stamp: Boolean,
-      ownBatch: Option[Long] = None): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(fpDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mine = s"_winnow_k${k}_w$w"
-    // a store that doesn't exist yet has no geometry to protect — and
-    // must NOT be created here, or the first batch's empty-store read
-    // would see an existing-but-empty directory instead of the
-    // PATH_NOT_FOUND its bootstrap path handles
-    if (!fs.exists(dir)) return
-    val markers = fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("_winnow_k"))
-    if (markers.isEmpty) {
-      // marker-less rows have UNPROVEN geometry. The only partition a
-      // caller may vouch for is the one it itself (re)writes at this
-      // (k, w) — the ingest's own batch, which dynamic partition
-      // overwrite replaces wholesale on replay, so a crash between its
-      // write and its stamp stays recoverable. Anything else (a
-      // pre-marker-era store, or a crash at a DIFFERENT geometry
-      // followed by other batches) must refuse rather than let the
-      // caller stamp its own (k, w) over foreign hashes, which would
-      // fold/join permanently unmatchable fingerprints — the exact
-      // silent screen loss the marker exists to prevent.
-      val foreign = storeBatchIds(fs, dir)
-        .filterNot(id => ownBatch.contains(id))
-      require(foreign.isEmpty,
-        s"$caller: fingerprint store $fpDir has batch partitions " +
-          s"${foreign.toSeq.sorted.mkString(",")} but no geometry " +
-          s"marker — refusing to assume they were winnowed at $mine; " +
-          "re-ingest into a fresh store, or restore the marker by " +
-          "hand if the rows' (k, w) is known")
-      if (stamp)
-        fs.create(new org.apache.hadoop.fs.Path(dir, mine), true).close()
-    } else require(markers == Seq(mine),
-      s"$caller: fingerprint store $fpDir was written at geometry " +
-        s"${markers.mkString(",")} but this call uses $mine — " +
-        "mismatched winnowing geometry joins nothing and loses the " +
-        "screen silently; use the original (k, w) or a fresh store")
-  }
-
-  /** [[foldFingerprintStore]]'s winnowing-tier twin: fold the
-    * fingerprint store's committed batch partitions into the bucketed
-    * [[graft.operators.Dedup.buildWinnowIndex]] table form. Identical
-    * newest-partition-kept replay argument; crash-mid-fold idempotence
-    * comes from [[graft.operators.Dedup.appendWinnowRows]]' corpus_id
-    * anti-join. Geometry (k, w) is asserted against the index spec so a
-    * mismatched fold fails loudly instead of planting unmatchable
-    * hashes.
-    */
-  def foldWinnowStore(spark: SparkSession, fpDir: String,
-      indexTable: String, k: Int = 4, w: Int = 5): Seq[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(fpDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = storeBatchIds(fs, dir)
-    if (parts.size <= 1) return Nil
-    // the store stamp proves the ROWS' geometry, the index spec proves
-    // the TARGET's — both must equal this call's (k, w) or folded
-    // history becomes permanently unmatchable in the index. The fold
-    // NEVER stamps: it wrote none of the rows, so a marker-less store
-    // refuses (assertWinnowGeometry's foreign-partition guard) instead
-    // of adopting this call's (k, w) as the store's geometry
-    assertWinnowGeometry(spark, fpDir, k, w, "foldWinnowStore",
-      stamp = false)
-    val keep = parts.max
-    val foldable = parts.filter(_ != keep)
-    graft.operators.Dedup.ensureWinnowIndex(spark, indexTable, k, w)
-    graft.operators.Dedup.appendWinnowRows(
-      spark.read.parquet(fpDir).filter(col("batch_id") < keep)
-        .select(col("doc_id").as("corpus_id"), col("fp")),
-      indexTable, k, w)
-    deleteFoldedPartitions(fs, dir, foldable)
-    foldable
-  }
-
-  /** [[foldFingerprintStore]]'s semantic-tier twin: fold the vector
-    * store's batch partitions into the cell-partitioned persisted IVF
-    * index. Identical newest-partition-kept replay argument; crash-mid-
-    * fold idempotence comes from
-    * [[graft.operators.Similarity.appendIvfVectors]]' vec_id anti-join.
-    * The quantizer (`centroidTable`) is the same frozen one the ingest
-    * screens with, so folded vectors land in exactly the cells the
-    * probe will search.
-    */
-  def foldVectorStore(spark: SparkSession, vecDir: String,
-      indexTable: String, centroidTable: String): Seq[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(vecDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = storeBatchIds(fs, dir)
-    if (parts.size <= 1) return Nil
-    val keep = parts.max
-    val foldable = parts.filter(_ != keep)
-    graft.operators.Similarity.ensureIvfIndex(spark, indexTable)
-    graft.operators.Similarity.appendIvfVectors(spark,
-      spark.read.parquet(vecDir).filter(col("batch_id") < keep)
-        .select("vec_id", "embedding"),
-      indexTable, centroidTable)
-    deleteFoldedPartitions(fs, dir, foldable)
-    foldable
+    writeBatchIdempotent(myFps.join(survivors.select("doc_id"),
+      Seq("doc_id")), batchId, fpDir)
+    graft.operators.Dedup.assertWinnowGeometry(spark, fpDir, k, w,
+      "winnowIngestBatch", stamp = true, ownBatch = Some(batchId))
   }
 
   /** One micro-batch of the streaming heavy-hitter summary: compute the
@@ -1269,17 +882,13 @@ object Streams {
       foldEvery: Option[Int] = None): StreamingQuery = {
     foldEvery.foreach(n => require(n > 0,
       s"startHeavyHitterStream: foldEvery must be positive, got $n"))
-    df.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        heavyHitterBatch(b, id, colName, k, storeDir)
-        if (foldEvery.exists(n => (id + 1) % n == 0)) {
-          foldHeavyHitterStore(b.sparkSession, storeDir, k)
-          ()
-        }
+    startIngest(df, checkpoint) { (b, id) =>
+      heavyHitterBatch(b, id, colName, k, storeDir)
+      if (foldEvery.exists(n => (id + 1) % n == 0)) {
+        foldHeavyHitterStore(b.sparkSession, storeDir, k)
+        ()
       }
-      .start()
+    }
   }
 
   /** Merge the per-batch summary store into the stream-lifetime heavy
@@ -1335,7 +944,7 @@ object Streams {
       dir: org.apache.hadoop.fs.Path): Long =
     if (!fs.exists(dir)) 0L
     else {
-      val folds = storeBatchIds(fs, dir).filter(_ < 0).map(-_).toSet
+      val folds = PersistedIndex.storePartitions(fs, dir).filter(_ < 0).map(-_).toSet
       fs.listStatus(dir).toSeq.map(_.getPath.getName)
         .filter(_.startsWith("_fold_"))
         .map(_.stripPrefix("_fold_").toLong)
@@ -1395,7 +1004,7 @@ object Streams {
       dir: org.apache.hadoop.fs.Path)
       : Option[(Long, Seq[Long], org.apache.spark.sql.Column)] = {
     val e0 = heavyHitterFoldEpoch(fs, dir)
-    val positives = storeBatchIds(fs, dir).filter(_ >= 0)
+    val positives = PersistedIndex.storePartitions(fs, dir).filter(_ >= 0)
     if (positives.isEmpty) return None
     val e1 = positives.max // newest live batch stays unfolded
     val foldable = positives.filter(id => id >= e0 && id < e1)
@@ -1447,7 +1056,7 @@ object Streams {
     fs.create(new org.apache.hadoop.fs.Path(dir, s"_fold_$e1"), true)
       .close()
     graft.core.CrashHook.fire(s"foldMarker:$dir/_fold_$e1")
-    deleteFoldedPartitions(fs, dir, storeBatchIds(fs, dir)
+    PersistedIndex.deletePartitions(fs, dir, PersistedIndex.storePartitions(fs, dir)
       .filter(id => (id >= 0 && id < e1) || (id < 0 && id != -e1)))
     fs.listStatus(dir).toSeq.map(_.getPath.getName)
       .filter(nm => nm.startsWith("_fold_") &&
@@ -1466,7 +1075,8 @@ object Streams {
     * batch at the [[graft.operators.Sketches.histogramBuckets]] geometry
     * into the batch's OWN batch_id partition. Histogram counts ADD — a
     * replayed batch would double-count — so this tier rides the
-    * dynamic-partition-overwrite machinery ([[writeBatchIdempotent]]),
+    * dynamic-partition-overwrite machinery
+    * ([[graft.sources.PersistedIndex.writeBatchIdempotent]]),
     * NOT the HLL tier's replay-idempotent register max: at-least-once
     * delivery + same-partition rewrite = effectively exactly-once.
     * [[streamQuantiles]] answers; [[foldHistogramStore]] compacts.
@@ -1493,17 +1103,13 @@ object Streams {
       sigBits: Int = 4, foldEvery: Option[Int] = None): StreamingQuery = {
     foldEvery.foreach(n => require(n > 0,
       s"startHistogramStream: foldEvery must be positive, got $n"))
-    df.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        histogramBatch(b, id, valueCol, keyCol, storeDir, sigBits)
-        if (foldEvery.exists(n => (id + 1) % n == 0)) {
-          foldHistogramStore(b.sparkSession, storeDir)
-          ()
-        }
+    startIngest(df, checkpoint) { (b, id) =>
+      histogramBatch(b, id, valueCol, keyCol, storeDir, sigBits)
+      if (foldEvery.exists(n => (id + 1) % n == 0)) {
+        foldHistogramStore(b.sparkSession, storeDir)
+        ()
       }
-      .start()
+    }
   }
 
   /** Stream-lifetime per-key quantiles off the store: bucket-wise SUM
@@ -1564,13 +1170,8 @@ object Streams {
     */
   def startCardinalityTracking(docs: DataFrame, table: String,
       checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Sketches.appendHllStore(b, table)
-      }
-      .start()
+    startIngest(docs, checkpoint)((b, _) =>
+      graft.operators.Sketches.appendHllStore(b, table))
 
   /** T4/T5: start a running-aggregate query into the in-memory table
     * `name` (complete mode) with a checkpoint — stop + restart with the

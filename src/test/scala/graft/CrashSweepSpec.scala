@@ -339,13 +339,13 @@ class CrashSweepSpec extends SparkSpec {
     // index writes through the Sinks funnels AND the store-partition
     // deletes (the one fold write previously outside the swept funnels,
     // VERDICT r15 #3) — killed, then healed by the documented re-run
-    // (appendBandRows anti-joins on doc_id; leftover folded partitions
+    // (the band append anti-joins on doc_id; leftover folded partitions
     // are rows the index already holds, removed by the re-run's GC).
     def bandCorpus = Seq.empty[(Long, String)].toDF("doc_id", "text")
     def bandSetup(): (String, String, String) = {
       val n = System.nanoTime()
       val idx = s"sweep_fold_band_$n"
-      graft.operators.Dedup.ensureNearDupIndex(spark, idx)
+      Dedup.nearDupIndex().ensure(spark, idx)
       val (out, band) = (tmp("band-out"), tmp("band-store"))
       (0 until 3).foreach { i =>
         val docs = Seq((100L + i,
@@ -364,7 +364,7 @@ class CrashSweepSpec extends SparkSpec {
       val (refIdx, _, refBand) = bandSetup()
       var refSites: Seq[String] = null
       refSites = enumerateSites {
-        Streams.foldBandStore(spark, refBand, refIdx) shouldBe Seq(0L, 1L)
+        Dedup.nearDupIndex().foldStore(spark, refBand, refIdx) shouldBe Seq(0L, 1L)
       }
       refSites should not be empty
       info(s"band-fold leg: ${refSites.size} crash points")
@@ -372,10 +372,10 @@ class CrashSweepSpec extends SparkSpec {
       val refParts = bandPartitions(refBand)
       refSites.indices.foreach { i =>
         val (idx, _, band) = bandSetup()
-        val site = crashAt(i + 1)(Streams.foldBandStore(spark, band, idx))
+        val site = crashAt(i + 1)(Dedup.nearDupIndex().foldStore(spark, band, idx))
         // heal: re-run the fold (append is a doc_id anti-join no-op for
         // rows that landed; GC deletes whatever the crash left)
-        Streams.foldBandStore(spark, band, idx)
+        Dedup.nearDupIndex().foldStore(spark, band, idx)
         withClue(s"after crash at $site: ") {
           rowSet(spark.table(idx)) shouldBe refRows
           bandPartitions(band) shouldBe refParts
@@ -385,8 +385,8 @@ class CrashSweepSpec extends SparkSpec {
       dropState(refIdx)
     }
 
-    // ---- vector (semantic/IVF) fold: same sweep over foldVectorStore
-    // (appendIvfVectors anti-joins on vec_id — same heal argument).
+    // ---- vector (semantic/IVF) fold: same sweep over the IVF fold
+    // (the append anti-joins on vec_id — same heal argument).
     locally {
       val seed = embs.filter(col("vec_id") < 9)
       def vecSetup(): (String, String, String) = {
@@ -407,7 +407,7 @@ class CrashSweepSpec extends SparkSpec {
       val (refIdx, refCents, refVec) = vecSetup()
       var refSites: Seq[String] = null
       refSites = enumerateSites {
-        Streams.foldVectorStore(spark, refVec, refIdx, refCents)
+        Similarity.ivfIndex(Some(refCents)).foldStore(spark, refVec, refIdx)
           .shouldBe(Seq(0L, 1L))
       }
       refSites should not be empty
@@ -416,8 +416,8 @@ class CrashSweepSpec extends SparkSpec {
       refSites.indices.foreach { i =>
         val (idx, cents, vec) = vecSetup()
         val site = crashAt(i + 1)(
-          Streams.foldVectorStore(spark, vec, idx, cents))
-        Streams.foldVectorStore(spark, vec, idx, cents)
+          Similarity.ivfIndex(Some(cents)).foldStore(spark, vec, idx))
+        Similarity.ivfIndex(Some(cents)).foldStore(spark, vec, idx)
         withClue(s"after crash at $site: ") {
           rowSet(spark.table(idx).select("vec_id", "cell")) shouldBe refRows
         }

@@ -546,7 +546,7 @@ class DedupSpec extends SparkSpec {
     val base = tables.documents.filter(col("doc_id") < 400)
     val kept = base.filter(col("doc_id") % 3 =!= 0)
     Dedup.buildNearDupIndex(base, "neardup_idx_vac")
-    Dedup.compactNearDupIndex(SparkSpec.spark, "neardup_idx_vac",
+    Dedup.nearDupIndex().compact(SparkSpec.spark, "neardup_idx_vac",
       kept.select("doc_id"))
     Dedup.buildNearDupIndex(kept, "neardup_idx_vac_fresh")
     rowSet(SparkSpec.spark.table("neardup_idx_vac")) shouldBe
@@ -605,7 +605,7 @@ class DedupSpec extends SparkSpec {
     val kept = base.filter(col("doc_id") % 3 =!= 0)
     val t = "neardup_idx_heal"
     Dedup.buildNearDupIndex(base, t)
-    Dedup.compactNearDupIndex(spark, t, kept.select("doc_id"))
+    Dedup.nearDupIndex().compact(spark, t, kept.select("doc_id"))
     val want = rowSet(spark.table(t))
 
     // window 1 — crashed BETWEEN the two renames: the vacuumed rows sit
@@ -619,7 +619,7 @@ class DedupSpec extends SparkSpec {
       spark.table(s"${t}__old_src"), s"${t}__vacuum",
       bucketBy = Some((32, Seq("band_idx", "band_hash"))),
       sortBy = Seq("band_idx", "band_hash"))
-    Dedup.healIndexSwap(spark, t)
+    graft.sources.PersistedIndex.healIndexSwap(spark, t)
     rowSet(spark.table(t)) shouldBe want
     spark.catalog.tableExists(s"${t}__vacuum") shouldBe false
     spark.catalog.tableExists(s"${t}__old") shouldBe false
@@ -628,7 +628,7 @@ class DedupSpec extends SparkSpec {
     // the index live. Heal drops the stale tmp, index untouched.
     spark.table(s"${t}__old_src").write.mode("overwrite")
       .saveAsTable(s"${t}__vacuum")
-    Dedup.healIndexSwap(spark, t)
+    graft.sources.PersistedIndex.healIndexSwap(spark, t)
     rowSet(spark.table(t)) shouldBe want
     spark.catalog.tableExists(s"${t}__vacuum") shouldBe false
 
@@ -636,13 +636,13 @@ class DedupSpec extends SparkSpec {
     // swap complete. Heal drops the superseded generation.
     spark.table(s"${t}__old_src").write.mode("overwrite")
       .saveAsTable(s"${t}__old")
-    Dedup.healIndexSwap(spark, t)
+    graft.sources.PersistedIndex.healIndexSwap(spark, t)
     rowSet(spark.table(t)) shouldBe want
     spark.catalog.tableExists(s"${t}__old") shouldBe false
 
     // and a re-entrant vacuum (which heals on entry) stays correct and
     // probe-able end to end
-    Dedup.compactNearDupIndex(spark, t, kept.select("doc_id"))
+    Dedup.nearDupIndex().compact(spark, t, kept.select("doc_id"))
     rowSet(spark.table(t)) shouldBe want
     graft.sources.IndexSpec.readRequired(spark, t)
       .getAs[Int]("buckets") shouldBe 32
@@ -657,7 +657,7 @@ class DedupSpec extends SparkSpec {
     // fingerprint: liveness arrives as the live fp SET (the snapshot-
     // table shape) — no text rescan of the corpus
     Dedup.buildFingerprintIndex(base, "fp_idx_vac")
-    Dedup.compactFingerprintIndex(spark, "fp_idx_vac",
+    Dedup.fingerprintIndex().compact(spark, "fp_idx_vac",
       graft.operators.TextAnalysis.fingerprints(kept).select("fp"))
     Dedup.buildFingerprintIndex(kept, "fp_idx_vac_fresh")
     rowSet(spark.table("fp_idx_vac")) shouldBe
@@ -679,7 +679,7 @@ class DedupSpec extends SparkSpec {
 
     // simhash: per-doc chunk rows, vacuum by doc_id
     Dedup.buildSimhashIndex(base, "sh_idx_vac")
-    Dedup.compactSimhashIndex(spark, "sh_idx_vac", kept.select("doc_id"))
+    Dedup.simhashIndex().compact(spark, "sh_idx_vac", kept.select("doc_id"))
     Dedup.buildSimhashIndex(kept, "sh_idx_vac_fresh")
     rowSet(spark.table("sh_idx_vac")) shouldBe
       rowSet(spark.table("sh_idx_vac_fresh"))
@@ -689,7 +689,8 @@ class DedupSpec extends SparkSpec {
     // winnow: posting rows keyed corpus_id; probe-time df needs no
     // adjustment because probeWinnowIndex derives it from the join
     Dedup.buildWinnowIndex(base, "wn_idx_vac")
-    Dedup.compactWinnowIndex(spark, "wn_idx_vac", kept.select("doc_id"))
+    Dedup.winnowIndex().compact(spark, "wn_idx_vac",
+      kept.select(col("doc_id").as("corpus_id")))
     Dedup.buildWinnowIndex(kept, "wn_idx_vac_fresh")
     rowSet(spark.table("wn_idx_vac")) shouldBe
       rowSet(spark.table("wn_idx_vac_fresh"))

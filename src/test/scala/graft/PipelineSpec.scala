@@ -785,11 +785,11 @@ class PipelineSpec extends SparkSpec {
         bands = 32))
     // semantic: re-append of the kept vectors under the FROZEN quantizer
     // (doc_id-as-vec_id — the pipeline's embedding-store convention)
-    Similarity.ensureIvfIndex(spark, s"${p}_ivf_ref")
-    Similarity.appendIvfVectors(spark,
+    Similarity.ivfIndex().ensure(spark, s"${p}_ivf_ref")
+    Similarity.ivfIndex(Some(s"${p}_ivf_cents")).appendRows(
       embs.join(standing.select(col("doc_id").as("vec_id")),
         Seq("vec_id"), "left_semi"),
-      s"${p}_ivf_ref", s"${p}_ivf_cents")
+      s"${p}_ivf_ref")
     rowSet(spark.table(s"${p}_ivf")) shouldBe
       rowSet(spark.table(s"${p}_ivf_ref"))
     // re-entrant: a second policy run changes nothing
@@ -849,11 +849,11 @@ class PipelineSpec extends SparkSpec {
     rowSet(spark.table(s"${p}_neardup")) shouldBe
       rowSet(Dedup.bandBucketTable(liveDocs, ngram = 3, k = 64,
         bands = 32))
-    Similarity.ensureIvfIndex(spark, s"${p}_ivf_ref")
-    Similarity.appendIvfVectors(spark,
+    Similarity.ivfIndex().ensure(spark, s"${p}_ivf_ref")
+    Similarity.ivfIndex(Some(s"${p}_ivf_cents")).appendRows(
       embs.join(standing.select(col("doc_id").as("vec_id")),
         Seq("vec_id"), "left_semi"),
-      s"${p}_ivf_ref", s"${p}_ivf_cents")
+      s"${p}_ivf_ref")
     rowSet(spark.table(s"${p}_ivf")) shouldBe
       rowSet(spark.table(s"${p}_ivf_ref"))
 

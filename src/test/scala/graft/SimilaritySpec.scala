@@ -596,13 +596,13 @@ class SimilaritySpec extends SparkSpec {
     val all = tables.embeddings.select("vec_id", "embedding", "label")
     val kept = all.filter(col("vec_id") % 3 =!= 0)
     Similarity.buildIvfIndex(all, "ivf_vac", "ivf_vac_cents")
-    Similarity.compactIvfIndex(spark, "ivf_vac", kept.select("vec_id"))
+    Similarity.ivfIndex().compact(spark, "ivf_vac", kept.select("vec_id"))
     // the reference: the SAME frozen quantizer over only the kept
     // vectors (a fresh buildIvfIndex would retrain centroids — that is
     // a rebuild, not a vacuum)
-    Similarity.ensureIvfIndex(spark, "ivf_vac_fresh")
-    Similarity.appendIvfVectors(spark, kept, "ivf_vac_fresh",
-      "ivf_vac_cents")
+    Similarity.ivfIndex().ensure(spark, "ivf_vac_fresh")
+    Similarity.ivfIndex(Some("ivf_vac_cents")).appendRows(kept,
+      "ivf_vac_fresh")
     rowSet(spark.table("ivf_vac")) shouldBe
       rowSet(spark.table("ivf_vac_fresh"))
     // occupancy audit now reflects the live set, and the audit still
@@ -610,7 +610,7 @@ class SimilaritySpec extends SparkSpec {
     Similarity.ivfRebuildPressure(spark, "ivf_vac", "ivf_vac_cents")
       .agg(sum("n_vecs")).head().getLong(0) shouldBe kept.count()
     // re-entrant: vacuuming again (heals on entry) changes nothing
-    Similarity.compactIvfIndex(spark, "ivf_vac", kept.select("vec_id"))
+    Similarity.ivfIndex().compact(spark, "ivf_vac", kept.select("vec_id"))
     rowSet(spark.table("ivf_vac")) shouldBe
       rowSet(spark.table("ivf_vac_fresh"))
 
@@ -633,7 +633,7 @@ class SimilaritySpec extends SparkSpec {
     cat.alterPartitions(oldId, cat.listPartitions(oldId).map(p =>
       p.copy(storage = p.storage.copy(
         locationUri = Some(livePartDirs(p.spec))))))
-    graft.operators.Dedup.healIndexSwap(spark, "ivf_vac")
+    graft.sources.PersistedIndex.healIndexSwap(spark, "ivf_vac")
     spark.catalog.tableExists("ivf_vac__old") shouldBe false
     spark.catalog.refreshTable("ivf_vac")
     rowSet(spark.table("ivf_vac")) shouldBe want // live data survived
@@ -661,12 +661,12 @@ class SimilaritySpec extends SparkSpec {
     spark.sql("ALTER TABLE ivf_heal2 RENAME TO ivf_heal2__old")
     spark.sql("MSCK REPAIR TABLE ivf_heal2__old SYNC PARTITIONS")
     spark.sql("ALTER TABLE ivf_heal2__vacuum RENAME TO ivf_heal2")
-    graft.operators.Dedup.healIndexSwap(spark, "ivf_heal2")
+    graft.sources.PersistedIndex.healIndexSwap(spark, "ivf_heal2")
     spark.catalog.tableExists("ivf_heal2__old") shouldBe false
     spark.catalog.tableExists("ivf_heal2__vacuum") shouldBe false
     rowSet(spark.table("ivf_heal2")) shouldBe want
     // and the NEXT vacuum operates on the healed read, not an empty one
-    Similarity.compactIvfIndex(spark, "ivf_heal2", kept.select("vec_id"))
+    Similarity.ivfIndex().compact(spark, "ivf_heal2", kept.select("vec_id"))
     rowSet(spark.table("ivf_heal2")) shouldBe want
   }
 

@@ -613,7 +613,8 @@ class StreamingSpec extends SparkSpec {
     Seq(out, sig).foreach(d => new java.io.File(d).delete())
     val in = MemoryStream[(Long, String)]
     val docs = in.toDF().toDF("doc_id", "text")
-    val q = Streams.startNearDupIngest(docs, out, sig, ckpt)
+    val q = Streams.startIngest(docs, ckpt)(
+      Streams.nearDupIngestBatch(_, _, out, sig))
     try {
       in.addData((1L, "alpha beta gamma delta"))
       q.processAllAvailable()
@@ -803,7 +804,7 @@ class StreamingSpec extends SparkSpec {
     }
     // the fold's one crash window: append committed, store cleanup not —
     // reproduce it by running the append step alone (exactly fold step 1)
-    graft.operators.Dedup.appendFingerprints(
+    graft.operators.Dedup.fingerprintIndex().appendRows(
       spark.read.parquet(fp).filter(col("batch_id") < 2).select("fp"), idx)
     val fpsInIndex = spark.table(idx).count()
     fpsInIndex shouldBe 3L // alpha, beta, gamma — batch 2's delta unfolded
@@ -837,7 +838,7 @@ class StreamingSpec extends SparkSpec {
     val idx = "fold_sig_idx"
     spark.sql(s"DROP TABLE IF EXISTS $idx")
     spark.sql(s"DROP TABLE IF EXISTS ${idx}__spec")
-    graft.operators.Dedup.ensureSimhashIndex(spark, idx)
+    graft.operators.Dedup.simhashIndex().ensure(spark, idx)
     Streams.nearDupIngestBatch(
       Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text"),
       0L, out, sig, indexTable = Some(idx))
@@ -845,7 +846,7 @@ class StreamingSpec extends SparkSpec {
       Seq((2L, "totally unrelated novel content here")).toDF("doc_id", "text"),
       1L, out, sig, indexTable = Some(idx))
     // fold batch 0's signatures into the index; batch 1 (newest) kept
-    Streams.foldSimhashStore(spark, sig, idx) shouldBe Seq(0L)
+    graft.operators.Dedup.simhashIndex().foldStore(spark, sig, idx) shouldBe Seq(0L)
     spark.table(idx).select("doc_id").distinct().count() shouldBe 1L
     val parts = new java.io.File(sig).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
@@ -861,10 +862,10 @@ class StreamingSpec extends SparkSpec {
       .toSeq shouldBe Seq(1L, 2L, 4L)
     // fold again (idempotence across folds): batch 1 folds, batch 2 kept;
     // re-folding appends each doc's chunks exactly once
-    Streams.foldSimhashStore(spark, sig, idx) shouldBe Seq(1L)
+    graft.operators.Dedup.simhashIndex().foldStore(spark, sig, idx) shouldBe Seq(1L)
     spark.table(idx).groupBy("doc_id").count()
       .filter(col("count") =!= 4).count() shouldBe 0L
-    Streams.foldSimhashStore(spark, sig, idx) shouldBe Seq.empty
+    graft.operators.Dedup.simhashIndex().foldStore(spark, sig, idx) shouldBe Seq.empty
   }
 
   /** A 100-word base text and a paraphrase with 5 scattered word swaps:
@@ -937,13 +938,50 @@ class StreamingSpec extends SparkSpec {
         Some(("mh_no_such_table", corpus)))
   }
 
+  test("ingest screens and store folds refuse an index signed with other parameters") {
+    import graft.operators.Dedup
+    val (textA, _) = tierGapTexts
+    val b0 = Seq((1L, textA)).toDF("doc_id", "text")
+    // minhash tier: a bands = 8 stream probing a bands = 16 band index
+    // would match nothing in folded history — loud, not silent
+    val mIdx = s"spec_guard_band_${System.nanoTime()}"
+    Dedup.nearDupIndex(bands = 16).ensure(spark, mIdx)
+    val (outM, band) = (tmp("spec-mh-out"), tmp("spec-mh-band"))
+    Seq(outM, band).foreach(d => new java.io.File(d).delete())
+    val em = intercept[IllegalArgumentException] {
+      Streams.minhashIngestBatch(b0, 0L, outM, band,
+        Some((mIdx, b0.limit(0))), bands = 8)
+    }
+    em.getMessage should include("band hashes would never match")
+    // simhash tier: the stream signs natively, so a portable index's
+    // signatures would never match its screen
+    val sIdx = s"spec_guard_sig_${System.nanoTime()}"
+    Dedup.simhashIndex(portable = true).ensure(spark, sIdx)
+    val (outS, sig) = (tmp("spec-nd-out"), tmp("spec-nd-sig"))
+    Seq(outS, sig).foreach(d => new java.io.File(d).delete())
+    val es = intercept[IllegalArgumentException] {
+      Streams.nearDupIngestBatch(b0, 0L, outS, sig, indexTable = Some(sIdx))
+    }
+    es.getMessage should include("signatures would never match")
+    // ...and its native signature store never folds into that index
+    Streams.nearDupIngestBatch(b0, 0L, outS, sig)
+    Streams.nearDupIngestBatch(
+      Seq((2L, "unrelated fresh words for a second batch"))
+        .toDF("doc_id", "text"), 1L, outS, sig)
+    val ef = intercept[IllegalArgumentException] {
+      Dedup.simhashIndex().foldStore(spark, sig, sIdx)
+    }
+    ef.getMessage should include("signatures would never match")
+    spark.table(sIdx).count() shouldBe 0L
+  }
+
   test("band store→index fold: screen unchanged, crash-rerun converges") {
     import graft.operators.Dedup
     val (textA, textB) = tierGapTexts
     val idx = "mh_fold_band_idx"
     spark.sql(s"DROP TABLE IF EXISTS $idx")
     spark.sql(s"DROP TABLE IF EXISTS ${graft.sources.IndexSpec.specTable(idx)}")
-    Dedup.ensureNearDupIndex(spark, idx)
+    Dedup.nearDupIndex().ensure(spark, idx)
     val (out, band) = (tmp("mh-fold-out"), tmp("mh-fold-band"))
     Seq(out, band).foreach(d => new java.io.File(d).delete())
     val corpus = Seq.empty[(Long, String)].toDF("doc_id", "text")
@@ -955,7 +993,7 @@ class StreamingSpec extends SparkSpec {
       Seq((30L, (0 until 80).map(j => s"fw$j").mkString(" ")))
         .toDF("doc_id", "text"),
       1L, out, band, Some((idx, corpus)))
-    Streams.foldBandStore(spark, band, idx) shouldBe Seq(0L)
+    Dedup.nearDupIndex().foldStore(spark, band, idx) shouldBe Seq(0L)
     spark.table(idx).select("doc_id").distinct()
       .as[Long].collect().toSeq shouldBe Seq(20L)
     // the paraphrase now screens against FOLDED band rows, with doc
@@ -968,7 +1006,7 @@ class StreamingSpec extends SparkSpec {
     // crash window: append committed (fold step 1 alone), cleanup not —
     // the screen still works mid-window, and the fold re-run appends
     // nothing (doc_id anti-join) then completes the cleanup
-    Dedup.appendBandRows(
+    Dedup.nearDupIndex().appendRows(
       spark.read.parquet(band).filter(col("batch_id") < 2L)
         .select("doc_id", "band_idx", "band_hash"), idx)
     val rowsAfterCrash = spark.table(idx).count()
@@ -981,7 +1019,7 @@ class StreamingSpec extends SparkSpec {
     landed() shouldBe Seq(20L, 23L, 30L)
     // fold recovery: re-append of doc 30's rows is a no-op anti-join,
     // cleanup completes, newest partition (batch 3) kept
-    Streams.foldBandStore(spark, band, idx) shouldBe Seq(1L)
+    Dedup.nearDupIndex().foldStore(spark, band, idx) shouldBe Seq(1L)
     spark.table(idx).count() shouldBe rowsAfterCrash // re-append no-op
     val parts = new java.io.File(band).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
@@ -1030,15 +1068,16 @@ class StreamingSpec extends SparkSpec {
       (104L, Seq(0f, 0f, 0f, 1f))), 1L)
     landed() shouldBe Seq(101L, 103L)
     // fold the store into the index; screening continues seamlessly
-    Streams.foldVectorStore(spark, vec, idx, cents) should not be empty
+    graft.operators.Similarity.ivfIndex(Some(cents))
+      .foldStore(spark, vec, idx) should not be empty
     ingest(Seq(
       (105L, Seq(0f, 0f, 1f, 0.001f)), // ≈ 101, now screened by the INDEX
       (106L, Seq(0.7f, 0.7f, 0f, 0f))), 2L) // fresh -> lands
     landed() shouldBe Seq(101L, 103L, 106L)
     // a crashed re-run of the fold is a no-op (vec_id anti-join)
     val before = spark.table(idx).count()
-    graft.operators.Similarity.appendIvfVectors(spark,
-      spark.read.parquet(vec).select("vec_id", "embedding"), idx, cents)
+    graft.operators.Similarity.ivfIndex(Some(cents)).appendRows(
+      spark.read.parquet(vec).select("vec_id", "embedding"), idx)
     val after = spark.table(idx).count()
     (after - before) should be <= 2L // only the unfolded newest batch
     spark.table(idx).groupBy("vec_id").count()
@@ -1252,7 +1291,7 @@ class StreamingSpec extends SparkSpec {
       // simulate the failure-replay path: re-run batch 0's write verbatim
       // (same batch id, same rows — exactly what the engine re-delivers
       // after a crash between write and checkpoint commit)
-      Streams.writeBatchIdempotent(
+      graft.sources.PersistedIndex.writeBatchIdempotent(
         Seq("a", "b").toDF("value"), 0L, s"$dir/out")
       val replayed = spark.read.parquet(s"$dir/out")
       replayed.count() shouldBe 3L // batch 0 rewritten in place, no dups
@@ -1441,7 +1480,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.Dedup
     val (textA, textB) = passageTexts
     val idx = s"wn_fold_idx_${System.nanoTime()}"
-    Dedup.ensureWinnowIndex(spark, idx)
+    Dedup.winnowIndex().ensure(spark, idx)
     val (out, fps) = (tmp("wn-fold-out"), tmp("wn-fold-fp"))
     Seq(out, fps).foreach(d => new java.io.File(d).delete())
     Streams.winnowIngestBatch(
@@ -1450,7 +1489,7 @@ class StreamingSpec extends SparkSpec {
       Seq((11L, "other " + (0 until 50).map(i => s"w$i").mkString(" ")))
         .toDF("doc_id", "text"), 1L, out, fps, Some(idx))
     // fold everything below the newest batch into the index
-    Streams.foldWinnowStore(spark, fps, idx) shouldBe Seq(0L)
+    Dedup.winnowIndex().foldStore(spark, fps, idx) shouldBe Seq(0L)
     spark.table(idx).select("corpus_id").distinct()
       .as[Long].collect().toSeq shouldBe Seq(10L)
     // the screen is unchanged across the fold: a passage splice of the
@@ -1461,7 +1500,7 @@ class StreamingSpec extends SparkSpec {
       .toSeq shouldBe Seq(10L, 11L)
     // crash between append and cleanup: the re-run append is a no-op
     // (corpus_id anti-join) — no duplicate posting rows ever
-    Dedup.appendWinnowRows(
+    Dedup.winnowIndex().appendRows(
       spark.read.parquet(fps)
         .select(col("doc_id").as("corpus_id"), col("fp")), idx)
     spark.table(idx).groupBy("corpus_id", "fp").count()
@@ -1499,7 +1538,7 @@ class StreamingSpec extends SparkSpec {
       Seq((4L, "fresh " + (0 until 50).map(i => s"g$i").mkString(" ")))
         .toDF("doc_id", "text"), 1L, out, fps)
     an[IllegalArgumentException] should be thrownBy
-      Streams.foldWinnowStore(spark, fps, idx, k = 5, w = 9)
+      Dedup.winnowIndex(k = 5, w = 9).foldStore(spark, fps, idx)
   }
 
   test("streaming→batch promotion: screened store feeds corpusBuild ≡ batch-equivalent screens") {
@@ -1521,8 +1560,8 @@ class StreamingSpec extends SparkSpec {
     val mIdx = s"promo_band_idx_${System.nanoTime()}"
     val wIdx = s"promo_winnow_idx_${System.nanoTime()}"
     Dedup.ensureFingerprintIndex(spark, eIdx)
-    Dedup.ensureNearDupIndex(spark, mIdx)
-    Dedup.ensureWinnowIndex(spark, wIdx)
+    Dedup.nearDupIndex().ensure(spark, mIdx)
+    Dedup.winnowIndex().ensure(spark, wIdx)
     val emptyCorpus = Seq.empty[(Long, String)].toDF("doc_id", "text")
     def ingest(b: org.apache.spark.sql.DataFrame, id: Long): Unit = {
       Streams.dedupIngestBatch(b, id, out1, fp1, Some(eIdx))
@@ -1541,8 +1580,8 @@ class StreamingSpec extends SparkSpec {
     ingest(batches(1), 1L)
     // fold every tier's store into its index mid-stream
     Streams.foldFingerprintStore(spark, fp1, eIdx) shouldBe Seq(0L)
-    Streams.foldBandStore(spark, band2, mIdx) shouldBe Seq(0L)
-    Streams.foldWinnowStore(spark, fp3, wIdx) shouldBe Seq(0L)
+    Dedup.nearDupIndex().foldStore(spark, band2, mIdx) shouldBe Seq(0L)
+    Dedup.winnowIndex().foldStore(spark, fp3, wIdx) shouldBe Seq(0L)
     ingest(batches(2), 2L)
     ingest(batches(3), 3L)
     val streamCorpus = spark.read.parquet(out3).drop("batch_id")
@@ -1630,10 +1669,10 @@ class StreamingSpec extends SparkSpec {
       Seq((3L, "more " + (0 until 50).map(i => s"m$i").mkString(" ")))
         .toDF("doc_id", "text"), 1L, out, fps)
     val idx = s"wn_nomark_idx_${System.nanoTime()}"
-    Dedup.ensureWinnowIndex(spark, idx)
+    Dedup.winnowIndex().ensure(spark, idx)
     assert(marker.delete())
     an[IllegalArgumentException] should be thrownBy
-      Streams.foldWinnowStore(spark, fps, idx)
+      Dedup.winnowIndex().foldStore(spark, fps, idx)
     an[IllegalArgumentException] should be thrownBy
       Streams.winnowIngestBatch(
         Seq((4L, "even " + (0 until 50).map(i => s"e$i").mkString(" ")))
@@ -1641,7 +1680,7 @@ class StreamingSpec extends SparkSpec {
     // the documented operator remedy: restore the marker by hand when
     // the rows' geometry IS known — everything proceeds
     marker.createNewFile() shouldBe true
-    Streams.foldWinnowStore(spark, fps, idx) shouldBe Seq(0L)
+    Dedup.winnowIndex().foldStore(spark, fps, idx) shouldBe Seq(0L)
     spark.table(idx).select("corpus_id").distinct()
       .as[Long].collect().toSeq shouldBe Seq(1L)
   }
