@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.functions._
 
 import graft.core.Buffers
+import graft.sources.{IndexSpec, Sinks}
 
 /** End-to-end corpus-build composition — the proof that the engine's
   * stages are a PIPELINE, not a query zoo. One call chains the
@@ -81,10 +82,15 @@ import graft.core.Buffers
   *                   ([[Bpe.saveMerges]], own spec table)
   *   - `p_vocab`     (token, id)   — the frozen token-id space
   *                   ([[Bpe.tokenIds]] over the v1 selection)
-  *   - `p__spec`                   — one row of build parameters +
-  *                   `max_bin`, written LAST as the state's commit
-  *                   marker: [[corpusDelta]] refuses half-built state
-  *                   via [[graft.sources.IndexSpec.readRequired]]
+  *   - `p__spec`     (mix_budget_tokens, chunk_tokens, pack_tokens,
+  *                   num_merges, n_shards, neardup_threshold, max_bin,
+  *                   generation, min_generation) — one row: the build
+  *                   parameters, the bin-space high-water mark and the
+  *                   live generation window, written LAST by every state
+  *                   transaction as its commit marker (`CorpusSpec`
+  *                   reads it once and advances it by copy);
+  *                   [[corpusDelta]] refuses half-built state via
+  *                   [[graft.sources.IndexSpec.readRequired]]
   *
   * [[corpusDelta]] then turns a new crawl into (tombstones + new
   * chunks); [[applyCorpusDelta]] folds them into a chunk relation.
@@ -125,29 +131,6 @@ object Pipeline {
   // reclaimed by [[dropGeneration]] (oldest-first, export-guarded);
   // the spec's min_generation records the retained window's lower edge.
   private def genSuffix(gen: Int) = if (gen <= 1) "" else s"_g$gen"
-
-  /** The spec's live generation, defaulting to 1 for a state family
-    * persisted before generations existed (its spec row has no
-    * `generation` column; its trained tables are the unsuffixed
-    * generation-1 names, which is exactly what 1 resolves to) — an
-    * upgrade must not turn a working long-lived state into an obscure
-    * schema error on the first delta.
-    */
-  private def specGeneration(spec: org.apache.spark.sql.Row): Int =
-    if (spec.schema.fieldNames.contains("generation"))
-      spec.getAs[Int]("generation")
-    else 1
-
-  /** The oldest RETAINED generation — the other edge of the live
-    * window [[specGeneration]] closes: generations below this were
-    * reclaimed by [[dropGeneration]] and their trained tables no
-    * longer exist. Defaults to 1 for specs written before retention
-    * existed (same upgrade posture as [[specGeneration]]).
-    */
-  private def specMinGeneration(spec: org.apache.spark.sql.Row): Int =
-    if (spec.schema.fieldNames.contains("min_generation"))
-      spec.getAs[Int]("min_generation")
-    else 1
   private def mixTable(p: String, gen: Int = 1) =
     s"${p}_mix${genSuffix(gen)}"
   private def mergesTable(p: String, gen: Int = 1) =
@@ -155,38 +138,73 @@ object Pipeline {
   private def vocabTable(p: String, gen: Int = 1) =
     s"${p}_vocab${genSuffix(gen)}"
 
-  /** The state family's spec row — build parameters + `max_bin` (the
-    * bin-space high-water mark deltas append above) + `generation`
-    * (which trained-state tables are live). ALWAYS written last by
-    * every state transaction: it is the commit marker.
+  /** The state family's `p__spec` row, typed: the six build parameters,
+    * `maxBin` (the bin-space high-water mark deltas append above),
+    * `generation` (which trained-state tables are live) and
+    * `minGeneration` (the oldest retained generation, the live window's
+    * lower edge). Every state transaction reads it once, advances it by
+    * `copy`, and [[write]]s it LAST: the write is the commit marker.
     */
-  private def writeSpec(spark: SparkSession, p: String,
-      mixBudgetTokens: Long, chunkTokens: Int, packTokens: Long,
-      numMerges: Int, nShards: Int, neardupThreshold: Double,
-      maxBin: Long, generation: Int, minGeneration: Int = 1): Unit = {
-    import spark.implicits._
-    graft.sources.IndexSpec.write(
-      Seq((mixBudgetTokens, chunkTokens, packTokens, numMerges, nShards,
-        neardupThreshold, maxBin, generation, minGeneration))
-        .toDF("mix_budget_tokens", "chunk_tokens", "pack_tokens",
-          "num_merges", "n_shards", "neardup_threshold", "max_bin",
-          "generation", "min_generation"),
-      p)
-  }
-
-  /** Immutable bundle of the build knobs shared by [[corpusBuild]] and
-    * [[corpusBuildWithState]]; `statePrefix = Some(p)` selects the
-    * state-persisting variant (state is written table-by-table as the
-    * stages that derive it run).
-    */
-  private final case class BuildParams(
+  private final case class CorpusSpec(
       mixBudgetTokens: Long,
       chunkTokens: Int,
       packTokens: Long,
       numMerges: Int,
       nShards: Int,
       neardupThreshold: Double,
-      statePrefix: Option[String])
+      maxBin: Long = -1L,
+      generation: Int = 1,
+      minGeneration: Int = 1) {
+    def write(spark: SparkSession, p: String): Unit = {
+      import spark.implicits._
+      IndexSpec.write(Seq((mixBudgetTokens, chunkTokens, packTokens,
+          numMerges, nShards, neardupThreshold, maxBin, generation,
+          minGeneration)).toDF(CorpusSpec.Columns: _*), p)
+    }
+  }
+
+  private object CorpusSpec {
+    val Columns = Seq("mix_budget_tokens", "chunk_tokens", "pack_tokens",
+      "num_merges", "n_shards", "neardup_threshold", "max_bin",
+      "generation", "min_generation")
+
+    /** The committed spec of state family `p`; half-built state is
+      * refused ([[IndexSpec.readRequired]]). `generation` and
+      * `min_generation` read as 1 when their column is absent: a spec
+      * persisted before generations (or retention) existed names the
+      * unsuffixed generation-1 tables, which is exactly what 1 resolves
+      * to — an upgrade must not turn a working long-lived state into an
+      * obscure schema error on the first delta.
+      */
+    def read(spark: SparkSession, p: String): CorpusSpec = {
+      val r = IndexSpec.readRequired(spark, p)
+      def orOne(c: String): Int =
+        if (r.schema.fieldNames.contains(c)) r.getAs[Int](c) else 1
+      CorpusSpec(r.getAs[Long]("mix_budget_tokens"),
+        r.getAs[Int]("chunk_tokens"), r.getAs[Long]("pack_tokens"),
+        r.getAs[Int]("num_merges"), r.getAs[Int]("n_shards"),
+        r.getAs[Double]("neardup_threshold"), r.getAs[Long]("max_bin"),
+        orOne("generation"), orOne("min_generation"))
+    }
+  }
+
+  /** `max(bin_id)` over `chunks`, or `orElse` when it has no rows. */
+  private def maxBinOf(chunks: DataFrame, orElse: Long = -1L): Long =
+    Option(chunks.agg(max("bin_id")).head().get(0))
+      .map(_.asInstanceOf[Long]).getOrElse(orElse)
+
+  /** Write `table` in the one doc_id layout — 32 buckets on doc_id,
+    * sorted by doc_id. Snapshot, standing, chunk and changelog tables
+    * must all share it: every corpus-sized join of the maintenance loop
+    * keys on doc_id, and stays exchange-free only between tables
+    * bucketed alike (the q48/q130 layout discipline).
+    */
+  private def writeByDocId(df: DataFrame, table: String,
+      append: Boolean = false): Unit = {
+    val sink = if (append) Sinks.appendTablePartitioned _
+      else Sinks.saveTablePartitioned _
+    sink(df, table, Nil, Some((32, Seq("doc_id"))), Seq("doc_id"))
+  }
 
   /** Build a training corpus from raw documents; see the object doc.
     * `documents` must carry (doc_id, text, lang, source, n_chars) —
@@ -200,8 +218,8 @@ object Pipeline {
       numMerges: Int = 8,
       nShards: Int = 8,
       neardupThreshold: Double = 0.7): DataFrame =
-    corpusBuildImpl(documents, BuildParams(mixBudgetTokens, chunkTokens,
-      packTokens, numMerges, nShards, neardupThreshold, None))
+    corpusBuildImpl(documents, CorpusSpec(mixBudgetTokens, chunkTokens,
+      packTokens, numMerges, nShards, neardupThreshold), None)
 
   /** [[corpusBuild]] that ALSO persists the incremental-maintenance
     * state family under `statePrefix` (see the object doc) so
@@ -221,13 +239,18 @@ object Pipeline {
       nShards: Int = 8,
       neardupThreshold: Double = 0.7): DataFrame = {
     require(statePrefix.nonEmpty, "corpusBuildWithState: empty statePrefix")
-    corpusBuildImpl(documents, BuildParams(mixBudgetTokens, chunkTokens,
-      packTokens, numMerges, nShards, neardupThreshold, Some(statePrefix)))
+    corpusBuildImpl(documents, CorpusSpec(mixBudgetTokens, chunkTokens,
+      packTokens, numMerges, nShards, neardupThreshold), Some(statePrefix))
   }
 
-  private def corpusBuildImpl(documents: DataFrame,
-      params: BuildParams): DataFrame = {
-    params.statePrefix.foreach { p =>
+  /** The build shared by [[corpusBuild]] and [[corpusBuildWithState]]:
+    * `spec` is a fresh record (the build parameters, no bins yet);
+    * `statePrefix = Some(p)` selects the state-persisting variant (state
+    * is written table-by-table as the stages that derive it run).
+    */
+  private def corpusBuildImpl(documents: DataFrame, spec: CorpusSpec,
+      statePrefix: Option[String]): DataFrame = {
+    statePrefix.foreach { p =>
       // invalidate FIRST on a re-build: the spec is the commit marker,
       // and a crash after the state tables start overwriting must not
       // leave a previous generation's marker vouching for mixed state
@@ -235,7 +258,7 @@ object Pipeline {
       // encode with the old tokenizer) — dropping it re-establishes
       // the marker-written-last invariant for re-runs
       documents.sparkSession.sql(
-        s"DROP TABLE IF EXISTS ${graft.sources.IndexSpec.specTable(p)}")
+        s"DROP TABLE IF EXISTS ${IndexSpec.specTable(p)}")
       // snapshot of the RAW crawl — the delta's diff base covers every
       // crawl doc (also curation-rejected ones: a future crawl doc
       // equal to a rejected one is "unchanged" and skips reprocessing
@@ -245,11 +268,8 @@ object Pipeline {
       // delta path, and bucketing makes the snapshot side
       // exchange-free on every one of them (the q48/q130 layout
       // discipline) — only the crawl side shuffles, once.
-      graft.sources.Sinks.saveTablePartitioned(
-        documents.select(col("doc_id"),
-          TextAnalysis.fingerprint(col("text")).as("fp")),
-        snapshotTable(p),
-        bucketBy = Some((32, Seq("doc_id"))), sortBy = Seq("doc_id"))
+      writeByDocId(documents.select(col("doc_id"),
+        TextAnalysis.fingerprint(col("text")).as("fp")), snapshotTable(p))
     }
 
     // 1. curate: keep-list of doc_ids, then re-attach text (curate's
@@ -270,7 +290,7 @@ object Pipeline {
       //    string-verify chain.
       val canon = Dedup.resolveCanonical(curatedDocs,
           Dedup.dupComponents(Dedup.minhashDupPairs(curatedDocs,
-            threshold = params.neardupThreshold, ngram = NdNgram,
+            threshold = spec.neardupThreshold, ngram = NdNgram,
             k = NdK, bands = NdBands, hashShingles = true)))
         .filter(col("keep") === 1L)
         .select("doc_id")
@@ -279,12 +299,10 @@ object Pipeline {
       // state: the standing corpus universe (canonical curated docs) +
       // the near-dup index a delta probes against it. Both writes are
       // actions over the still-buffered curatedDocs.
-      params.statePrefix.foreach { p =>
+      statePrefix.foreach { p =>
         // bucketed by doc_id like the snapshot (same rationale: every
         // standing-set join in the delta keys on doc_id)
-        graft.sources.Sinks.saveTablePartitioned(
-          canonDocs.select("doc_id"), standingTable(p),
-          bucketBy = Some((32, Seq("doc_id"))), sortBy = Seq("doc_id"))
+        writeByDocId(canonDocs.select("doc_id"), standingTable(p))
         Dedup.buildNearDupIndex(canonDocs, neardupTable(p),
           ngram = NdNgram, k = NdK, bands = NdBands)
       }
@@ -295,9 +313,9 @@ object Pipeline {
       //    bit-for-bit against a LATER crawl's docs)
       val thresholds = Relational.temperatureThresholds(canonDocs,
         col("lang"), size(TextAnalysis.tokens(col("text"))),
-        params.mixBudgetTokens)
-      params.statePrefix.foreach { p =>
-        graft.sources.Sinks.saveTable(thresholds, mixTable(p))
+        spec.mixBudgetTokens)
+      statePrefix.foreach { p =>
+        Sinks.saveTable(thresholds, mixTable(p))
       }
       Buffers.scoped(Relational.mixtureApplyThresholds(canonDocs,
           col("doc_id"), col("lang"), thresholds)) { selDocs =>
@@ -306,16 +324,15 @@ object Pipeline {
         //    upstream stage), then encode. trainMerges is eager
         //    driver-side argmax over vocabulary aggregates (bounded),
         //    the q133 contract.
-        val merges = Bpe.trainMerges(selDocs, params.numMerges)
-        params.statePrefix.foreach { p =>
+        val merges = Bpe.trainMerges(selDocs, spec.numMerges)
+        statePrefix.foreach { p =>
           Bpe.saveMerges(selDocs.sparkSession, merges, mergesTable(p),
-            params.numMerges)
+            spec.numMerges)
           // the token-id TABLE freezes with the merges: a delta crawl
           // must encode into the v1 id space (re-ranking ids over delta
           // docs would silently renumber every token — see
           // encodeDocsFrozen)
-          graft.sources.Sinks.saveTable(
-            Bpe.tokenIds(selDocs, merges), vocabTable(p))
+          Sinks.saveTable(Bpe.tokenIds(selDocs, merges), vocabTable(p))
         }
         val enc = Bpe.encodeDocs(selDocs, merges)
 
@@ -326,23 +343,15 @@ object Pipeline {
         //    rows) — each would otherwise replay the whole BPE encode
         //    join chain (packSized's scaladoc: persist the sized
         //    projection when the upstream is expensive).
-        val chunked = withChunkKey(Bpe.chunkEncoded(enc, params.chunkTokens))
-        Buffers.scoped(chunked) { chunks =>
-          packShardEmit(chunks, params.packTokens, params.nShards,
-            binBase = 0L)
-        }
+        val chunked = withChunkKey(Bpe.chunkEncoded(enc, spec.chunkTokens))
+        Buffers.scoped(chunked)(packShardEmit(_, spec, binBase = 0L))
       }
     }
 
     // spec LAST — the state family's commit marker (max_bin is read
     // off the materialized output, which is chunk-row-sized)
-    params.statePrefix.foreach { p =>
-      val spark = documents.sparkSession
-      val maxBin = Option(out.agg(max("bin_id")).head().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(-1L)
-      writeSpec(spark, p, params.mixBudgetTokens, params.chunkTokens,
-        params.packTokens, params.numMerges, params.nShards,
-        params.neardupThreshold, maxBin, generation = 1)
+    statePrefix.foreach { p =>
+      spec.copy(maxBin = maxBinOf(out)).write(documents.sparkSession, p)
     }
     out
   }
@@ -364,6 +373,32 @@ object Pipeline {
           lit(", chunk_idx="), col("chunk_idx").cast("string"),
           lit(") — need doc_id >= 0 and < 100000 chunks/doc")))))
 
+  /** Bin + shard assignment over a ckey-keyed chunk relation — the
+    * pack/shard halves of stages 6–7 under `spec`'s pack budget and
+    * shard count, shared by the build/delta emit (which also digests
+    * the token ids) and [[compactCorpus]] (whose input already carries
+    * digests). Returns the input columns plus (bin_id, shard).
+    */
+  private def packShardAssign(chunks: DataFrame, spec: CorpusSpec,
+      binBase: Long): DataFrame = {
+    // 6. pack chunks into fixed token-budget bins (two-pass prefix sum)
+    val bins = Relational.packSized(
+        chunks.select(col("ckey").as("doc_id"), col("n_tokens")),
+        spec.packTokens)
+      .select(col("doc_id").as("ckey"),
+        (col("bin_id") + lit(binBase)).as("bin_id"))
+
+    // 7. shard the BINS (the export unit) content-addressed; the bin
+    //    relation is total-tokens/packTokens rows — broadcast-sized
+    val shards = Relational.shuffleShard(
+        bins.select("bin_id").distinct(), "bin_id", spec.nShards)
+      .select("bin_id", "shard")
+
+    chunks
+      .join(bins, Seq("ckey"))
+      .join(F.broadcast(shards), Seq("bin_id"))
+  }
+
   /** Stages 6–7 (+ final projection) over a persisted chunk relation:
     * pack into fixed token-budget bins offset by `binBase` (0 for a
     * full build; the standing corpus's max_bin + 1 for a delta, so
@@ -372,37 +407,11 @@ object Pipeline {
     * materialized eagerly — returned lazily it would depend on the
     * cached intermediates the callers' finally blocks release.
     */
-  /** Bin + shard assignment over a ckey-keyed chunk relation — the
-    * pack/shard halves of stages 6–7, shared by the build/delta emit
-    * (which also digests the token ids) and [[compactCorpus]] (whose
-    * input already carries digests). Returns the input columns plus
-    * (bin_id, shard).
-    */
-  private def packShardAssign(chunks: DataFrame, packTokens: Long,
-      nShards: Int, binBase: Long): DataFrame = {
-    // 6. pack chunks into fixed token-budget bins (two-pass prefix sum)
-    val bins = Relational.packSized(
-        chunks.select(col("ckey").as("doc_id"), col("n_tokens")),
-        packTokens)
-      .select(col("doc_id").as("ckey"),
-        (col("bin_id") + lit(binBase)).as("bin_id"))
-
-    // 7. shard the BINS (the export unit) content-addressed; the bin
-    //    relation is total-tokens/packTokens rows — broadcast-sized
-    val shards = Relational.shuffleShard(
-        bins.select("bin_id").distinct(), "bin_id", nShards)
-      .select("bin_id", "shard")
-
-    chunks
-      .join(bins, Seq("ckey"))
-      .join(F.broadcast(shards), Seq("bin_id"))
-  }
-
-  private def packShardEmit(chunks: DataFrame, packTokens: Long,
-      nShards: Int, binBase: Long,
+  private def packShardEmit(chunks: DataFrame, spec: CorpusSpec,
+      binBase: Long,
       mat: (DataFrame, String) => DataFrame =
         Buffers.materializer(None)): DataFrame = {
-    mat(packShardAssign(chunks, packTokens, nShards, binBase)
+    mat(packShardAssign(chunks, spec, binBase)
       .select(
         col("doc_id"),
         col("chunk_idx").cast("long").as("chunk_idx"),
@@ -498,13 +507,7 @@ object Pipeline {
       statePrefix: String, commit: Boolean = false,
       checkpointDir: Option[String] = None): DataFrame = {
     val spark = newCrawl.sparkSession
-    val spec = graft.sources.IndexSpec.readRequired(spark, statePrefix)
-    val chunkTokens = spec.getAs[Int]("chunk_tokens")
-    val packTokens = spec.getAs[Long]("pack_tokens")
-    val nShards = spec.getAs[Int]("n_shards")
-    val threshold = spec.getAs[Double]("neardup_threshold")
-    val binBase = spec.getAs[Long]("max_bin") + 1L
-    val generation = specGeneration(spec)
+    val spec = CorpusSpec.read(spark, statePrefix)
 
     val snap = spark.table(snapshotTable(statePrefix))
     val newFpsPlan = newCrawl.select(col("doc_id"),
@@ -519,13 +522,7 @@ object Pipeline {
     // deltas read the projection once and skip the cache.
     def withFps(use: DataFrame => DataFrame): DataFrame =
       if (commit) Buffers.scoped(newFpsPlan)(use) else use(newFpsPlan)
-    // per-invocation nonce in the waist names: a LATER delta against
-    // the same checkpointDir must not overwrite parquet a still-held
-    // earlier changeset reads (the materializer's distinct-names rule)
-    val nonce = java.lang.Long.toHexString(System.nanoTime())
-    val matBase = Buffers.materializer(checkpointDir)
-    val mat = (df: DataFrame, name: String) =>
-      matBase(df, s"${name}_$nonce")
+    val mat = waistMaterializer(checkpointDir)
     withFps { newFps =>
       // the diff joins fingerprint relations (16-byte rows), never
       // text; only the changed slice flows on
@@ -538,16 +535,26 @@ object Pipeline {
               .otherwise("unchanged").as("status"))
           .filter(col("status") =!= "unchanged")) { diff =>
         corpusDeltaOnDiff(newCrawl, newFps, corpusDocs, statePrefix,
-          commit, diff, chunkTokens, packTokens, nShards, threshold,
-          binBase, generation, mat)
+          commit, diff, spec, mat)
       }
     }
   }
 
+  /** [[Buffers.materializer]] for one delta or reconcile call, with a
+    * per-invocation nonce in the waist names: a LATER call against the
+    * same checkpointDir must not overwrite parquet a still-held earlier
+    * changeset reads (the materializer's distinct-names rule).
+    */
+  private def waistMaterializer(
+      checkpointDir: Option[String]): (DataFrame, String) => DataFrame = {
+    val nonce = java.lang.Long.toHexString(System.nanoTime())
+    val mat = Buffers.materializer(checkpointDir)
+    (df, name) => mat(df, s"${name}_$nonce")
+  }
+
   private def corpusDeltaOnDiff(newCrawl: DataFrame, newFps: DataFrame,
       corpusDocs: DataFrame, statePrefix: String, commit: Boolean,
-      diff: DataFrame, chunkTokens: Int, packTokens: Long, nShards: Int,
-      threshold: Double, binBase: Long, generation: Int,
+      diff: DataFrame, spec: CorpusSpec,
       mat: (DataFrame, String) => DataFrame): DataFrame = {
     val spark = newCrawl.sparkSession
     val snap = spark.table(snapshotTable(statePrefix))
@@ -587,8 +594,7 @@ object Pipeline {
     val standingNow = spark.table(standingTable(statePrefix))
       .join(tombstones, Seq("doc_id"), "left_anti")
     val (survivors, adds) = admitScreened(afterExact, corpusDocs,
-      statePrefix, standingNow, chunkTokens, packTokens, nShards,
-      threshold, binBase, generation, mat)
+      statePrefix, standingNow, spec, mat)
 
     val out = mat(tombstones
       .select(lit("del").as("op"), col("doc_id"),
@@ -606,9 +612,8 @@ object Pipeline {
       // advance reads the cache, so a committed delta pays ONE
       // corpus-sized fp scan, not a second re-derivation
       commitDelta(spark, statePrefix,
-        newFps.select(col("doc_id"), col("new_fp").as("fp")),
-        survivors, standingNow, out, spec = (chunkTokens, packTokens,
-          nShards, threshold, binBase), generation, mat)
+        Some(newFps.select(col("doc_id"), col("new_fp").as("fp"))),
+        survivors, standingNow, out, mat)
     out
   }
 
@@ -647,18 +652,17 @@ object Pipeline {
     * the q130 cost shape), canonical resolution WITHIN the slice (a
     * candidate whose only dup was itself screened away survives),
     * frozen mix (loud refusal on an unseen group), frozen tokenizer,
-    * chunk/pack/shard above `binBase`. Returns (survivors, adds):
+    * chunk/pack/shard above the spec's `max_bin`. Returns (survivors, adds):
     * survivors feed a commit's standing/index advance, adds are the
     * new chunk rows. Shared by [[corpusDelta]] (candidates = the
     * crawl's changed slice) and [[reconcileDelta]] (candidates =
     * suppressed content re-surfacing after removals).
     */
   private def admitScreened(afterExact: DataFrame, corpusDocs: DataFrame,
-      statePrefix: String, standingNow: DataFrame, chunkTokens: Int,
-      packTokens: Long, nShards: Int, threshold: Double, binBase: Long,
-      generation: Int,
+      statePrefix: String, standingNow: DataFrame, spec: CorpusSpec,
       mat: (DataFrame, String) => DataFrame): (DataFrame, DataFrame) = {
     val spark = afterExact.sparkSession
+    val generation = spec.generation
     // hashShingles on both the probe screen and the self-resolution:
     // the delta consumes pair MEMBERSHIP only (hit doc_ids / keep sets;
     // every jaccard column dies at a .select("doc_id")), so the verify
@@ -666,7 +670,8 @@ object Pipeline {
     // resolution takes (see corpusBuildImpl), applied to the path
     // every crawl pays. DedupSpec pins probe hashed ≡ exact.
     val ndHits = Dedup.probeNearDupIndex(afterExact, corpusDocs,
-        neardupTable(statePrefix), threshold, NdNgram, NdK, NdBands,
+        neardupTable(statePrefix), spec.neardupThreshold, NdNgram, NdK,
+        NdBands,
         hashShingles = true)
       .join(standingNow.select(col("doc_id").as("corpus_id")),
         Seq("corpus_id"))
@@ -678,7 +683,7 @@ object Pipeline {
     // stage-2 machinery over the candidate slice)
     val selfKeep = Dedup.resolveCanonical(screened,
         Dedup.dupComponents(Dedup.minhashDupPairs(screened,
-          threshold = threshold, ngram = NdNgram, k = NdK,
+          threshold = spec.neardupThreshold, ngram = NdNgram, k = NdK,
           bands = NdBands, hashShingles = true)))
       .filter(col("keep") === 1L)
       .select("doc_id")
@@ -707,9 +712,10 @@ object Pipeline {
     val merges = Bpe.loadMerges(spark, mergesTable(statePrefix, generation))
     val chunks = withChunkKey(
         Bpe.chunkEncoded(Bpe.encodeDocsFrozen(sel, merges,
-          spark.table(vocabTable(statePrefix, generation))), chunkTokens))
+          spark.table(vocabTable(statePrefix, generation))),
+          spec.chunkTokens))
     val adds = Buffers.scoped(chunks)(
-      packShardEmit(_, packTokens, nShards, binBase, mat))
+      packShardEmit(_, spec, binBase = spec.maxBin + 1L, mat))
     (survivors, adds)
   }
 
@@ -735,7 +741,7 @@ object Pipeline {
   def reconcileCandidates(newCrawl: DataFrame,
       statePrefix: String): DataFrame = {
     val spark = newCrawl.sparkSession
-    graft.sources.IndexSpec.readRequired(spark, statePrefix)
+    CorpusSpec.read(spark, statePrefix)
     val snap = spark.table(snapshotTable(statePrefix))
     val standing = spark.table(standingTable(statePrefix))
     val newFps = newCrawl.select(col("doc_id"),
@@ -763,9 +769,9 @@ object Pipeline {
     * snapshot, so a stale or mutated crawl simply contributes fewer
     * candidates, never wrong ones.
     *
-    * `commit = true` advances standing/band-index/spec exactly like a
-    * committed delta; the snapshot is NOT rewritten — every candidate
-    * is already in it. After a commit the operator is IDEMPOTENT: the
+    * `commit = true` advances standing/band-index/spec through the
+    * committed delta's own commit ([[commitDelta]]), minus the snapshot
+    * advance — every candidate is already in the snapshot. After a commit the operator is IDEMPOTENT: the
     * re-admitted docs are standing, so a second pass emits an empty
     * changeset (curation-rejected docs legitimately remain fp-tier
     * [[reconcileCandidates]] — the admission chain re-drops them).
@@ -788,17 +794,8 @@ object Pipeline {
       statePrefix: String, commit: Boolean = false,
       checkpointDir: Option[String] = None): DataFrame = {
     val spark = newCrawl.sparkSession
-    val spec = graft.sources.IndexSpec.readRequired(spark, statePrefix)
-    val chunkTokens = spec.getAs[Int]("chunk_tokens")
-    val packTokens = spec.getAs[Long]("pack_tokens")
-    val nShards = spec.getAs[Int]("n_shards")
-    val threshold = spec.getAs[Double]("neardup_threshold")
-    val binBase = spec.getAs[Long]("max_bin") + 1L
-    val generation = specGeneration(spec)
-    val nonce = java.lang.Long.toHexString(System.nanoTime())
-    val matBase = Buffers.materializer(checkpointDir)
-    val mat = (df: DataFrame, name: String) =>
-      matBase(df, s"${name}_$nonce")
+    val spec = CorpusSpec.read(spark, statePrefix)
+    val mat = waistMaterializer(checkpointDir)
 
     // candidate slice, curated (the candidates' fps are all IN the
     // snapshot by construction, so the delta's snapshot-fp exact
@@ -813,34 +810,14 @@ object Pipeline {
 
     val standing = spark.table(standingTable(statePrefix))
     val (survivors, adds) = admitScreened(candCur, corpusDocs,
-      statePrefix, standing, chunkTokens, packTokens, nShards,
-      threshold, binBase, generation, mat)
+      statePrefix, standing, spec, mat)
 
     val out = mat(adds.select(lit("add").as("op"), col("doc_id"),
       col("chunk_idx"), col("n_tokens"), col("ids_digest"),
       col("bin_id"), col("shard")), "reconcile_changeset")
 
-    if (commit) {
-      val newStanding = mat(standing
-        .unionByName(survivors.select("doc_id")), "reconcile_standing")
-      // band index FIRST (same ordering as commitDelta): a crash after
-      // the standing overwrite but before the index append would leave
-      // the re-admitted docs standing-but-unindexed — and since they
-      // are standing, no re-run ever re-appends their bands, a
-      // PERMANENT silent near-dup recall gap. The reverse crash merely
-      // orphans index entries, which probes standing-filter and the
-      // next vacuum reclaims.
-      Dedup.appendNearDupIndex(survivors, neardupTable(statePrefix),
-        ngram = NdNgram, k = NdK, bands = NdBands)
-      graft.sources.Sinks.saveTablePartitioned(newStanding,
-        standingTable(statePrefix),
-        bucketBy = Some((32, Seq("doc_id"))), sortBy = Seq("doc_id"))
-      val newMaxBin = Option(out.agg(max("bin_id")).head().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(binBase - 1L)
-      writeSpec(spark, statePrefix, spec.getAs[Long]("mix_budget_tokens"),
-        chunkTokens, packTokens, spec.getAs[Int]("num_merges"), nShards,
-        threshold, newMaxBin, generation, specMinGeneration(spec))
-    }
+    if (commit) commitDelta(spark, statePrefix, newFps = None, survivors,
+      standing, out, mat)
     out
   }
 
@@ -887,9 +864,8 @@ object Pipeline {
   def retrainPressure(corpusDocs: DataFrame,
       statePrefix: String): DataFrame = {
     val spark = corpusDocs.sparkSession
-    val spec = graft.sources.IndexSpec.readRequired(spark, statePrefix)
-    val gen = specGeneration(spec)
-    val budget = spec.getAs[Long]("mix_budget_tokens")
+    val spec = CorpusSpec.read(spark, statePrefix)
+    val gen = spec.generation
     val standing = corpusDocs
       .join(spark.table(standingTable(statePrefix)), Seq("doc_id"),
         "left_semi")
@@ -919,7 +895,8 @@ object Pipeline {
         val docStats = standingDocs.groupBy("lang")
           .agg(count(lit(1)).as("n_docs"))
         val fresh = Relational.temperatureThresholds(standingDocs,
-            col("lang"), size(TextAnalysis.tokens(col("text"))), budget)
+            col("lang"), size(TextAnalysis.tokens(col("text"))),
+            spec.mixBudgetTokens)
           .select(col("grp").as("lang"), col("thresh").as("fresh_thresh"))
         val frozen = spark.table(mixTable(statePrefix, gen))
           .select(col("grp").as("lang"), col("thresh").as("frozen_thresh"))
@@ -977,14 +954,8 @@ object Pipeline {
   def retrainState(corpusDocs: DataFrame,
       statePrefix: String): DataFrame = {
     val spark = corpusDocs.sparkSession
-    val spec = graft.sources.IndexSpec.readRequired(spark, statePrefix)
-    val budget = spec.getAs[Long]("mix_budget_tokens")
-    val chunkTokens = spec.getAs[Int]("chunk_tokens")
-    val packTokens = spec.getAs[Long]("pack_tokens")
-    val numMerges = spec.getAs[Int]("num_merges")
-    val nShards = spec.getAs[Int]("n_shards")
-    val threshold = spec.getAs[Double]("neardup_threshold")
-    val gen2 = specGeneration(spec) + 1
+    val spec = CorpusSpec.read(spark, statePrefix)
+    val gen2 = spec.generation + 1
 
     val standing = spark.table(standingTable(statePrefix))
     Buffers.scoped(corpusDocs
@@ -1000,29 +971,26 @@ object Pipeline {
       // stages 3–6 of the build, trained on the standing corpus, state
       // written under the NEW generation's names (v1 tables untouched)
       val thresholds = Relational.temperatureThresholds(standingDocs,
-        col("lang"), size(TextAnalysis.tokens(col("text"))), budget)
-      graft.sources.Sinks.saveTable(thresholds,
-        mixTable(statePrefix, gen2))
+        col("lang"), size(TextAnalysis.tokens(col("text"))),
+        spec.mixBudgetTokens)
+      Sinks.saveTable(thresholds, mixTable(statePrefix, gen2))
       val selPlan = Relational.mixtureApplyThresholds(standingDocs,
         col("doc_id"), col("lang"), thresholds)
       val out = Buffers.scoped(selPlan) { selDocs =>
-        val merges = Bpe.trainMerges(selDocs, numMerges)
+        val merges = Bpe.trainMerges(selDocs, spec.numMerges)
         Bpe.saveMerges(spark, merges, mergesTable(statePrefix, gen2),
-          numMerges)
-        graft.sources.Sinks.saveTable(Bpe.tokenIds(selDocs, merges),
+          spec.numMerges)
+        Sinks.saveTable(Bpe.tokenIds(selDocs, merges),
           vocabTable(statePrefix, gen2))
         Buffers.scoped(withChunkKey(Bpe.chunkEncoded(
-            Bpe.encodeDocs(selDocs, merges), chunkTokens)))(
-          packShardEmit(_, packTokens, nShards, binBase = 0L))
+            Bpe.encodeDocs(selDocs, merges), spec.chunkTokens)))(
+          packShardEmit(_, spec, binBase = 0L))
       }
 
       // spec LAST — the generation flip (with the reset bin space) IS
       // the retrain's commit marker
-      val maxBin = Option(out.agg(max("bin_id")).head().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(-1L)
-      writeSpec(spark, statePrefix, budget, chunkTokens, packTokens,
-        numMerges, nShards, threshold, maxBin, gen2,
-        specMinGeneration(spec))
+      spec.copy(maxBin = maxBinOf(out), generation = gen2)
+        .write(spark, statePrefix)
       out
     }
   }
@@ -1037,24 +1005,17 @@ object Pipeline {
     *   - spec VANISHED from the catalog between the listing and this
     *     read (a concurrent retirement): "no reference" — the same
     *     answer its completed DROP would give.
-    *   - spec still listed but VERIFIED DANGLING — the entry is a
-    *     view-kind object whose read fails with TABLE_OR_VIEW_NOT_FOUND
-    *     while the entry itself still exists, i.e. its base relation is
-    *     gone: "no reference". The merges-table pin lived in the
-    *     dropped base, so the export is already undecodable via this
-    *     spec regardless of what this drop reclaims; aborting would
-    *     wedge generation reclaim forever on a leftover wrapper whose
-    *     only remedy is dropping it anyway (the exact self-wedge the
-    *     crash sweep's drop leg would otherwise hit on its own healed
-    *     half-retirements). Verified, not inferred from the error
-    *     alone: the entry must still EXIST and be a VIEW/TEMPORARY —
-    *     a plain TABLE raising this condition is inconsistent catalog
-    *     state and aborts below.
-    *   - anything else (corrupt footer, FS hiccup, mid-scan error, the
-    *     inconsistent-table case above): PROPAGATE — abort the drop
-    *     loudly rather than silently disabling the guard, which could
-    *     reclaim a merges table a live export still decodes against,
-    *     the irrecoverable loss the guard exists to prevent.
+    *   - spec still listed but DANGLING — the entry exists yet its read
+    *     fails with TABLE_OR_VIEW_NOT_FOUND (a view whose base relation
+    *     is gone): abort, naming the entry. The engine writes no view,
+    *     so such an entry is not its own leftover, and whether it still
+    *     pins this merges table cannot be read; the remedy is to drop
+    *     the entry (or restore its base) and re-run.
+    *   - anything else (corrupt footer, FS hiccup, mid-scan error):
+    *     PROPAGATE — abort the drop loudly rather than silently
+    *     disabling the guard, which could reclaim a merges table a live
+    *     export still decodes against, the irrecoverable loss the guard
+    *     exists to prevent.
     */
   private def specReferencesMergesTable(spark: SparkSession, st: String,
       mt: String): Boolean = {
@@ -1068,25 +1029,13 @@ object Pipeline {
           if Option(e.getCondition)
             .exists(_.contains("TABLE_OR_VIEW_NOT_FOUND")) =>
         if (!spark.catalog.tableExists(st)) false // concurrently retired
-        else {
-          val kind =
-            try Option(spark.catalog.getTable(st).tableType).getOrElse("")
-            catch {
-              // vanished between tableExists and getTable: retired
-              case _: org.apache.spark.sql.AnalysisException => "VIEW"
-            }
-          if (kind == "VIEW" || kind == "TEMPORARY" ||
-            kind == "TEMP_VIEW" || kind == "GLOBAL_TEMP_VIEW") {
-            false // verified dangling view: undecodable spec, tolerated
-          } else {
-            throw new IllegalStateException(
-              s"dropGeneration: export spec '$st' is a $kind yet reads " +
-                s"as TABLE_OR_VIEW_NOT_FOUND (${e.getMessage}) — " +
-                "inconsistent catalog state; aborting the drop rather " +
-                "than disabling the export-reference guard. Repair or " +
-                s"drop '$st' and re-run.", e)
-          }
-        }
+        else throw new IllegalStateException(
+          s"dropGeneration: export spec '$st' exists but reads as " +
+            s"TABLE_OR_VIEW_NOT_FOUND (${e.getMessage}) — its base " +
+            "relation is gone, so whether it references " +
+            s"'$mt' cannot be checked; aborting the drop rather than " +
+            s"disabling the export-reference guard. Drop '$st' (or " +
+            "restore its base relation) and re-run.", e)
     }
   }
 
@@ -1123,10 +1072,9 @@ object Pipeline {
     * checkpointDir GC in [[corpusDelta]] — drop a generation only once
     * no live export depends on it. Tolerate-vs-abort per spec is
     * [[specReferencesMergesTable]]: a vanished spec (concurrent
-    * retirement) and a VERIFIED-dangling spec view (entry exists, base
-    * relation gone — an undecodable leftover wrapper) read as "no
-    * reference"; any OTHER spec-read failure aborts the drop loudly
-    * rather than disabling the guard. Cost:
+    * retirement) reads as "no reference"; any OTHER spec-read failure,
+    * a dangling spec view (entry exists, base relation gone) included,
+    * aborts the drop loudly rather than disabling the guard. Cost:
     * a driver loop over catalog names reading one-row specs, plus
     * three DROPs — a maintenance operation, run beside compaction.
     *
@@ -1138,9 +1086,9 @@ object Pipeline {
     */
   def dropGeneration(spark: SparkSession, statePrefix: String,
       gen: Int): Unit = {
-    val spec = graft.sources.IndexSpec.readRequired(spark, statePrefix)
-    val live = specGeneration(spec)
-    val minGen = specMinGeneration(spec)
+    val spec = CorpusSpec.read(spark, statePrefix)
+    val live = spec.generation
+    val minGen = spec.minGeneration
     require(gen < live,
       s"dropGeneration: generation $gen is ${if (gen == live) "the LIVE"
         else "beyond the live"} generation of $statePrefix (live = " +
@@ -1165,11 +1113,7 @@ object Pipeline {
       spark.sql(s"DROP TABLE IF EXISTS $t")
       graft.core.CrashHook.fire(s"dropTable:$t")
     }
-    writeSpec(spark, statePrefix, spec.getAs[Long]("mix_budget_tokens"),
-      spec.getAs[Int]("chunk_tokens"), spec.getAs[Long]("pack_tokens"),
-      spec.getAs[Int]("num_merges"), spec.getAs[Int]("n_shards"),
-      spec.getAs[Double]("neardup_threshold"),
-      spec.getAs[Long]("max_bin"), live, gen + 1)
+    spec.copy(minGeneration = gen + 1).write(spark, statePrefix)
   }
 
   /** Vacuum every persisted index a corpus deployment maintains beside
@@ -1237,18 +1181,21 @@ object Pipeline {
         keepDocs.select(col("doc_id").as("vec_id"))))
   }
 
-  /** The state advance of a committed delta (see [[corpusDelta]]).
-    * Every input that reads a state table is materialized BEFORE the
-    * first overwrite, so no write consumes a table it is replacing.
-    * The spec (with the new max_bin) is written last — the same
-    * commit-marker role it plays in the initial build.
+  /** The state advance of a committed changeset — [[corpusDelta]]'s
+    * and [[reconcileDelta]]'s one commit. In order: materialize the new
+    * standing set, append the survivors to the band index, overwrite
+    * the snapshot with `newFps` (a delta; a reconcile passes `None`, its
+    * candidates are already in the snapshot), overwrite the standing
+    * set, and write the spec LAST — the same commit-marker role it plays
+    * in the initial build — with only `max_bin` advanced to the
+    * changeset's highest add bin. Every input that reads a state table
+    * is materialized BEFORE the first overwrite, so no write consumes a
+    * table it is replacing.
     */
   private def commitDelta(spark: SparkSession, statePrefix: String,
-      newFps: DataFrame, survivors: DataFrame, standingNow: DataFrame,
-      out: DataFrame,
-      spec: (Int, Long, Int, Double, Long), generation: Int,
+      newFps: Option[DataFrame], survivors: DataFrame,
+      standingNow: DataFrame, out: DataFrame,
       mat: (DataFrame, String) => DataFrame): Unit = {
-    val (chunkTokens, packTokens, nShards, threshold, binBase) = spec
     // materialize everything that still reads the old state tables
     // (survivors arrives already checkpointed — the delta's waist).
     // newFps needs NO barrier: it reads only the caller's crawl (never
@@ -1274,19 +1221,11 @@ object Pipeline {
       ngram = NdNgram, k = NdK, bands = NdBands)
     // same bucketed layout the build writes, so the NEXT delta's joins
     // stay snapshot-side exchange-free
-    graft.sources.Sinks.saveTablePartitioned(newFps,
-      snapshotTable(statePrefix),
-      bucketBy = Some((32, Seq("doc_id"))), sortBy = Seq("doc_id"))
-    graft.sources.Sinks.saveTablePartitioned(newStanding,
-      standingTable(statePrefix),
-      bucketBy = Some((32, Seq("doc_id"))), sortBy = Seq("doc_id"))
-    val newMaxBin = Option(out.filter(col("op") === "add")
-        .agg(max("bin_id")).head().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(binBase - 1L)
-    val old = graft.sources.IndexSpec.readRequired(spark, statePrefix)
-    writeSpec(spark, statePrefix, old.getAs[Long]("mix_budget_tokens"),
-      chunkTokens, packTokens, old.getAs[Int]("num_merges"), nShards,
-      threshold, newMaxBin, generation, specMinGeneration(old))
+    newFps.foreach(writeByDocId(_, snapshotTable(statePrefix)))
+    writeByDocId(newStanding, standingTable(statePrefix))
+    val spec = CorpusSpec.read(spark, statePrefix)
+    spec.copy(maxBin = maxBinOf(out.filter(col("op") === "add"),
+      spec.maxBin)).write(spark, statePrefix)
   }
 
   /** Fold a [[corpusDelta]] changeset into a chunk relation: drop every
@@ -1340,7 +1279,7 @@ object Pipeline {
   def compactCorpus(chunks: DataFrame, statePrefix: String,
       saveAs: String): DataFrame = {
     val spark = chunks.sparkSession
-    val spec = graft.sources.IndexSpec.readRequired(spark, statePrefix)
+    val spec = CorpusSpec.read(spark, statePrefix)
     val out = compactInto(chunks, spec, saveAs)
 
     // vacuum the band index: appendNearDupIndex only ever grows it, so
@@ -1354,13 +1293,7 @@ object Pipeline {
     // spec advance LAST (max_bin only ever shrinks here) — the
     // compacted table is durable before any delta can place bins
     // against the new, smaller bin space
-    val maxBin = Option(out.agg(max("bin_id")).head().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(-1L)
-    writeSpec(spark, statePrefix, spec.getAs[Long]("mix_budget_tokens"),
-      spec.getAs[Int]("chunk_tokens"), spec.getAs[Long]("pack_tokens"),
-      spec.getAs[Int]("num_merges"), spec.getAs[Int]("n_shards"),
-      spec.getAs[Double]("neardup_threshold"), maxBin,
-      specGeneration(spec), specMinGeneration(spec))
+    spec.copy(maxBin = maxBinOf(out)).write(spark, statePrefix)
     out
   }
 
@@ -1423,11 +1356,9 @@ object Pipeline {
     * managed one, where the chunks-spec epoch flip must land BEFORE
     * the corpus spec's max_bin advance).
     */
-  private def compactInto(chunks: DataFrame,
-      spec: org.apache.spark.sql.Row, saveAs: String): DataFrame = {
+  private def compactInto(chunks: DataFrame, spec: CorpusSpec,
+      saveAs: String): DataFrame = {
     val spark = chunks.sparkSession
-    val packTokens = spec.getAs[Long]("pack_tokens")
-    val nShards = spec.getAs[Int]("n_shards")
     // re-key and persist: the pack's two-pass prefix sum, the shard
     // map, and the final join all re-read the folded relation, whose
     // own plan may be N anti-joins deep — exactly the cost compaction
@@ -1435,14 +1366,11 @@ object Pipeline {
     Buffers.scoped(withChunkKey(chunks.select(
         col("doc_id"), col("chunk_idx"), col("n_tokens"),
         col("ids_digest")))) { keyed =>
-      val assigned = packShardAssign(keyed, packTokens, nShards,
-          binBase = 0L)
+      writeByDocId(packShardAssign(keyed, spec, binBase = 0L)
         .select(col("doc_id"),
           col("chunk_idx").cast("long").as("chunk_idx"),
           col("n_tokens"), col("ids_digest"), col("bin_id"),
-          col("shard"))
-      graft.sources.Sinks.saveTablePartitioned(assigned, saveAs,
-        bucketBy = Some((32, Seq("doc_id"))), sortBy = Seq("doc_id"))
+          col("shard")), saveAs)
       spark.table(saveAs)
     }
   }
@@ -1465,8 +1393,7 @@ object Pipeline {
   private def writeChunksEpoch(spark: SparkSession, p: String,
       epoch: Long): Unit = {
     import spark.implicits._
-    graft.sources.IndexSpec.write(Seq(epoch).toDF("epoch"),
-      chunksSpecKey(p))
+    IndexSpec.write(Seq(epoch).toDF("epoch"), chunksSpecKey(p))
   }
 
   /** Stand up the MANAGED corpus table for a freshly built chunk
@@ -1486,15 +1413,10 @@ object Pipeline {
     */
   def corpusTableInit(chunks: DataFrame, statePrefix: String): Unit = {
     val spark = chunks.sparkSession
-    graft.sources.Sinks.saveTablePartitioned(
-      chunks.select("doc_id", "chunk_idx", "n_tokens", "ids_digest",
-        "bin_id", "shard"),
-      chunksBase(statePrefix, 0L),
-      bucketBy = Some((32, Seq("doc_id"))), sortBy = Seq("doc_id"))
-    graft.sources.Sinks.saveTablePartitioned(
-      emptyChangelog(chunks.withColumn("op", lit("add"))),
-      changelogTable(statePrefix),
-      bucketBy = Some((32, Seq("doc_id"))), sortBy = Seq("doc_id"))
+    writeByDocId(chunks.select("doc_id", "chunk_idx", "n_tokens",
+      "ids_digest", "bin_id", "shard"), chunksBase(statePrefix, 0L))
+    writeByDocId(emptyChangelog(chunks.withColumn("op", lit("add"))),
+      changelogTable(statePrefix))
     writeChunksEpoch(spark, statePrefix, 0L)
   }
 
@@ -1543,8 +1465,7 @@ object Pipeline {
     require(compactEvery >= 1,
       s"corpusTableFold: compactEvery must be >= 1, got $compactEvery")
     val spark = delta.sparkSession
-    val cspec = graft.sources.IndexSpec.readRequired(spark,
-      chunksSpecKey(statePrefix))
+    val cspec = IndexSpec.readRequired(spark, chunksSpecKey(statePrefix))
     val epoch = cspec.getAs[Long]("epoch")
     // entry sweep: reclaim the base a crashed compaction failed to drop
     if (epoch > 0L)
@@ -1554,31 +1475,22 @@ object Pipeline {
         .filter(col("epoch") === epoch)
         .agg(max("__seq")).head().get(0))
       .map(_.asInstanceOf[Long] + 1L).getOrElse(0L)
-    graft.sources.Sinks.appendTablePartitioned(
-      delta.select(col("op"), col("doc_id"), col("chunk_idx"),
+    writeByDocId(delta.select(col("op"), col("doc_id"), col("chunk_idx"),
         col("n_tokens"), col("ids_digest"), col("bin_id"), col("shard"),
         lit(epoch).as("epoch"), lit(nextSeq).as("__seq")),
-      changelogTable(statePrefix),
-      bucketBy = Some((32, Seq("doc_id"))), sortBy = Seq("doc_id"))
+      changelogTable(statePrefix), append = true)
 
     if (nextSeq + 1L >= compactEvery) {
-      val spec = graft.sources.IndexSpec.readRequired(spark, statePrefix)
-      val folded = corpusTableRead(spark, statePrefix)
-      compactInto(folded, spec, chunksBase(statePrefix, epoch + 1))
+      val spec = CorpusSpec.read(spark, statePrefix)
+      val compacted = compactInto(corpusTableRead(spark, statePrefix),
+        spec, chunksBase(statePrefix, epoch + 1))
       writeChunksEpoch(spark, statePrefix, epoch + 1) // reader flip
       // full vacuum policy on the compaction cadence: the band index
       // always (vacuumIndexes' unconditional leg — what the bare call
       // here used to do), plus every configured companion index
       vacuumIndexes(spark, statePrefix, fingerprintIndex, simhashIndex,
         winnowIndex, semanticIndex)
-      val maxBin = Option(spark.table(chunksBase(statePrefix, epoch + 1))
-          .agg(max("bin_id")).head().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(-1L)
-      writeSpec(spark, statePrefix, spec.getAs[Long]("mix_budget_tokens"),
-        spec.getAs[Int]("chunk_tokens"), spec.getAs[Long]("pack_tokens"),
-        spec.getAs[Int]("num_merges"), spec.getAs[Int]("n_shards"),
-        spec.getAs[Double]("neardup_threshold"), maxBin,
-        specGeneration(spec), specMinGeneration(spec))
+      spec.copy(maxBin = maxBinOf(compacted)).write(spark, statePrefix)
       // cleanup: superseded base + folded log entries (readers already
       // filter them out by epoch, so this is reclamation, not safety)
       spark.sql(s"DROP TABLE IF EXISTS ${chunksBase(statePrefix, epoch)}")
@@ -1587,9 +1499,7 @@ object Pipeline {
       // fired no hook and crashes right after it were unswept)
       graft.core.CrashHook.fire(
         s"dropTable:${chunksBase(statePrefix, epoch)}")
-      graft.sources.Sinks.saveTablePartitioned(emptyChangelog(delta),
-        changelogTable(statePrefix),
-        bucketBy = Some((32, Seq("doc_id"))), sortBy = Seq("doc_id"))
+      writeByDocId(emptyChangelog(delta), changelogTable(statePrefix))
     }
   }
 
@@ -1600,8 +1510,7 @@ object Pipeline {
     */
   def corpusTableRead(spark: SparkSession,
       statePrefix: String): DataFrame = {
-    val cspec = graft.sources.IndexSpec.readRequired(spark,
-      chunksSpecKey(statePrefix))
+    val cspec = IndexSpec.readRequired(spark, chunksSpecKey(statePrefix))
     val epoch = cspec.getAs[Long]("epoch")
     foldChangeLog(
       spark.table(chunksBase(statePrefix, epoch)),

@@ -27,7 +27,9 @@ import graft.operators.{Dedup, Pipeline, Similarity}
   * state per crash point. Crash ordinals are enumerated from a clean
   * reference run of the same leg, so the sweep is exhaustive by
   * construction — a new table write added to any leg is swept
-  * automatically.
+  * automatically. One more test only enumerates: the delta and the
+  * reconcile commit share one commit protocol, and their site lists
+  * pin its order.
   *
   * The corpus is deliberately tiny (the sweep re-runs whole legs tens
   * of times) and the v2 crawl carries no near-dup structure, so the
@@ -180,6 +182,30 @@ class CrashSweepSpec extends SparkSpec {
       dropState(p)
     }
     dropState(ref); dropState(en)
+  }
+
+  // --------------------------------------------------- commit order
+
+  test("commit order: a delta and a reconcile commit in one crash order") {
+    // both go through one commit; enumerate (no sweep) its sites on a
+    // clean run of each: band index first, standing next-to-last, the
+    // spec marker last, and the snapshot advance on the delta only
+    val p = s"sweep_o_${System.nanoTime()}"
+    Pipeline.corpusBuildWithState(v1, p).count()
+    val delta = enumerateSites(
+      Pipeline.corpusDelta(v2, v1, p, commit = true).count())
+    val reconcile = enumerateSites(
+      Pipeline.reconcileDelta(v2, v2, p, commit = true).count())
+    info(s"delta commit: ${delta.mkString(", ")}")
+    info(s"reconcile commit: ${reconcile.mkString(", ")}")
+    Seq(delta, reconcile).foreach { sites =>
+      sites.head shouldBe s"writeTable:append:${p}_neardup"
+      sites.init.last shouldBe s"writeTable:overwrite:${p}_standing"
+      sites.last shouldBe s"saveTable:${p}__spec"
+    }
+    delta should contain(s"writeTable:overwrite:${p}_snapshot")
+    reconcile should not contain s"writeTable:overwrite:${p}_snapshot"
+    dropState(p)
   }
 
   // -------------------------------------------------------- compact

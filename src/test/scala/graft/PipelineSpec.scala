@@ -686,11 +686,11 @@ class PipelineSpec extends SparkSpec {
     ex.getMessage should include(s"${p}_export1")
     spark.catalog.tableExists(s"${p}_merges") shouldBe true
 
-    // retire the export; the drop proceeds and takes EXACTLY gen 1.
-    // Guard robustness (ADVICE r14, narrowed in review): a spec whose
-    // RELATION vanished between the catalog listing and the read (here
-    // a spec view over a just-dropped base) is a concurrently-retired
-    // export — "no reference", tolerated...
+    // retire the export; the drop then takes EXACTLY gen 1 — once no
+    // spec entry is left that the guard cannot read. Guard robustness
+    // (ADVICE r14, r17): a spec entry that still EXISTS but whose
+    // relation is gone (here a spec view over a just-dropped base)
+    // cannot be checked for a reference, so it aborts the reclaim...
     Seq(s"${p}_export1", s"${p}_export1__spec")
       .foreach(t => spark.sql(s"DROP TABLE $t"))
     spark.sql(
@@ -698,8 +698,8 @@ class PipelineSpec extends SparkSpec {
     spark.sql(s"CREATE VIEW ${p}_ghost__spec AS " +
       s"SELECT merges_table FROM ${p}_ghostbase")
     spark.sql(s"DROP TABLE ${p}_ghostbase")
-    // ...while any OTHER spec-read failure must ABORT the reclaim
-    // loudly — never silently disable the export guard
+    // ...and so does any OTHER spec-read failure — never silently
+    // disable the export guard
     locally {
       import spark.implicits._
       Seq(1).toDF("x")
@@ -707,15 +707,23 @@ class PipelineSpec extends SparkSpec {
           .as("merges_table"))
         .createOrReplaceTempView(s"${p}_ghost2__spec")
     }
+    def windowUntouched(): Unit = {
+      // the abort fired in the guard, BEFORE any drop
+      graft.sources.IndexSpec.readRequired(spark, p)
+        .getAs[Int]("min_generation") shouldBe 1
+      spark.catalog.tableExists(s"${p}_merges") shouldBe true
+    }
     an[Exception] should be thrownBy Pipeline.dropGeneration(spark, p, 1)
-    // the abort fired in the guard, BEFORE any drop: window untouched
-    graft.sources.IndexSpec.readRequired(spark, p)
-      .getAs[Int]("min_generation") shouldBe 1
-    spark.catalog.tableExists(s"${p}_merges") shouldBe true
+    windowUntouched()
     spark.catalog.dropTempView(s"${p}_ghost2__spec")
-    // with only the vanished-relation ghost left, the drop proceeds
-    Pipeline.dropGeneration(spark, p, 1)
+    // the dangling view alone still aborts, naming the entry
+    val dangling = the[IllegalStateException] thrownBy
+      Pipeline.dropGeneration(spark, p, 1)
+    dangling.getMessage should include(s"${p}_ghost__spec")
+    windowUntouched()
+    // the remedy the message names: drop the entry, re-run
     spark.sql(s"DROP VIEW ${p}_ghost__spec")
+    Pipeline.dropGeneration(spark, p, 1)
     Seq(s"${p}_mix", s"${p}_merges", s"${p}_vocab").foreach(t =>
       withClue(t) { spark.catalog.tableExists(t) shouldBe false })
     Seq(s"${p}_mix_g2", s"${p}_merges_g2", s"${p}_vocab_g2",
@@ -878,5 +886,33 @@ class PipelineSpec extends SparkSpec {
     val leaked = pinnedIds -- before
     assert(leaked.isEmpty,
       s"failed corpusBuild left persisted intermediates: rdd ids $leaked")
+  }
+
+  test("the p__spec row is read, advanced and written only by CorpusSpec") {
+    // source scan: a spec column spelled out, or the state family's spec
+    // read, anywhere in Pipeline outside the typed record would be a
+    // second copy of the commit protocol
+    val lines = scala.io.Source.fromFile(
+      "src/main/scala/graft/operators/Pipeline.scala", "UTF-8")
+      .getLines().toVector
+    // the record: its case class through the end of its companion
+    val start = lines.indexWhere(_.contains("case class CorpusSpec("))
+    val obj = lines.indexWhere(_.contains("object CorpusSpec {"))
+    val record = if (start < 0 || obj < start) 0 until 0 else {
+      val depths = lines.drop(obj).scanLeft(0)((d, l) =>
+        d + l.count(_ == '{') - l.count(_ == '}'))
+      start until obj + depths.indexWhere(_ == 0, 1)
+    }
+    val banned = Seq("mix_budget_tokens", "chunk_tokens", "pack_tokens",
+      "num_merges", "n_shards", "neardup_threshold", "max_bin",
+      "generation", "min_generation").map(c => "\"" + c + "\"") :+
+      "readRequired(spark, statePrefix)"
+    val offenders = for {
+      (line, n) <- lines.zipWithIndex
+      if !record.contains(n)
+      hit <- banned.filter(line.contains)
+    } yield s"Pipeline.scala:${n + 1}: $hit"
+    offenders shouldBe empty
+    record should not be empty
   }
 }
