@@ -32,9 +32,10 @@ object AbBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_AB_REPS", "6").toInt
     val spark = graft.core.Sessions.local("graft-ab")
+    val tables = graft.sources.Tables(spark, sfDir)
 
     // ---- kmeans-shaped input: (cluster, dist2, embedding), cached ----
-    val kinPlan = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val kinPlan = tables.embeddings
       .select((col("vec_id") % 8).cast("int").as("cluster"),
         ((col("vec_id") % 1000).cast("double") / 7.0).as("dist2"),
         col("embedding"))
@@ -42,7 +43,7 @@ object AbBench {
     // ---- lm-shaped input: (doc_id, term) per token, cached ----
     // the log term is computed BEFORE the cache so both arms fold the
     // identical double column — the arms differ only in the aggregate
-    val linPlan = spark.read.parquet(s"$sfDir/documents.parquet")
+    val linPlan = tables.documents
       .select(col("doc_id"),
         explode(filter(split(col("text"), "\\s+"), t => t =!= ""))
           .as("w"))
@@ -52,7 +53,7 @@ object AbBench {
 
     // ---- classifier-shaped input: 5 bounded gradient terms per row,
     // one global group (the logisticFit round shape), cached ----
-    val cinPlan = spark.read.parquet(s"$sfDir/documents.parquet")
+    val cinPlan = tables.documents
       .select(col("doc_id"),
         (hash(col("doc_id")).cast("double") / 2147483647d).as("r"),
         (abs(hash(col("text"))).cast("double") % 1000d / 1000d).as("x1"),

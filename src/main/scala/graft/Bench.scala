@@ -36,7 +36,7 @@ object Bench {
     // warm the session (parquet footer reads, codegen, shuffle machinery)
     // so the first timed query isn't charged for JVM startup
     try {
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
+      graft.sources.Tables(spark, sfDir).lineitem
         .groupBy("l_returnflag").count().collect()
     } catch { case _: Throwable => () }
 

@@ -1,8 +1,11 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Typed access to the driver's TPC-H-ish testdata directory
   * (`TESTDATA.md`): one parquet file per table.
@@ -10,10 +13,18 @@ import org.apache.spark.sql.types.LongType
   * Parquet is the engine's canonical columnar source: scans get predicate
   * pushdown, column pruning, and vectorized decoding for free — at 100 TB the
   * difference between a pruned scan and a full scan is the whole job.
+  *
+  * Every accessor opens its file with a known schema
+  * ([[Tables.schemaOf]]): the first open of a file in a session infers
+  * the schema from the parquet footer (one Spark job); later opens in that
+  * session start no job. Each open still lists the file, and the data is
+  * read only when the returned DataFrame runs.
   */
 final case class Tables(spark: SparkSession, dir: String) {
+  private def path(name: String): String = s"$dir/$name.parquet"
+
   private def t(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    spark.read.schema(Tables.schemaOf(spark, path(name))).parquet(path(name))
 
   def region: DataFrame = t("region")
   def nation: DataFrame = t("nation")
@@ -35,7 +46,7 @@ final case class Tables(spark: SparkSession, dir: String) {
     * IS the UTC instant, matching DuckDB's naive read).
     */
   def events: DataFrame = {
-    val df = t("events")
+    val df = t("events") // its schema is the memoized one: no job
     val asTimestamp =
       if (df.schema("ts").dataType == LongType)
         df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -49,10 +60,46 @@ final case class Tables(spark: SparkSession, dir: String) {
     * and the DataFrame surface answer the same catalog — reference teaches
     * they are one engine (303-spark-sql/README.md:83-93).
     */
-  def registerAll(): Unit = {
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "documents", "embeddings")
-      .foreach(n => t(n).createOrReplaceTempView(n))
-    events.createOrReplaceTempView("events")
+  def registerAll(): Unit = Tables.names.foreach(n =>
+    (if (n == "events") events else t(n)).createOrReplaceTempView(n))
+}
+
+object Tables {
+  /** The table files of a testdata directory, one `<name>.parquet` each. */
+  val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
+    "part", "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** A file's inferred schema, valid while its length and modification
+    * time stay as they were when it was inferred. */
+  private final case class Stamped(length: Long, modified: Long,
+      schema: StructType)
+
+  /** Per session (held weakly, so a stopped session is not pinned), per
+    * path, the last inferred schema. */
+  private val memo =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Stamped]]()
+
+  /** The schema `spark.read.parquet(path)` infers, inferred once per
+    * session and file version: a rewritten file (new length or
+    * modification time) or another session (which may read parquet
+    * under other settings, e.g. `nanosAsLong`) infers again. The schema
+    * is the inferred one, so it is already nullable. Thread-safe; two
+    * racing first opens may both infer, and either result is kept.
+    */
+  def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val status = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p)
+    val files = memo.synchronized(
+      memo.computeIfAbsent(spark, _ => new ConcurrentHashMap()))
+    Option(files.get(path))
+      .filter(s => s.length == status.getLen &&
+        s.modified == status.getModificationTime)
+      .getOrElse {
+        val fresh = Stamped(status.getLen, status.getModificationTime,
+          spark.read.parquet(path).schema)
+        files.put(path, fresh)
+        fresh
+      }.schema
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.io.File
-
 import graft.plans.PartialAggPushdown
 
 /** Guards for the one-session, one-buffer-owner layout: the suite runs
@@ -25,21 +23,13 @@ class SessionsSpec extends SparkSpec {
 
   test("sessions and buffers are built only in graft/core") {
     val banned = Seq("SparkSession.builder", ".persist(", ".localCheckpoint(")
-    def files(d: File): Seq[File] =
-      Option(d.listFiles()).toSeq.flatten.flatMap(f =>
-        if (f.isDirectory) files(f)
-        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
-    val sources = Seq("src/main/scala", "src/test/scala")
-      .flatMap(d => files(new File(d)))
-    sources.size should be > 50 // the scan must see the tree
+    // the scan must see the tree
+    SparkSpec.sourceLines.map(_._1).distinct.size should be > 50
     val offenders = for {
-      f <- sources
-      path = f.getPath.replace(File.separatorChar, '/')
-      if !path.contains("/graft/core/") && f.getName != "SessionsSpec.scala"
-      (line, n) <- scala.io.Source.fromFile(f, "UTF-8").getLines()
-        .zipWithIndex.toSeq
+      (path, n, line) <- SparkSpec.sourceLines
+      if !path.contains("/graft/core/") && !path.endsWith("/SessionsSpec.scala")
       b <- banned if line.contains(b)
-    } yield s"$path:${n + 1}: $b"
+    } yield s"$path:$n: $b"
     offenders shouldBe empty
   }
 }

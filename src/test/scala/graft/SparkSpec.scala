@@ -1,5 +1,7 @@
 package graft
 
+import java.io.File
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -16,6 +18,23 @@ object SparkSpec {
     Sessions.local("graft-test", cores = 4, shufflePartitions = 4)
   val sfDir = "/root/testdata/sf0.001"
   lazy val tables: Tables = Tables(spark, sfDir)
+
+  /** Every line of the Scala sources under `src/main/scala` and
+    * `src/test/scala` as (path, 1-based line number, text), for the
+    * source-scan guards. */
+  lazy val sourceLines: Seq[(String, Int, String)] = {
+    def files(d: File): Seq[File] =
+      Option(d.listFiles()).toSeq.flatten.flatMap(f =>
+        if (f.isDirectory) files(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    for {
+      f <- Seq("src/main/scala", "src/test/scala")
+        .flatMap(d => files(new File(d)))
+      path = f.getPath.replace(File.separatorChar, '/')
+      (line, n) <- scala.io.Source.fromFile(f, "UTF-8").getLines()
+        .zipWithIndex.toSeq
+    } yield (path, n + 1, line)
+  }
 }
 
 trait SparkSpec extends AnyFunSuite with Matchers {
