@@ -8,8 +8,10 @@ package graft.core
   * managed-table overwrites and appends, including every `IndexSpec`
   * commit marker), the two RENAMEs + DROP inside
   * `PersistedIndex.swapIndexTable` (the crash-ordered vacuum swap),
-  * `Pipeline.dropGeneration`'s table drops, and the managed fold's
-  * epoch-GC drop. Each fires this hook AFTER the mutation lands, so a
+  * `Pipeline.dropGeneration`'s table drops, the managed fold's
+  * epoch-GC drop, and a streaming ingest batch's output write
+  * (`ingestStore:<storeDir>`, before its store write). Each fires this
+  * hook AFTER the mutation lands, so a
   * test can simulate a process death at every point where some writes
   * have landed and the rest have not — the exhaustive form of the
   * hand-picked crash-window tests (VERDICT r14 #2).

@@ -1744,7 +1744,8 @@ object Dedup {
       assertWinnowGeometry(rows.sparkSession, dir, k, w, "winnow fold",
         stamp = false)
       rows.withColumnRenamed("doc_id", "corpus_id")
-    })
+    },
+    store = Some(StructType.fromDDL("doc_id BIGINT, fp BIGINT")))
 
   /** Build the persisted winnowing index ([[winnowIndex]]). */
   def buildWinnowIndex(corpus: DataFrame, table: String, k: Int = 4,

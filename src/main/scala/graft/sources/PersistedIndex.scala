@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** The lifecycle every persisted dedup index family shares —
   * fingerprint, simhash chunk, MinHash band, winnow and IVF — written
@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.StructType
   * store into the index. A family contributes only its constants:
   *
   * @param schema    the index row columns (the empty-table bootstrap;
-  *                  also the row shape of every ingest store but the
-  *                  winnow one, which names `corpus_id` `doc_id`)
+  *                  also the row shape of the family's ingest store
+  *                  unless `store` gives another)
   * @param identity  the column that makes an append idempotent (rows
   *                  whose identity the index already holds are skipped)
   *                  and keys the compaction's keep-set semi-join
@@ -35,6 +35,9 @@ import org.apache.spark.sql.types.StructType
   *                  without an anti-join)
   * @param fromStore (store dir, folded store rows) → index rows: the
   *                  family's store check and column mapping for a fold
+  * @param store     the ingest store's row columns where they differ
+  *                  from `schema` (the winnow store names `corpus_id`
+  *                  `doc_id`)
   */
 final case class PersistedIndex(
     schema: StructType,
@@ -46,7 +49,11 @@ final case class PersistedIndex(
     prepare: DataFrame => DataFrame,
     place: DataFrame => DataFrame = rows => rows,
     distinctOnCompact: Boolean = false,
-    fromStore: (String, DataFrame) => DataFrame = (_, rows) => rows) {
+    fromStore: (String, DataFrame) => DataFrame = (_, rows) => rows,
+    store: Option[StructType] = None) {
+
+  /** The row columns of the family's ingest store. */
+  def storeSchema: StructType = store.getOrElse(schema)
 
   private def sortBy: Seq[String] = bucketBy.map(_._2).getOrElse(Nil)
 
@@ -154,7 +161,8 @@ final case class PersistedIndex(
     *
     * Crash-mid-fold idempotence: the append happens before the store
     * cleanup and anti-joins the index first, so a fold that crashed
-    * between the two re-runs to the identical end state.
+    * between the two re-runs to the identical end state. A `dir` whose
+    * files lack a store column fails before either ([[openStore]]).
     *
     * Run it between batches or while the stream is paused: a
     * concurrently planned screen that already listed the deleted files
@@ -169,7 +177,7 @@ final case class PersistedIndex(
     ensure(spark, table)
     // batch_id < keep partition-prunes the read to the snapshot above:
     // batch ids only grow, so a concurrent write never lands below it
-    appendRows(fromStore(dir, spark.read.parquet(dir)
+    appendRows(fromStore(dir, PersistedIndex.openStore(spark, dir, storeSchema)
       .filter(col("batch_id") < keep).drop("batch_id")), table)
     val foldable = parts.filter(_ != keep)
     PersistedIndex.deletePartitions(fs, path, foldable)
@@ -181,12 +189,17 @@ final case class PersistedIndex(
     * and pass the spec guard. A foreachBatch body runs in the stream's
     * own session, whose relation cache keeps the listing of the batch
     * that first read it; an index fold between batches would otherwise
-    * stay invisible and its fingerprints would stop screening.
+    * stay invisible and its fingerprints would stop screening. The spec
+    * table is refreshed too: after a rebuild between batches the guard
+    * must read the new spec, not fail on the files the rebuild deleted.
     */
   def current(spark: SparkSession, table: String, caller: String): DataFrame = {
     require(spark.catalog.tableExists(table),
       s"$caller: index table $table does not exist — bootstrap it with " +
         "its family's PersistedIndex.ensure at pipeline setup")
+    val st = IndexSpec.specTable(table)
+    if (spec.nonEmpty && spark.catalog.tableExists(st))
+      spark.catalog.refreshTable(st)
     requireSpec(spark, table)
     spark.catalog.refreshTable(table)
     spark.table(table)
@@ -333,15 +346,63 @@ object PersistedIndex {
       graft.core.CrashHook.fire(s"foldDelete:$dir/batch_id=$id")
     }
 
+  /** A batch_id-partitioned store written by the engine, opened with
+    * its known row columns plus `batch_id`: no schema inference, so no
+    * Spark job. A narrower integer column in the files (an INT `doc_id`
+    * under a BIGINT schema) reads widened. Fails unless
+    * [[requireStoreColumns]] finds every column of `schema` in the
+    * store's files.
+    */
+  private def openStore(spark: SparkSession, dir: String,
+      schema: StructType): DataFrame = {
+    requireStoreColumns(spark, dir, schema)
+    spark.read.schema(schema.add("batch_id", LongType)).parquet(dir)
+  }
+
+  /** Fail unless one data file of the store `dir` holds every column of
+    * `schema`, read off that file's footer on the driver (no Spark job).
+    * A read by a known schema takes a column the files lack as NULL, so
+    * a wrong directory — another family's store, or an ingest's landed
+    * output — would screen nothing (every doc lands again) or fold NULL
+    * rows into the index and then delete the directory's partitions.
+    * A store without data files has nothing to misread.
+    */
+  private def requireStoreColumns(spark: SparkSession, dir: String,
+      schema: StructType): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new Path(dir)
+    val fs = path.getFileSystem(conf)
+    val file = storePartitions(fs, path).iterator.flatMap { id =>
+      fs.listStatus(new Path(path, s"batch_id=$id")).iterator.filter(f =>
+        f.isFile && !f.getPath.getName.startsWith("_") &&
+          !f.getPath.getName.startsWith("."))
+    }.nextOption()
+    file.foreach { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+      val held = try reader.getFooter.getFileMetaData.getSchema.getFields
+        .toArray(Array.empty[org.apache.parquet.schema.Type]).map(_.getName)
+        finally reader.close()
+      val resolver = spark.sessionState.conf.resolver
+      val missing = schema.fieldNames.filterNot(n => held.exists(resolver(_, n)))
+      require(missing.isEmpty, s"$dir is not a store of " +
+        s"(${schema.fieldNames.mkString(", ")}): its file ${f.getPath} " +
+        s"holds (${held.mkString(", ")}), without ${missing.mkString(", ")}")
+    }
+  }
+
   /** A store's rows (columns of `schema`) from every batch but
     * `batchId`: a replayed batch must see the store as it was before
     * its first attempt, or a crash between its store write and the
     * checkpoint commit would make the replay screen out its own rows.
     * A store that does not exist yet (the first batch) reads empty.
+    * Opened with `schema` ([[openStore]]), so a batch starts no
+    * schema-inference job; a directory whose files lack a column of
+    * `schema` fails.
     */
   def readStore(spark: SparkSession, dir: String, batchId: Long,
       schema: StructType): DataFrame =
-    try spark.read.parquet(dir).filter(col("batch_id") =!= batchId)
+    try openStore(spark, dir, schema).filter(col("batch_id") =!= batchId)
       .select(schema.fieldNames.map(col).toSeq: _*)
     catch {
       case e: AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>

@@ -353,7 +353,9 @@ object Streams {
     * writes and its checkpoint commit the engine replays it with the
     * SAME batch id, and every body here is idempotent for a fixed id
     * (per-batch dynamic partition overwrite), which makes the pair
-    * effectively exactly-once.
+    * effectively exactly-once. An ingest tier's body screens its batch
+    * once: both of its writes read one buffer of the survivors
+    * ([[landSurvivors]]), released before the body returns.
     */
   def startIngest(df: DataFrame, checkpoint: String)(
       body: (DataFrame, Long) => Unit): StreamingQuery =
@@ -379,13 +381,13 @@ object Streams {
     * per normalized fingerprint (the [[graft.operators.Dedup.exactDedup]]
     * convention), inlined schema-agnostically so any doc_id+text frame
     * streams in. The xxhash64 over the full row breaks doc_id ties
-    * DETERMINISTICALLY: the survivors plan is executed twice (outDir
-    * write, store write) and again on replay, and a tie resolved
-    * differently across those jobs would land a payload that doesn't
-    * correspond to the one whose attempt crashed. (Residual: two rows
-    * with equal doc_id AND a 64-bit hash collision on different payloads
-    * could still flip — accepted.) Returns the input columns plus
-    * `fpCol`.
+    * DETERMINISTICALLY. Within one attempt both writes read one buffer
+    * of the survivors ([[landSurvivors]]), released when the batch
+    * ends, so they always agree; but a replay screens the batch again,
+    * and a tie resolved differently there would land another payload
+    * than the attempt it replaces. (Residual: two rows with equal
+    * doc_id AND a 64-bit hash collision on different payloads could
+    * still flip — accepted.) Returns the input columns plus `fpCol`.
     */
   private def selfDedupBatch(batch: DataFrame, fpCol: String,
       caller: String): DataFrame = {
@@ -400,6 +402,34 @@ object Streams {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
+  /** The landing step every ingest tier ends with: materialize the
+    * batch's `survivors` once ([[graft.core.Buffers.once]]), write
+    * `output` of them to `outDir`, then write `storeRows` of that same
+    * buffer to `storeDir` — the screen (batch scan, self-dedup shuffle,
+    * store and index joins) runs once, not once per write — and release
+    * the buffer when the batch ends, returned or thrown. `storeRows`
+    * must be a function of the survivors alone (their fingerprints or
+    * signatures), so a store row never belongs to a screened-out doc;
+    * `output` drops what the survivors carry only for it.
+    *
+    * Output before store is the replay order: a crash between the
+    * two writes (the [[graft.core.CrashHook]] site
+    * `ingestStore:<storeDir>`) leaves the output partition written and
+    * the store's not, and the replay, whose store read ignores its own
+    * batch, screens the same survivors and rewrites both partitions.
+    */
+  private def landSurvivors(survivors: DataFrame, batchId: Long,
+      outDir: String, storeDir: String,
+      output: DataFrame => DataFrame = docs => docs)(
+      storeRows: DataFrame => DataFrame): Unit = {
+    val buf = Buffers.once(survivors)
+    try {
+      writeBatchIdempotent(output(buf), batchId, outDir)
+      graft.core.CrashHook.fire(s"ingestStore:$storeDir")
+      writeBatchIdempotent(storeRows(buf), batchId, storeDir)
+    } finally Buffers.release(buf)
+  }
+
   /** One micro-batch of [[startDedupedIngest]], exposed so tests and
     * manual backfills invoke exactly what a replayed batch runs. Four
     * steps, each idempotent for a fixed `batchId`:
@@ -411,9 +441,11 @@ object Streams {
     *      attempt, or a crash between the fp write and the checkpoint
     *      commit would make the replay drop its own docs and overwrite
     *      the output partition with nothing (data loss);
-    *   3. survivors → dynamic-partition-overwrite of `outDir/batch_id=N`;
-    *   4. survivors' fingerprints → dynamic-partition-overwrite of
-    *      `fpDir/batch_id=N`.
+    *   3. survivors, buffered once ([[landSurvivors]]) →
+    *      dynamic-partition-overwrite of `outDir/batch_id=N`;
+    *   4. the same buffer's fingerprints → dynamic-partition-overwrite
+    *      of `fpDir/batch_id=N`; the buffer is released when the batch
+    *      ends.
     *
     * Any crash point replays to the identical end state: the store
     * filter makes step 2 deterministic across attempts, and steps 3–4
@@ -445,7 +477,7 @@ object Streams {
     val fpCol = "__fp_ingest"
     val fps = graft.operators.Dedup.fingerprintIndex()
     val self = selfDedupBatch(batch, fpCol, "dedupIngestBatch")
-    val store = readStore(spark, fpDir, batchId, fps.schema)
+    val store = readStore(spark, fpDir, batchId, fps.storeSchema)
       .select(col("fp").as(fpCol))
     // probe-both window: folded history lives in the index table, the
     // store holds only batches since the last fold. With a bloom tier,
@@ -492,9 +524,8 @@ object Streams {
         }
     }
     val survivors = afterIndex.join(store, Seq(fpCol), "left_anti")
-    writeBatchIdempotent(survivors.drop(fpCol), batchId, outDir)
-    writeBatchIdempotent(survivors.select(col(fpCol).as("fp")), batchId,
-      fpDir)
+    landSurvivors(survivors, batchId, outDir, fpDir, _.drop(fpCol))(
+      _.select(col(fpCol).as("fp")))
   }
 
   /** The production ingest loop: per micro-batch self-dedup, screen
@@ -543,16 +574,15 @@ object Streams {
     val self = selfDedupBatch(batch, fpCol, "nearDupIngestBatch").drop(fpCol)
     val chunks = graft.operators.Dedup.simhashChunkTable(self)
     val screen = sigs.priorRows(readStore(spark, sigDir, batchId,
-        sigs.schema), indexTable, "nearDupIngestBatch")
+        sigs.storeSchema), indexTable, "nearDupIngestBatch")
       .select(col("chunk_idx"), col("chunk"), col("simhash").as("__sig_store"))
     val hit = chunks.join(screen, Seq("chunk_idx", "chunk"))
       .filter(bit_count(col("simhash").bitwiseXOR(col("__sig_store")))
         .cast("int") <= maxHamming)
       .select("doc_id").distinct()
     val survivors = self.join(hit, Seq("doc_id"), "left_anti")
-    writeBatchIdempotent(survivors, batchId, outDir)
-    writeBatchIdempotent(chunks.join(survivors.select("doc_id"),
-      Seq("doc_id")), batchId, sigDir)
+    landSurvivors(survivors, batchId, outDir, sigDir)(
+      graft.operators.Dedup.simhashChunkTable(_))
   }
 
   /** The MINHASH-tier sibling of [[nearDupIngestBatch]]: the screen is
@@ -584,7 +614,8 @@ object Streams {
     * [[graft.operators.Dedup.probeNearDupIndex]] contract), whose spec
     * must match this call's (ngram, k, bands). The fold discipline is
     * the [[graft.operators.Dedup.nearDupIndex]] fold, probing BOTH until
-    * the next fold.
+    * the next fold. `doc_id` must be an integer column (INT or BIGINT):
+    * the verify reads the landed text back as BIGINT ids.
     */
   def minhashIngestBatch(batch: DataFrame, batchId: Long, outDir: String,
       bandDir: String, indexCorpus: Option[(String, DataFrame)] = None,
@@ -594,9 +625,11 @@ object Streams {
     val bandIdx = graft.operators.Dedup.nearDupIndex(ngram, k, bands)
     val fpCol = "__fp_ingest"
     val self = selfDedupBatch(batch, fpCol, "minhashIngestBatch").drop(fpCol)
-    val myBands = graft.operators.Dedup.bandBucketTable(self, ngram, k, bands)
+    def bandsOf(docs: DataFrame) =
+      graft.operators.Dedup.bandBucketTable(docs, ngram, k, bands)
+    val myBands = bandsOf(self)
     val priorBands = bandIdx.priorRows(readStore(spark, bandDir, batchId,
-      bandIdx.schema), indexCorpus.map(_._1), "minhashIngestBatch")
+      bandIdx.storeSchema), indexCorpus.map(_._1), "minhashIngestBatch")
     // probeNearDupIndex's candidate shape: probe only the batch's bucket
     // set, bound the PRIOR-side bucket size (the probed slice holds every
     // prior row of a probed bucket, so the count is the true bucket size)
@@ -615,8 +648,7 @@ object Streams {
     // store hits live in outDir's earlier partitions, index hits in the
     // caller-supplied corpus frame
     val landedPrior = readStore(spark, outDir, batchId,
-        StructType.fromDDL("doc_id BIGINT, text STRING"))
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      StructType.fromDDL("doc_id BIGINT, text STRING"))
     val priorDocs = indexCorpus.map { case (_, corpus) =>
       landedPrior.unionByName(
         corpus.select(col("doc_id").cast("long").as("doc_id"), col("text")))
@@ -634,9 +666,7 @@ object Streams {
         col("__sh_new"), col("__sh_prior")), 4) >= threshold)
       .select("new_id").distinct().withColumnRenamed("new_id", "doc_id")
     val survivors = self.join(hit, Seq("doc_id"), "left_anti")
-    writeBatchIdempotent(survivors, batchId, outDir)
-    writeBatchIdempotent(myBands.join(survivors.select("doc_id"),
-      Seq("doc_id")), batchId, bandDir)
+    landSurvivors(survivors, batchId, outDir, bandDir)(bandsOf)
   }
 
   /** Fold the deduped ingest's batch_id-partitioned fingerprint store
@@ -748,14 +778,13 @@ object Streams {
     val self = batch.withColumn("__rn", row_number().over(byEmb))
       .filter(col("__rn") === 1).drop("__rn")
     val prior = vecs.priorRows(readStore(spark, vecDir, batchId,
-      vecs.schema), indexTable, "semanticIngestBatch")
+      vecs.storeSchema), indexTable, "semanticIngestBatch")
     val hits = graft.operators.Similarity.semanticHits(
       self, prior, cents, threshold, nprobe)
     val survivors = self.join(hits, Seq("vec_id"), "left_anti")
-    writeBatchIdempotent(survivors, batchId, outDir)
-    writeBatchIdempotent(graft.operators.Similarity.assignCellsFrame(
-      survivors.select(col("vec_id"), col("embedding")), cents),
-      batchId, vecDir)
+    landSurvivors(survivors, batchId, outDir, vecDir)(s =>
+      graft.operators.Similarity.assignCellsFrame(
+        s.select(col("vec_id"), col("embedding")), cents))
   }
 
   /** The WINNOWING tier of the deduped ingest family — the passage-
@@ -796,15 +825,16 @@ object Streams {
       "winnowIngestBatch", stamp = false, ownBatch = Some(batchId))
     val fpCol = "__fp_ingest"
     val self = selfDedupBatch(batch, fpCol, "winnowIngestBatch").drop(fpCol)
-    val myFps = graft.operators.Dedup
-      .winnowingFingerprints(self, k, w)
+    def fpsOf(docs: DataFrame) = graft.operators.Dedup
+      .winnowingFingerprints(docs, k, w)
       .select("doc_id", "fp").distinct()
+    val myFps = fpsOf(self)
     // the index's spec guard is probeWinnowIndex's: an index built at a
     // different (k, w) holds hashes this batch's fingerprints can never
     // join — the screen would silently vanish
-    val priorFps = graft.operators.Dedup.winnowIndex(k, w).priorRows(
-      readStore(spark, fpDir, batchId,
-        StructType.fromDDL("doc_id BIGINT, fp BIGINT")),
+    val winnows = graft.operators.Dedup.winnowIndex(k, w)
+    val priorFps = winnows.priorRows(
+      readStore(spark, fpDir, batchId, winnows.storeSchema),
       indexTable, "winnowIngestBatch",
       _.withColumnRenamed("corpus_id", "doc_id"))
     // probeWinnowIndex's screen verbatim: dedupe (replayed appends may
@@ -824,9 +854,7 @@ object Streams {
       .filter(col("n_shared") >= minShared)
       .select(col("new_id").as("doc_id")).distinct()
     val survivors = self.join(dropped, Seq("doc_id"), "left_anti")
-    writeBatchIdempotent(survivors, batchId, outDir)
-    writeBatchIdempotent(myFps.join(survivors.select("doc_id"),
-      Seq("doc_id")), batchId, fpDir)
+    landSurvivors(survivors, batchId, outDir, fpDir)(fpsOf)
     graft.operators.Dedup.assertWinnowGeometry(spark, fpDir, k, w,
       "winnowIngestBatch", stamp = true, ownBatch = Some(batchId))
   }

@@ -2,6 +2,8 @@ package graft
 
 import java.io.File
 
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -49,4 +51,29 @@ trait SparkSpec extends AnyFunSuite with Matchers {
   /** Rows as a set of Seq[Any] — order-insensitive comparison. */
   def rowSet(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
+
+  /** The properties of every Spark job `body` starts on this thread in
+    * `session`, collected once the listener bus has delivered every
+    * event. */
+  def jobsOf(session: SparkSession)(body: => Unit): Seq[java.util.Properties] = {
+    val sc = session.sparkContext
+    val group = s"spark-spec-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(jobs.add)
+    }
+    TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, getClass.getSimpleName)
+    try body
+    finally {
+      sc.clearJobGroup()
+      TestBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.toArray(Array.empty[java.util.Properties]).toSeq
+  }
 }

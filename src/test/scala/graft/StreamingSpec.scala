@@ -3,10 +3,13 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
-import graft.core.Buffers
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryException}
+import org.apache.spark.sql.types.StructType
+import graft.core.{Buffers, CrashHook}
+import graft.sources.PersistedIndex
 import graft.streaming.Streams
 
 class StreamingSpec extends SparkSpec {
@@ -1683,5 +1686,260 @@ class StreamingSpec extends SparkSpec {
     Dedup.winnowIndex().foldStore(spark, fps, idx) shouldBe Seq(0L)
     spark.table(idx).select("corpus_id").distinct()
       .as[Long].collect().toSeq shouldBe Seq(1L)
+  }
+
+  // ------------------------------------------ one screen per ingest batch
+
+  /** One ingest tier over fresh output and store dirs: `run` lands a
+    * batch, `refused` runs a batch its index guard throws on, `batches`
+    * are two batches whose second reposts a doc of the first and adds a
+    * fresh one, and `readable` pairs each dir the tier reads back with
+    * the schema it opens it with.
+    */
+  private final class IngestTier(val name: String, val out: String,
+      val store: String, val run: (DataFrame, Long) => Unit,
+      val refused: () => Unit, val batches: Seq[DataFrame],
+      val readable: Seq[(String, StructType)])
+
+  /** The five ingest tiers, each probing an index of its family. */
+  private def ingestTiers(tag: String): Seq[IngestTier] = {
+    import graft.operators.{Dedup, Similarity}
+    val n = System.nanoTime()
+    def dirs(t: String): (String, String) = {
+      val d = (tmp(s"$tag-$t-out"), tmp(s"$tag-$t-store"))
+      Seq(d._1, d._2).foreach(x => new java.io.File(x).delete())
+      d
+    }
+    def text(i: Int) = (0 until 40).map(j => s"t${i}w$j").mkString(" ")
+    val texts = Seq(
+      Seq((1L, text(1)), (2L, text(2))).toDF("doc_id", "text"),
+      Seq((3L, text(1)), (4L, text(4))).toDF("doc_id", "text"))
+    val noCorpus = Seq.empty[(Long, String)].toDF("doc_id", "text")
+
+    val eIdx = s"tier_fp_$n"
+    Dedup.ensureFingerprintIndex(spark, eIdx)
+    val (eOut, eStore) = dirs("exact")
+    val exact = new IngestTier("exact", eOut, eStore,
+      Streams.dedupIngestBatch(_, _, eOut, eStore, Some(eIdx)),
+      () => Streams.dedupIngestBatch(texts(1), 2L, eOut, eStore,
+        Some(s"tier_no_such_$n")),
+      texts, Seq(eStore -> Dedup.fingerprintIndex().storeSchema))
+
+    val (sIdx, sPortable) = (s"tier_sig_$n", s"tier_sig_portable_$n")
+    Dedup.simhashIndex().ensure(spark, sIdx)
+    Dedup.simhashIndex(portable = true).ensure(spark, sPortable)
+    val (sOut, sStore) = dirs("simhash")
+    val simhash = new IngestTier("simhash", sOut, sStore,
+      Streams.nearDupIngestBatch(_, _, sOut, sStore, indexTable = Some(sIdx)),
+      () => Streams.nearDupIngestBatch(texts(1), 2L, sOut, sStore,
+        indexTable = Some(sPortable)),
+      texts, Seq(sStore -> Dedup.simhashIndex().storeSchema))
+
+    val mIdx = s"tier_band_$n"
+    Dedup.nearDupIndex().ensure(spark, mIdx)
+    val (mOut, mStore) = dirs("minhash")
+    val minhash = new IngestTier("minhash", mOut, mStore,
+      Streams.minhashIngestBatch(_, _, mOut, mStore, Some((mIdx, noCorpus))),
+      () => Streams.minhashIngestBatch(texts(1), 2L, mOut, mStore,
+        Some((mIdx, noCorpus)), bands = 8),
+      texts, Seq(mStore -> Dedup.nearDupIndex().storeSchema,
+        mOut -> StructType.fromDDL("doc_id BIGINT, text STRING")))
+
+    val (wIdx, wOther) = (s"tier_winnow_$n", s"tier_winnow_k5w9_$n")
+    Dedup.winnowIndex().ensure(spark, wIdx)
+    Dedup.winnowIndex(k = 5, w = 9).ensure(spark, wOther)
+    val (wOut, wStore) = dirs("winnow")
+    val winnow = new IngestTier("winnow", wOut, wStore,
+      Streams.winnowIngestBatch(_, _, wOut, wStore, Some(wIdx)),
+      () => Streams.winnowIngestBatch(texts(1), 2L, wOut, wStore,
+        Some(wOther)),
+      texts, Seq(wStore -> Dedup.winnowIndex().storeSchema))
+
+    val (vIdx, cents) = (s"tier_ivf_$n", s"tier_cents_$n")
+    Similarity.buildIvfIndex(Seq(
+      (1L, Seq(1f, 0f, 0f, 0f), 0), (2L, Seq(0.9f, 0.1f, 0f, 0f), 0),
+      (3L, Seq(0f, 1f, 0f, 0f), 1), (4L, Seq(0.1f, 0.9f, 0f, 0f), 1),
+      (5L, Seq(0f, 0f, 0.7f, 0.7f), 2), (6L, Seq(0f, 0f, 0.6f, 0.8f), 2))
+      .toDF("vec_id", "embedding", "label"), vIdx, cents)
+    val vecs = Seq(
+      Seq((101L, Seq(0f, 0f, 1f, 0f)), (106L, Seq(0.7f, 0.7f, 0f, 0f))),
+      Seq((102L, Seq(0f, 0f, 0.999f, 0.001f)), (103L, Seq(0f, 0f, 0f, 1f))))
+      .map(_.toDF("vec_id", "embedding"))
+    val (vOut, vStore) = dirs("semantic")
+    def semantic(b: DataFrame, id: Long, idx: String): Unit =
+      Streams.semanticIngestBatch(b, id, vOut, vStore, cents,
+        threshold = 0.99, indexTable = Some(idx))
+    val sem = new IngestTier("semantic", vOut, vStore, semantic(_, _, vIdx),
+      () => semantic(vecs(1), 2L, s"tier_no_such_$n"),
+      vecs, Seq(vStore -> Similarity.ivfIndex().storeSchema))
+
+    Seq(exact, simhash, minhash, winnow, sem)
+  }
+
+  private def persistedRdds(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Run `body` with the ingest landing step killed between its output
+    * and store writes to `storeDir`. */
+  private def killedBeforeStore(storeDir: String)(body: => Unit): Unit = {
+    val site = s"ingestStore:$storeDir"
+    CrashHook.arm(s => if (s == site) throw new IllegalStateException(
+      s"simulated crash after $s"))
+    try {
+      val e = intercept[IllegalStateException](body)
+      e.getMessage shouldBe s"simulated crash after $site"
+    } finally CrashHook.disarm()
+  }
+
+  test("each ingest tier screens once per batch and releases its buffer") {
+    ingestTiers("once").foreach { t =>
+      withClue(s"${t.name}: ") {
+        t.run(t.batches(0), 0L)
+        // a batch over an existing store: no schema inference, and no
+        // buffer outlives it
+        val held = persistedRdds()
+        val jobs = jobsOf(spark)(t.run(t.batches(1), 1L))
+        jobs should not be empty
+        // a parquet schema inference runs outside any SQL execution
+        jobs.count(_.getProperty("spark.sql.execution.id") == null) shouldBe 0
+        (persistedRdds() -- held) shouldBe empty
+        // a batch its index guard refuses, and one killed between its
+        // two writes, leave no buffer behind either
+        an[IllegalArgumentException] should be thrownBy t.refused()
+        (persistedRdds() -- held) shouldBe empty
+        killedBeforeStore(t.store)(t.run(t.batches(1), 1L))
+        (persistedRdds() -- held) shouldBe empty
+      }
+    }
+  }
+
+  test("each ingest tier: a batch killed between its writes replays to the clean state") {
+    def state(t: IngestTier) = {
+      def rows(dir: String) = spark.read.parquet(dir).collect()
+        .map(_.toSeq.map {
+          case a: scala.collection.Seq[_] => a.toList
+          case v => v
+        }).toSeq.sortBy(_.mkString("|"))
+      (rows(t.out), rows(t.store))
+    }
+    ingestTiers("clean").zip(ingestTiers("killed")).foreach {
+      case (clean, killed) => withClue(s"${clean.name}: ") {
+        clean.batches.zipWithIndex.foreach { case (b, i) =>
+          clean.run(b, i.toLong) }
+        killed.run(killed.batches(0), 0L)
+        killedBeforeStore(killed.store)(killed.run(killed.batches(1), 1L))
+        // the crash window: batch 1's output landed, its store rows not
+        new java.io.File(s"${killed.out}/batch_id=1").exists() shouldBe true
+        new java.io.File(s"${killed.store}/batch_id=1").exists() shouldBe false
+        killed.run(killed.batches(1), 1L) // the engine's re-delivery
+        state(killed) shouldBe state(clean)
+        // the repost was screened: one fewer row landed than sent
+        spark.read.parquet(clean.out).count() shouldBe 3L
+      }
+    }
+  }
+
+  test("every ingest store reads back by its known schema as by inference") {
+    ingestTiers("schema").foreach { t =>
+      t.batches.zipWithIndex.foreach { case (b, i) => t.run(b, i.toLong) }
+      t.readable.foreach { case (dir, schema) =>
+        withClue(s"${t.name} $dir: ") {
+          val inferred = spark.read.parquet(dir).filter(col("batch_id") =!= 1L)
+            .select(schema.fields.map(f =>
+              col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
+          val known = PersistedIndex.readStore(spark, dir, 1L, schema)
+          known.schema shouldBe inferred.schema
+          rowSet(known) should not be empty
+          rowSet(known) shouldBe rowSet(inferred)
+        }
+      }
+    }
+    // the minhash tier's landed output holds the caller's doc_id type:
+    // an INT column reads back widened, with the inferred read's rows
+    val (out, band) = (tmp("int-ids-out"), tmp("int-ids-band"))
+    Seq(out, band).foreach(d => new java.io.File(d).delete())
+    Seq(Seq((1, "one two three four five six"), (2, "seven eight nine ten")),
+      Seq((3, "one two three four five six"), (4, "eleven twelve thirteen")))
+      .zipWithIndex.foreach { case (b, i) =>
+        Streams.minhashIngestBatch(b.toDF("doc_id", "text"), i.toLong, out,
+          band)
+      }
+    spark.read.parquet(out).schema("doc_id").dataType shouldBe
+      org.apache.spark.sql.types.IntegerType
+    spark.read.parquet(out).select("doc_id").as[Int].collect().sorted
+      .toSeq shouldBe Seq(1, 2, 4)
+    rowSet(PersistedIndex.readStore(spark, out, 1L,
+        StructType.fromDDL("doc_id BIGINT, text STRING"))) shouldBe
+      rowSet(spark.read.parquet(out).filter(col("batch_id") =!= 1L)
+        .select(col("doc_id").cast("long"), col("text")))
+  }
+
+  test("a running stream refuses an index rebuilt with other parameters") {
+    import graft.operators.Dedup
+    val idx = s"rebuilt_sig_${System.nanoTime()}"
+    Dedup.simhashIndex().ensure(spark, idx)
+    val (out, sig, ckpt) = (tmp("rebuilt-out"), tmp("rebuilt-sig"),
+      tmp("rebuilt-ckpt"))
+    Seq(out, sig).foreach(d => new java.io.File(d).delete())
+    val in = MemoryStream[(Long, String)]
+    val q = Streams.startIngest(in.toDF().toDF("doc_id", "text"), ckpt)(
+      Streams.nearDupIngestBatch(_, _, out, sig, indexTable = Some(idx)))
+    try {
+      in.addData((1L, "alpha beta gamma delta"))
+      q.processAllAvailable()
+      in.addData((2L, "epsilon zeta eta theta"))
+      q.processAllAvailable()
+      // rebuilt with other signature parameters between two batches:
+      // the stream's next batch must refuse it
+      spark.sql(s"DROP TABLE $idx")
+      Dedup.simhashIndex(portable = true).ensure(spark, idx)
+      in.addData((3L, "iota kappa lambda mu"))
+      val e = intercept[StreamingQueryException](q.processAllAvailable())
+      Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString("\n") should include(
+          "signatures would never match")
+    } finally q.stop()
+    spark.read.parquet(out).select("doc_id").as[Long].collect().sorted
+      .toSeq shouldBe Seq(1L, 2L)
+  }
+
+  /** Two exact-tier batches landed in fresh dirs: (outDir, fpDir). */
+  private def landedExact(tag: String): (String, String) = {
+    val (out, fp) = (tmp(s"$tag-out"), tmp(s"$tag-fp"))
+    Seq(out, fp).foreach(d => new java.io.File(d).delete())
+    Seq(Seq((1L, "alpha beta")), Seq((2L, "gamma delta"))).zipWithIndex
+      .foreach { case (b, i) =>
+        Streams.dedupIngestBatch(b.toDF("doc_id", "text"), i.toLong, out, fp)
+      }
+    (out, fp)
+  }
+
+  private def partitions(dir: String): Set[String] =
+    new java.io.File(dir).list().filter(_.startsWith("batch_id=")).toSet
+
+  test("folding a directory that is not a store throws and deletes nothing") {
+    val (out, _) = landedExact("fold-not-store")
+    val idx = s"fold_not_store_${System.nanoTime()}"
+    val before = partitions(out)
+    before shouldBe Set("batch_id=0", "batch_id=1")
+    val e = intercept[IllegalArgumentException](
+      Streams.foldFingerprintStore(spark, out, idx))
+    e.getMessage should include("without fp")
+    partitions(out) shouldBe before
+    spark.read.parquet(out).select("doc_id").as[Long].collect().sorted
+      .toSeq shouldBe Seq(1L, 2L)
+    spark.table(idx).count() shouldBe 0L
+  }
+
+  test("an ingest screen pointed at a directory that is not its store throws") {
+    val (landed, _) = landedExact("screen-not-store")
+    val out = tmp("screen-not-store-out2")
+    new java.io.File(out).delete()
+    // the exact tier's fingerprint store mistaken for the landed output
+    val e = intercept[IllegalArgumentException](Streams.dedupIngestBatch(
+      Seq((3L, "alpha beta")).toDF("doc_id", "text"), 2L, out, landed))
+    e.getMessage should include("without fp")
+    new java.io.File(out).exists() shouldBe false
+    partitions(landed) shouldBe Set("batch_id=0", "batch_id=1")
   }
 }

@@ -1,11 +1,8 @@
 package graft
 
 import java.nio.file.{Files, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampType}
 
@@ -26,30 +23,6 @@ class TablesSpec extends SparkSpec {
     case "events" => t.events
     case "documents" => t.documents
     case "embeddings" => t.embeddings
-  }
-
-  /** Spark jobs `body` starts on this thread, counted once the listener
-    * bus has delivered every event. */
-  private def jobsOf(session: SparkSession)(body: => Unit): Int = {
-    val sc = session.sparkContext
-    val group = s"tables-spec-${System.nanoTime()}"
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    TestBus.drain(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "TablesSpec")
-    try body
-    finally {
-      sc.clearJobGroup()
-      TestBus.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get()
   }
 
   private def sortedRows(df: DataFrame): Seq[String] =
@@ -85,10 +58,9 @@ class TablesSpec extends SparkSpec {
 
   test("a second open of a table in one session starts no Spark job") {
     Tables.names.foreach(open(tables, _))
-    val jobs = jobsOf(spark) {
+    jobsOf(spark) {
       Tables.names.foreach(n => open(Tables(spark, SparkSpec.sfDir), n).schema)
-    }
-    jobs shouldBe 0
+    } shouldBe empty
   }
 
   test("a rewritten table file is inferred again") {
@@ -116,8 +88,8 @@ class TablesSpec extends SparkSpec {
   test("another session infers for itself") {
     open(tables, "region")
     val other = spark.newSession()
-    jobsOf(other)(Tables(other, SparkSpec.sfDir).region.schema) should be > 0
-    jobsOf(other)(Tables(other, SparkSpec.sfDir).region.schema) shouldBe 0
+    jobsOf(other)(Tables(other, SparkSpec.sfDir).region.schema) should not be empty
+    jobsOf(other)(Tables(other, SparkSpec.sfDir).region.schema) shouldBe empty
     Tables(other, SparkSpec.sfDir).region.schema shouldBe tables.region.schema
   }
 
