@@ -146,15 +146,6 @@ object Dedup {
   def minhashSignature(sh: Column, k: Int = 64): Column =
     graft.functions.MinHashSignature(sh, k)
 
-  /** Composable HOF form of the signature — k interpreted passes; kept as
-    * the readable reference implementation (tests assert both produce
-    * signatures with equal Jaccard-estimation behavior).
-    */
-  def minhashSignatureHof(sh: Column, k: Int = 64): Column =
-    array((0 until k).map { i =>
-      array_min(transform(sh, s => xxhash64(s, lit(i))))
-    }: _*)
-
   /** LSH band hashes of a MinHash signature: `bands` hashes, band j hashing
     * rows [j·r, (j+1)·r) of the signature. Two docs share a band hash with
     * probability 1-(1-J^r)^b — the classic S-curve.
@@ -759,36 +750,82 @@ object Dedup {
     val spark = newDocs.sparkSession
     nearDupIndex(ngram, k, bands).requireSpec(spark, indexTable)
     val newSpread = spread(newDocs)
-    // NOT materialized: the batch bucket table is consumed twice (bucket
-    // set, candidate join), but re-deriving it costs only the batch's own
-    // tokenize pass — while a localCheckpoint here would turn it into an
-    // ExistingRDD scan with no stats, un-broadcastable (measured: forces
-    // every downstream join to sort-merge)
-    val nb = bandBuckets(newSpread, ngram, k, bands)
-      .select(col("band_idx"), col("band_hash"), col("doc_id").as("new_id"))
-    val probed = spark.table(indexTable)
-      .join(nb.select("band_idx", "band_hash").distinct(),
-        Seq("band_idx", "band_hash"))
-    val bounded = dropOversizedBuckets(probed, maxBucket,
-        Seq("band_idx", "band_hash"))
-      .select(col("band_idx"), col("band_hash"), col("doc_id").as("corpus_id"))
-    val candidates = nb.join(bounded, Seq("band_idx", "band_hash"))
-      .select("new_id", "corpus_id").distinct()
+    val candidates = bandCandidates(bandBuckets(newSpread, ngram, k, bands),
+      spark.table(indexTable), maxBucket)
     verifyCandidates(candidates, newSpread, spread(corpus),
       "new_id", "corpus_id", ngram, threshold, pruneA = false,
       hashShingles = hashShingles)
   }
 
-  /** Exact-Jaccard verification of an LSH candidate pair list: docs
-    * appearing in candidates are re-shingled via a semi-join (candidates
-    * << corpus at scale, so the expensive shingle expression runs on a
-    * small slice instead of a second full-corpus pass), then pairs keep
-    * only verified Jaccard ≥ `threshold`. One implementation serves the
-    * self-join ([[minhashDupPairs]]) and cross-frame
-    * ([[incrementalNearDup]]) paths so the verify semantics cannot
-    * drift.
+  /** The banded-LSH candidate pairs (new_id, corpus_id) of a batch's
+    * (doc_id, band_idx, band_hash) rows `newBands` against the `prior`
+    * band rows: only the batch's own bucket set is probed, and the prior
+    * side's bucket size is bounded by `maxBucket` (the probed slice holds
+    * every prior row of a probed bucket, so its count is the true bucket
+    * size). The candidate step of [[probeNearDupIndex]], whose prior
+    * rows are the index table, and of the streaming MinHash ingest,
+    * whose prior rows are its store plus index.
+    */
+  private[graft] def bandCandidates(newBands: DataFrame, prior: DataFrame,
+      maxBucket: Int): DataFrame = {
+    // NOT materialized: the batch bucket table is consumed twice (bucket
+    // set, candidate join), but re-deriving it costs only the batch's own
+    // tokenize pass — while a localCheckpoint here would turn it into an
+    // ExistingRDD scan with no stats, un-broadcastable (measured: forces
+    // every downstream join to sort-merge)
+    val nb = newBands
+      .select(col("band_idx"), col("band_hash"), col("doc_id").as("new_id"))
+    val probed = prior
+      .join(nb.select("band_idx", "band_hash").distinct(),
+        Seq("band_idx", "band_hash"))
+    val bounded = dropOversizedBuckets(probed, maxBucket,
+        Seq("band_idx", "band_hash"))
+      .select(col("band_idx"), col("band_hash"), col("doc_id").as("corpus_id"))
+    nb.join(bounded, Seq("band_idx", "band_hash"))
+      .select("new_id", "corpus_id").distinct()
+  }
+
+  /** Exact-Jaccard verification of an LSH candidate pair list, with the
+    * candidate rows materialized once first: [[verifyPairs]] over
+    * `Buffers.once(candidates)`. The five batch verifies (self-join,
+    * cross-frame, index probe, prefix filter, containment) go through
+    * here so their semantics cannot drift from each other or from the
+    * streaming MinHash ingest, which calls [[verifyPairs]] directly.
     */
   private def verifyCandidates(candidates: DataFrame, aDocs: DataFrame,
+      bDocs: DataFrame, aCol: String, bCol: String, ngram: Int,
+      threshold: Double,
+      metric: (Column, Column) => Column = jaccard,
+      metricName: String = "jaccard",
+      pruneA: Boolean = true,
+      hashShingles: Boolean = false): DataFrame = {
+    // The candidate list is consumed THREE times (main join + the two
+    // doc-pruning semi-joins), and its plan is the whole upstream
+    // candidate pipeline (bucket self-join + pair distinct, or the
+    // prefix-filter join). AQE's exchange reuse dedups the SHUFFLES
+    // across the instantiations, but every operator ABOVE the reused
+    // exchange — the bucket join itself, the 27M-pair distinct hash
+    // aggregate at the 100× tier — re-executes per instantiation.
+    // Materializing the pair-id rows once (eager, via
+    // [[graft.core.Buffers.once]]; 16 bytes/pair, candidate-sized) runs that
+    // pipeline exactly once, and the materialized buffer carries REAL
+    // size stats (Spark 4 LogicalRDD / InMemoryRelation), so the
+    // semi-joins can broadcast the candidate id set instead of
+    // exchanging the corpus side.
+    verifyPairs(Buffers.once(candidates), aDocs, bDocs, aCol, bCol, ngram,
+      threshold, metric, metricName, pruneA, hashShingles)
+  }
+
+  /** The lazy exact-Jaccard verify of a candidate pair frame `cand`
+    * (`aCol`, `bCol`): docs appearing in it are re-shingled via a
+    * semi-join (candidates << corpus at scale, so the expensive shingle
+    * expression runs on a small slice instead of a second full-corpus
+    * pass), then pairs keep only a verified `metric` ≥ `threshold`. It
+    * starts no job and holds no buffer: a caller whose candidates are
+    * batch-sized, like the streaming MinHash ingest, calls it directly;
+    * the batch operators reach it through [[verifyCandidates]].
+    */
+  private[graft] def verifyPairs(cand: DataFrame, aDocs: DataFrame,
       bDocs: DataFrame, aCol: String, bCol: String, ngram: Int,
       threshold: Double,
       metric: (Column, Column) => Column = jaccard,
@@ -808,20 +845,6 @@ object Dedup {
       val s = shingles(c, ngram)
       if (hashShingles) transform(s, x => xxhash64(x)) else s
     }
-    // The candidate list is consumed THREE times (main join + the two
-    // doc-pruning semi-joins), and its plan is the whole upstream
-    // candidate pipeline (bucket self-join + pair distinct, or the
-    // prefix-filter join). AQE's exchange reuse dedups the SHUFFLES
-    // across the instantiations, but every operator ABOVE the reused
-    // exchange — the bucket join itself, the 27M-pair distinct hash
-    // aggregate at the 100× tier — re-executes per instantiation.
-    // Materializing the pair-id rows once (eager, via
-    // [[graft.core.Buffers.once]]; 16 bytes/pair, candidate-sized) runs that
-    // pipeline exactly once, and the materialized buffer carries REAL
-    // size stats (Spark 4 LogicalRDD / InMemoryRelation), so the
-    // semi-joins can broadcast the candidate id set instead of
-    // exchanging the corpus side.
-    val cand = Buffers.once(candidates)
     // pruneA = false for incremental callers whose a-side is the CRAWL
     // BATCH: it is already candidate-scale, the semi-join prunes nothing,
     // and skipping it drops one of the three instantiations of the
@@ -1600,24 +1623,35 @@ object Dedup {
       portable: Boolean = false): DataFrame = {
     val spark = newDocs.sparkSession
     simhashIndex(portable).requireSpec(spark, table)
-    val nb = simhashChunks(simhashSig(newDocs, portable),
-      if (portable) 15 else 16)
+    val chunks = simhashChunkTable(newDocs, portable)
+    val probed = spark.table(table)
+      .join(chunks.select("chunk_idx", "chunk").distinct(),
+        Seq("chunk_idx", "chunk"))
+    simhashHits(chunks, dropOversizedBuckets(probed, maxBucket,
+      Seq("chunk_idx", "chunk")), maxHamming)
+  }
+
+  /** (new_id, corpus_id, hamming) for every batch doc of the chunk rows
+    * `chunks` within `maxHamming` bits of a doc of the `prior` chunk
+    * rows it shares a (chunk_idx, chunk) bucket with — both sides
+    * [[simhashChunkTable]]-shaped. The screen of [[probeSimhashIndex]],
+    * which passes its probed index slice bounded by `maxBucket`, and of
+    * the streaming near-dup ingest, which passes its store plus index
+    * rows unbounded.
+    */
+  private[graft] def simhashHits(chunks: DataFrame, prior: DataFrame,
+      maxHamming: Int): DataFrame =
+    chunks
       .select(col("chunk_idx"), col("chunk"),
         col("doc_id").as("new_id"), col("simhash").as("sig_new"))
-    val probed = spark.table(table)
-      .join(nb.select("chunk_idx", "chunk").distinct(),
+      .join(prior.select(col("chunk_idx"), col("chunk"),
+          col("doc_id").as("corpus_id"), col("simhash").as("sig_corpus")),
         Seq("chunk_idx", "chunk"))
-    val bounded = dropOversizedBuckets(probed, maxBucket,
-        Seq("chunk_idx", "chunk"))
-      .select(col("chunk_idx"), col("chunk"),
-        col("doc_id").as("corpus_id"), col("simhash").as("sig_corpus"))
-    nb.join(bounded, Seq("chunk_idx", "chunk"))
       .withColumn("hamming",
         bit_count(col("sig_new").bitwiseXOR(col("sig_corpus"))).cast("int"))
       .filter(col("hamming") <= maxHamming)
       .dropDuplicates("new_id", "corpus_id")
       .select("new_id", "corpus_id", "hamming")
-  }
 
   // ---------------------------------------------------------------------
   // Winnowing fingerprints (the MOSS algorithm)
@@ -1829,7 +1863,20 @@ object Dedup {
     winnowIndex(k, w).requireSpec(spark, table)
     val bfps = winnowingFingerprints(spread(batch), k, w)
       .select(col("doc_id").as("new_id"), col("fp")).distinct()
-    val hits = bfps.join(spark.table(table), Seq("fp"))
+    winnowHits(bfps, spark.table(table), minShared, maxDf)
+  }
+
+  /** (new_id, corpus_id, n_shared) for every batch doc of the (new_id,
+    * fp) rows `newFps` sharing ≥ `minShared` distinct fingerprints with
+    * a doc of the (corpus_id, fp) `prior` postings, after the df ≤
+    * `maxDf` boilerplate cut derived from the matched rows. The screen
+    * of [[probeWinnowIndex]], whose prior postings are the index table,
+    * and of the streaming winnow ingest, whose prior postings are its
+    * store plus index.
+    */
+  private[graft] def winnowHits(newFps: DataFrame, prior: DataFrame,
+      minShared: Int, maxDf: Int): DataFrame = {
+    val hits = newFps.join(prior, Seq("fp"))
       // a doc appended twice would duplicate posting rows — harden the
       // counts against replayed appends
       .dropDuplicates("new_id", "corpus_id", "fp")

@@ -495,9 +495,9 @@ object Similarity {
       cents: Array[(Int, Seq[Float])]): DataFrame =
     cellAssigned(embeddings, cents)
 
-  /** The screen core shared by [[probeSemanticIndex]] and the streaming
-    * semantic ingest: distinct batch vec_ids that have a cosine ≥
-    * `threshold` neighbor among `prior` (vec_id, embedding, cell) rows,
+  /** The screen shared by [[probeSemanticIndex]] and the streaming
+    * semantic ingest: the (vec_id, q_id) pairs of a `prior` (vec_id,
+    * embedding, cell) row and a batch vector at cosine ≥ `threshold`,
     * compared within the batch's `nprobe` probed cells only. The probed
     * cell set is collected once (bounded by #cells) and pushed as a
     * partition/scan filter on the prior side.
@@ -511,7 +511,7 @@ object Similarity {
       .join(q, "cell")
       .filter(round(cosine(col("embedding"), col("q_emb")), 6)
         >= lit(threshold))
-      .select(col("q_id").as("vec_id")).distinct()
+      .select("vec_id", "q_id")
   }
 
   /** Probe a persisted IVF index built by [[buildIvfIndex]]. The probed
@@ -698,20 +698,16 @@ object Similarity {
     * centroids (no shuffle); the probed cell set is collected once
     * (bounded by #cells, NOT batch size — this probe takes crawl-sized
     * batches, unlike the broadcast-contract top-k queries); the verify
-    * join is cell-keyed against only the probed partitions of the index.
+    * join ([[semanticHits]]) is cell-keyed against only the probed
+    * partitions of the index.
     */
   def probeSemanticIndex(spark: SparkSession, newEmbeddings: DataFrame,
       indexTable: String, centroidTable: String, threshold: Double = 0.95,
       nprobe: Int = 1): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1: $nprobe")
-    val cents = collectCentroids(spark.table(centroidTable))
-    val q = probeCells(Dedup.spread(newEmbeddings), cents, nprobe)
-    val probed = q.select("cell").distinct().collect().map(_.getInt(0))
-    val hits = spark.table(indexTable)
-      .filter(col("cell").isin(probed.toIndexedSeq: _*))
-      .join(q, "cell")
-      .filter(round(cosine(col("embedding"), col("q_emb")), 6)
-        >= lit(threshold))
+    val cents = cellsOf(spark, centroidTable)
+    val hits = semanticHits(newEmbeddings, spark.table(indexTable), cents,
+        threshold, nprobe)
       .groupBy("q_id").agg(min(col("vec_id")).as("dup_of"))
       .withColumnRenamed("q_id", "vec_id")
     Dedup.spread(newEmbeddings).select(col("vec_id"))

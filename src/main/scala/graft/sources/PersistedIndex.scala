@@ -206,14 +206,14 @@ final case class PersistedIndex(
   }
 
   /** The probe-both screen set of an ingest tier: the store's rows plus,
-    * when `table` is set, the folded history in the index (mapped to
-    * the store's columns by `asStore`).
+    * when `table` is set, the folded history in the index. `store` must
+    * carry the index's columns.
     */
-  def priorRows(store: DataFrame, table: Option[String], caller: String,
-      asStore: DataFrame => DataFrame = rows => rows): DataFrame =
-    table.fold(store)(t => store.unionByName(asStore(
+  def priorRows(store: DataFrame, table: Option[String],
+      caller: String): DataFrame =
+    table.fold(store)(t => store.unionByName(
       current(store.sparkSession, t, caller)
-        .select(schema.fieldNames.map(col).toSeq: _*))))
+        .select(schema.fieldNames.map(col).toSeq: _*)))
 }
 
 object PersistedIndex {

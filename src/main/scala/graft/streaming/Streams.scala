@@ -402,6 +402,14 @@ object Streams {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
+  /** `self` less every batch row a near-dup screen's `hits` names in
+    * `hitCol` — once, however many prior rows it matched.
+    */
+  private def withoutHits(self: DataFrame, hits: DataFrame,
+      hitCol: String = "new_id", idCol: String = "doc_id"): DataFrame =
+    self.join(hits.select(col(hitCol).as(idCol)).distinct(), Seq(idCol),
+      "left_anti")
+
   /** The landing step every ingest tier ends with: materialize the
     * batch's `survivors` once ([[graft.core.Buffers.once]]), write
     * `output` of them to `outDir`, then write `storeRows` of that same
@@ -545,7 +553,10 @@ object Streams {
   /** [[dedupIngestBatch]]'s NEAR-dup sibling: the screen is a simhash
     * chunk join (Hamming ≤ `maxHamming`) against the batch_id-
     * partitioned SIGNATURE store instead of a fingerprint equality — a
-    * reworded repost is dropped, not just a byte-identical one. Same
+    * reworded repost is dropped, not just a byte-identical one. It is
+    * [[graft.operators.Dedup.probeSimhashIndex]]'s screen,
+    * [[graft.operators.Dedup.simhashHits]], over the store and index
+    * rows, with no `maxBucket` bound on the prior side. Same
     * idempotent-per-batch recipe, same ordering argument: the store
     * read excludes the batch's own prior attempt, survivors land via
     * dynamic partition overwrite, then ONLY survivors' chunk rows
@@ -572,28 +583,24 @@ object Streams {
     val sigs = graft.operators.Dedup.simhashIndex()
     val fpCol = "__fp_ingest"
     val self = selfDedupBatch(batch, fpCol, "nearDupIngestBatch").drop(fpCol)
-    val chunks = graft.operators.Dedup.simhashChunkTable(self)
-    val screen = sigs.priorRows(readStore(spark, sigDir, batchId,
-        sigs.storeSchema), indexTable, "nearDupIngestBatch")
-      .select(col("chunk_idx"), col("chunk"), col("simhash").as("__sig_store"))
-    val hit = chunks.join(screen, Seq("chunk_idx", "chunk"))
-      .filter(bit_count(col("simhash").bitwiseXOR(col("__sig_store")))
-        .cast("int") <= maxHamming)
-      .select("doc_id").distinct()
-    val survivors = self.join(hit, Seq("doc_id"), "left_anti")
+    val prior = sigs.priorRows(readStore(spark, sigDir, batchId,
+      sigs.storeSchema), indexTable, "nearDupIngestBatch")
+    val hits = graft.operators.Dedup.simhashHits(
+      graft.operators.Dedup.simhashChunkTable(self), prior, maxHamming)
+    val survivors = withoutHits(self, hits)
     landSurvivors(survivors, batchId, outDir, sigDir)(
       graft.operators.Dedup.simhashChunkTable(_))
   }
 
   /** The MINHASH-tier sibling of [[nearDupIngestBatch]]: the screen is
-    * the banded MinHash candidate join of
-    * [[graft.operators.Dedup.probeNearDupIndex]] (band collision →
-    * exact-Jaccard verify at `threshold`) against a batch_id-partitioned
-    * BAND store — so a PARAPHRASED repost at Jaccard ≈ 0.7 is dropped,
-    * not just the high-similarity rewrites the simhash tier's
-    * Hamming ≤ 3 admits. Same idempotent-per-batch recipe: store and
-    * landed-output reads exclude the batch's own prior attempt,
-    * survivors land via dynamic partition overwrite, then ONLY
+    * [[graft.operators.Dedup.probeNearDupIndex]]'s (band collision in
+    * [[graft.operators.Dedup.bandCandidates]] → exact-Jaccard verify at
+    * `threshold` in [[graft.operators.Dedup.verifyPairs]]) against a
+    * batch_id-partitioned BAND store — so a PARAPHRASED repost at
+    * Jaccard ≈ 0.7 is dropped, not just the high-similarity rewrites the
+    * simhash tier's Hamming ≤ 3 admits. Same idempotent-per-batch
+    * recipe: store and landed-output reads exclude the batch's own prior
+    * attempt, survivors land via dynamic partition overwrite, then ONLY
     * survivors' band rows overwrite the store's batch partition.
     *
     * Recall/cost tiering (pick per pipeline, or cascade both):
@@ -627,45 +634,24 @@ object Streams {
     val self = selfDedupBatch(batch, fpCol, "minhashIngestBatch").drop(fpCol)
     def bandsOf(docs: DataFrame) =
       graft.operators.Dedup.bandBucketTable(docs, ngram, k, bands)
-    val myBands = bandsOf(self)
     val priorBands = bandIdx.priorRows(readStore(spark, bandDir, batchId,
       bandIdx.storeSchema), indexCorpus.map(_._1), "minhashIngestBatch")
-    // probeNearDupIndex's candidate shape: probe only the batch's bucket
-    // set, bound the PRIOR-side bucket size (the probed slice holds every
-    // prior row of a probed bucket, so the count is the true bucket size)
-    val nb = myBands.select(col("band_idx"), col("band_hash"),
-      col("doc_id").as("new_id"))
-    val probed = priorBands
-      .join(nb.select("band_idx", "band_hash").distinct(),
-        Seq("band_idx", "band_hash"))
-    val bounded = graft.operators.Dedup.dropOversizedBuckets(probed,
-        maxBucket, Seq("band_idx", "band_hash"))
-      .select(col("band_idx"), col("band_hash"),
-        col("doc_id").as("prior_id"))
-    val cands = nb.join(bounded, Seq("band_idx", "band_hash"))
-      .select("new_id", "prior_id").distinct()
-    // exact-Jaccard verify over the text of matched PRIOR docs only:
-    // store hits live in outDir's earlier partitions, index hits in the
-    // caller-supplied corpus frame
+    val cands = graft.operators.Dedup.bandCandidates(bandsOf(self),
+      priorBands, maxBucket)
+    // the verify re-reads the text of matched PRIOR docs only: store hits
+    // live in outDir's earlier partitions, index hits in the
+    // caller-supplied corpus frame. The lazy verify, not the batch
+    // operators' buffered one: the candidates are batch-sized, and a
+    // buffer here would be one more eager job per micro-batch
     val landedPrior = readStore(spark, outDir, batchId,
       StructType.fromDDL("doc_id BIGINT, text STRING"))
     val priorDocs = indexCorpus.map { case (_, corpus) =>
       landedPrior.unionByName(
         corpus.select(col("doc_id").cast("long").as("doc_id"), col("text")))
     }.getOrElse(landedPrior)
-    val newSh = self
-      .join(cands.select(col("new_id").as("doc_id")).distinct(), "doc_id")
-      .select(col("doc_id").as("new_id"),
-        graft.operators.Dedup.shingles(col("text"), ngram).as("__sh_new"))
-    val priorSh = priorDocs
-      .join(cands.select(col("prior_id").as("doc_id")).distinct(), "doc_id")
-      .select(col("doc_id").as("prior_id"),
-        graft.operators.Dedup.shingles(col("text"), ngram).as("__sh_prior"))
-    val hit = cands.join(newSh, "new_id").join(priorSh, "prior_id")
-      .filter(round(graft.operators.Dedup.jaccard(
-        col("__sh_new"), col("__sh_prior")), 4) >= threshold)
-      .select("new_id").distinct().withColumnRenamed("new_id", "doc_id")
-    val survivors = self.join(hit, Seq("doc_id"), "left_anti")
+    val hits = graft.operators.Dedup.verifyPairs(cands, self, priorDocs,
+      "new_id", "corpus_id", ngram, threshold)
+    val survivors = withoutHits(self, hits)
     landSurvivors(survivors, batchId, outDir, bandDir)(bandsOf)
   }
 
@@ -781,7 +767,7 @@ object Streams {
       vecs.storeSchema), indexTable, "semanticIngestBatch")
     val hits = graft.operators.Similarity.semanticHits(
       self, prior, cents, threshold, nprobe)
-    val survivors = self.join(hits, Seq("vec_id"), "left_anti")
+    val survivors = withoutHits(self, hits, "q_id", "vec_id")
     landSurvivors(survivors, batchId, outDir, vecDir)(s =>
       graft.operators.Similarity.assignCellsFrame(
         s.select(col("vec_id"), col("embedding")), cents))
@@ -797,10 +783,11 @@ object Streams {
     * from any prior landed or indexed document is dropped at crawl
     * time, a containment case the whole-doc similarity tiers
     * structurally miss (a long doc quoting a short one has low global
-    * Jaccard). The screen is [[graft.operators.Dedup.probeWinnowIndex]]'s
-    * exact shape: posting-list join on fp, the df ≤ `maxDf` boilerplate
-    * cut derived from matched rows, pair hit at ≥ `minShared` distinct
-    * shared hashes. No text re-read — fingerprints alone decide.
+    * Jaccard). The screen is [[graft.operators.Dedup.probeWinnowIndex]]'s,
+    * [[graft.operators.Dedup.winnowHits]]: posting-list join on fp, the
+    * df ≤ `maxDf` boilerplate cut derived from matched rows, pair hit at
+    * ≥ `minShared` distinct shared hashes. No text re-read —
+    * fingerprints alone decide.
     *
     * Same idempotent-per-batch recipe as every tier: in-batch exact
     * self-dups collapse first (two DISTINCT passage-sharers in one
@@ -828,32 +815,18 @@ object Streams {
     def fpsOf(docs: DataFrame) = graft.operators.Dedup
       .winnowingFingerprints(docs, k, w)
       .select("doc_id", "fp").distinct()
-    val myFps = fpsOf(self)
     // the index's spec guard is probeWinnowIndex's: an index built at a
     // different (k, w) holds hashes this batch's fingerprints can never
     // join — the screen would silently vanish
     val winnows = graft.operators.Dedup.winnowIndex(k, w)
     val priorFps = winnows.priorRows(
-      readStore(spark, fpDir, batchId, winnows.storeSchema),
-      indexTable, "winnowIngestBatch",
-      _.withColumnRenamed("corpus_id", "doc_id"))
-    // probeWinnowIndex's screen verbatim: dedupe (replayed appends may
-    // duplicate posting rows), boilerplate df cut from the matched rows
-    // themselves, pair hit at >= minShared distinct shared hashes
-    val hits = myFps.select(col("doc_id").as("new_id"), col("fp"))
-      .join(priorFps.select(col("doc_id").as("prior_id"), col("fp")),
-        Seq("fp"))
-      .dropDuplicates("new_id", "prior_id", "fp")
-    val keepFp = hits.groupBy("fp")
-      .agg(countDistinct(col("prior_id")).as("df"))
-      .filter(col("df") <= maxDf)
-      .select("fp")
-    val dropped = hits.join(keepFp, Seq("fp"))
-      .groupBy("new_id", "prior_id")
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-      .select(col("new_id").as("doc_id")).distinct()
-    val survivors = self.join(dropped, Seq("doc_id"), "left_anti")
+      readStore(spark, fpDir, batchId, winnows.storeSchema)
+        .withColumnRenamed("doc_id", "corpus_id"),
+      indexTable, "winnowIngestBatch")
+    val hits = graft.operators.Dedup.winnowHits(
+      fpsOf(self).select(col("doc_id").as("new_id"), col("fp")), priorFps,
+      minShared, maxDf)
+    val survivors = withoutHits(self, hits)
     landSurvivors(survivors, batchId, outDir, fpDir)(fpsOf)
     graft.operators.Dedup.assertWinnowGeometry(spark, fpDir, k, w,
       "winnowIngestBatch", stamp = true, ownBatch = Some(batchId))

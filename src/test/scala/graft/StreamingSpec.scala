@@ -1693,16 +1693,23 @@ class StreamingSpec extends SparkSpec {
   /** One ingest tier over fresh output and store dirs: `run` lands a
     * batch, `refused` runs a batch its index guard throws on, `batches`
     * are two batches whose second reposts a doc of the first and adds a
-    * fresh one, and `readable` pairs each dir the tier reads back with
-    * the schema it opens it with.
+    * fresh one, `readable` pairs each dir the tier reads back with the
+    * schema it opens it with, and `probe` (near-dup tiers only) gives
+    * the `new_id`s its family's batch probe finds in a batch over the
+    * tier's index.
     */
   private final class IngestTier(val name: String, val out: String,
       val store: String, val run: (DataFrame, Long) => Unit,
       val refused: () => Unit, val batches: Seq[DataFrame],
-      val readable: Seq[(String, StructType)])
+      val readable: Seq[(String, StructType)],
+      val probe: Option[DataFrame => DataFrame] = None)
 
-  /** The five ingest tiers, each probing an index of its family. */
-  private def ingestTiers(tag: String): Seq[IngestTier] = {
+  /** The five ingest tiers, each probing an index of its family. The
+    * text near-dup indexes hold the (doc_id, text) corpus `prior`, or
+    * nothing; the semantic index holds six fixed vectors.
+    */
+  private def ingestTiers(tag: String,
+      prior: Option[DataFrame] = None): Seq[IngestTier] = {
     import graft.operators.{Dedup, Similarity}
     val n = System.nanoTime()
     def dirs(t: String): (String, String) = {
@@ -1715,6 +1722,7 @@ class StreamingSpec extends SparkSpec {
       Seq((1L, text(1)), (2L, text(2))).toDF("doc_id", "text"),
       Seq((3L, text(1)), (4L, text(4))).toDF("doc_id", "text"))
     val noCorpus = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val corpus = prior.getOrElse(noCorpus)
 
     val eIdx = s"tier_fp_$n"
     Dedup.ensureFingerprintIndex(spark, eIdx)
@@ -1728,32 +1736,38 @@ class StreamingSpec extends SparkSpec {
     val (sIdx, sPortable) = (s"tier_sig_$n", s"tier_sig_portable_$n")
     Dedup.simhashIndex().ensure(spark, sIdx)
     Dedup.simhashIndex(portable = true).ensure(spark, sPortable)
+    prior.foreach(Dedup.appendSimhashIndex(_, sIdx))
     val (sOut, sStore) = dirs("simhash")
     val simhash = new IngestTier("simhash", sOut, sStore,
       Streams.nearDupIngestBatch(_, _, sOut, sStore, indexTable = Some(sIdx)),
       () => Streams.nearDupIngestBatch(texts(1), 2L, sOut, sStore,
         indexTable = Some(sPortable)),
-      texts, Seq(sStore -> Dedup.simhashIndex().storeSchema))
+      texts, Seq(sStore -> Dedup.simhashIndex().storeSchema),
+      Some(Dedup.probeSimhashIndex(_, sIdx).select("new_id")))
 
     val mIdx = s"tier_band_$n"
     Dedup.nearDupIndex().ensure(spark, mIdx)
+    prior.foreach(Dedup.appendNearDupIndex(_, mIdx))
     val (mOut, mStore) = dirs("minhash")
     val minhash = new IngestTier("minhash", mOut, mStore,
-      Streams.minhashIngestBatch(_, _, mOut, mStore, Some((mIdx, noCorpus))),
+      Streams.minhashIngestBatch(_, _, mOut, mStore, Some((mIdx, corpus))),
       () => Streams.minhashIngestBatch(texts(1), 2L, mOut, mStore,
-        Some((mIdx, noCorpus)), bands = 8),
+        Some((mIdx, corpus)), bands = 8),
       texts, Seq(mStore -> Dedup.nearDupIndex().storeSchema,
-        mOut -> StructType.fromDDL("doc_id BIGINT, text STRING")))
+        mOut -> StructType.fromDDL("doc_id BIGINT, text STRING")),
+      Some(Dedup.probeNearDupIndex(_, corpus, mIdx).select("new_id")))
 
     val (wIdx, wOther) = (s"tier_winnow_$n", s"tier_winnow_k5w9_$n")
     Dedup.winnowIndex().ensure(spark, wIdx)
     Dedup.winnowIndex(k = 5, w = 9).ensure(spark, wOther)
+    prior.foreach(Dedup.appendWinnowIndex(_, wIdx))
     val (wOut, wStore) = dirs("winnow")
     val winnow = new IngestTier("winnow", wOut, wStore,
       Streams.winnowIngestBatch(_, _, wOut, wStore, Some(wIdx)),
       () => Streams.winnowIngestBatch(texts(1), 2L, wOut, wStore,
         Some(wOther)),
-      texts, Seq(wStore -> Dedup.winnowIndex().storeSchema))
+      texts, Seq(wStore -> Dedup.winnowIndex().storeSchema),
+      Some(Dedup.probeWinnowIndex(_, wIdx).select("new_id")))
 
     val (vIdx, cents) = (s"tier_ivf_$n", s"tier_cents_$n")
     Similarity.buildIvfIndex(Seq(
@@ -1771,7 +1785,10 @@ class StreamingSpec extends SparkSpec {
         threshold = 0.99, indexTable = Some(idx))
     val sem = new IngestTier("semantic", vOut, vStore, semantic(_, _, vIdx),
       () => semantic(vecs(1), 2L, s"tier_no_such_$n"),
-      vecs, Seq(vStore -> Similarity.ivfIndex().storeSchema))
+      vecs, Seq(vStore -> Similarity.ivfIndex().storeSchema),
+      Some(Similarity.probeSemanticIndex(spark, _, vIdx, cents,
+        threshold = 0.99).filter(!col("keep"))
+        .select(col("vec_id").as("new_id"))))
 
     Seq(exact, simhash, minhash, winnow, sem)
   }
@@ -1837,6 +1854,51 @@ class StreamingSpec extends SparkSpec {
         spark.read.parquet(clean.out).count() shouldBe 3L
       }
     }
+  }
+
+  test("each near-dup ingest tier drops exactly what its family's batch probe finds") {
+    def text(i: Int) = (0 until 40).map(j => s"p${i}w$j").mkString(" ")
+    // the prior corpus holds a copy of batch doc 1 and a one-word edit of
+    // batch doc 2; batch doc 4 repeats doc 1, so self-dedup drops it
+    val prior = Seq((11L, text(1)),
+      (12L, text(2).replace("p2w20 ", "edited "))).toDF("doc_id", "text")
+    val docs = Seq((1L, text(1)), (2L, text(2)), (3L, text(3)),
+      (4L, text(1))).toDF("doc_id", "text")
+    // vectors 201 and 203 copy indexed vectors, 204 repeats 201
+    val vecs = Seq((201L, Seq(1f, 0f, 0f, 0f)), (202L, Seq(0f, 0f, 1f, 0f)),
+      (203L, Seq(0.1f, 0.9f, 0f, 0f)), (204L, Seq(1f, 0f, 0f, 0f)))
+      .toDF("vec_id", "embedding")
+    val tiers = ingestTiers("probe", Some(prior)).filter(_.probe.nonEmpty)
+    tiers.map(_.name) shouldBe Seq("simhash", "minhash", "winnow", "semantic")
+    tiers.foreach { t =>
+      withClue(s"${t.name}: ") {
+        val (batch, id, selfDeduped) =
+          if (t.name == "semantic") (vecs, "vec_id", Set(201L, 202L, 203L))
+          else (docs, "doc_id", Set(1L, 2L, 3L))
+        val found = t.probe.get(batch).as[Long].collect().toSet
+        (found & selfDeduped) should not be empty
+        // an empty store: the tier screens against the index alone
+        t.run(batch, 0L)
+        spark.read.parquet(t.out).select(id).as[Long].collect().toSet shouldBe
+          selfDeduped -- found
+      }
+    }
+  }
+
+  test("the near-dup ingest tiers call their family's screen, not a copy") {
+    // the primitives of the simhash, MinHash, winnow and semantic
+    // screens, which live in Dedup and Similarity
+    val banned = Seq("bit_count(", "dropOversizedBuckets(", "countDistinct(",
+      "Dedup.jaccard(", "cosine(")
+    val src = "src/main/scala/graft/streaming/Streams.scala"
+    val lines = scala.util.Using.resource(
+      scala.io.Source.fromFile(src, "UTF-8"))(_.getLines().toVector)
+    lines.size should be > 500 // the scan must see the file
+    val offenders = for {
+      (line, n) <- lines.zipWithIndex
+      hit <- banned.filter(line.contains)
+    } yield s"$src:${n + 1}: $hit"
+    offenders shouldBe empty
   }
 
   test("every ingest store reads back by its known schema as by inference") {

@@ -16,7 +16,14 @@ form before comparing:
   - identity hashes (`@3125a81f`), JVM lambda class names
     (`$$Lambda$7354/0x...`), the per-session warehouse directory
     (`/tmp/graft-graft-explain-<n>/warehouse`) and nanoTime suffixes
-    (`_12429614819059`) are replaced by a fixed placeholder.
+    (`_12429614819059`) are replaced by a fixed placeholder;
+  - the `Expand` of a distinct aggregate (Spark's RewriteDistinctAggregates,
+    output column `gid`) is put in one canonical form first: Spark orders
+    its distinct columns and numbers its projections by expression hash,
+    which depends on the ids a session allocated before the query, so the
+    distinct columns are sorted by name everywhere they appear together
+    and the projections are sorted and renumbered, `gid = k` tags with
+    them.
 
 Prints the names of the queries whose normalized plans differ (or that
 exist on one side only) and exits 1 if there are any, else prints a
@@ -43,7 +50,59 @@ FIXED = [
 ]
 
 
+EXPAND_ARGS = re.compile(
+    r"^Arguments: (\[\[.*\]\]), (\[[^\[\]]*\bgid#\d+[^\[\]]*\])$", re.M)
+EXPR_ID = re.compile(r"#\d+")
+
+
+def split_top(body):
+    """Split a list body on the commas outside any brackets."""
+    parts, depth, cur = [], 0, ""
+    for ch in body:
+        depth += (ch in "([") - (ch in ")]")
+        if ch == "," and depth == 0:
+            parts.append(cur.strip())
+            cur = ""
+        else:
+            cur += ch
+    return parts + [cur.strip()]
+
+
+def canonical_expand(text, line, rows_text, out_text):
+    """Rewrite one distinct-aggregate Expand, and the lists and gid tags
+    that follow it, into a form independent of expression hashes."""
+    rows = [split_top(r[1:-1]) for r in split_top(rows_text[1:-1])]
+    out = split_top(out_text[1:-1])
+    g = next(i for i, a in enumerate(out) if re.fullmatch(r"gid#\d+", a))
+    # the distinct columns: before gid and null in some projection (the
+    # group-by columns before them are passed through by every one)
+    block = [i for i in range(g) if any(r[i] == "null" for r in rows)]
+    order = sorted(block, key=lambda i: EXPR_ID.sub("", out[i]))
+    perm = list(range(len(out)))
+    for i, j in zip(block, order):
+        perm[i] = j
+    rows = [[r[p] for p in perm] for r in rows]
+    gids = sorted(int(r[g]) for r in rows)
+    rows.sort(key=lambda r: [EXPR_ID.sub("", v)
+                             for k, v in enumerate(r) if k != g])
+    remap = {}
+    for r, new in zip(rows, gids):
+        remap[r[g]] = str(new)
+        r[g] = str(new)
+    text = text.replace(line, "Arguments: [%s], [%s]" % (
+        ", ".join("[" + ", ".join(r) + "]" for r in rows),
+        ", ".join(out[p] for p in perm)))
+    seq = ", ".join(out[i] for i in block)
+    canon = ", ".join(out[i] for i in order)
+    text = re.sub(re.escape(seq) + r"(?!\d)", lambda _: canon, text)
+    return re.sub(re.escape(out[g]) + r" = (\d+)\b",
+                  lambda m: f"{out[g]} = {remap.get(m.group(1), m.group(1))}",
+                  text)
+
+
 def normalize(text):
+    for m in list(EXPAND_ARGS.finditer(text)):
+        text = canonical_expand(text, m.group(0), m.group(1), m.group(2))
     for pat, repl in FIXED:
         text = pat.sub(repl, text)
     for pat, prefix in RENUMBERED:
